@@ -34,31 +34,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Round-9 rotation (optimization round): ALL 29 round-8 deferrals are
-    # back inside the window (VERDICT r8 #1). Deferred instead are
-    # round-8-verified gates whose engine AND oracle code is untouched in
-    # round 9 — the optimization work concentrated in dedup.py, graph.py,
-    # ivf.py, quantize.py, similarity.py, lmscore.py, bigram.py,
-    # tfidf.py, dsir.py, quantiles.py and specific queries_training.py
-    # functions, so every gate on a touched module (or touched q_
-    # function) sits in the verified window — including bpe_merges/
-    # bpe_encode, whose ORACLE gained a deterministic ORDER BY this
-    # round; the parse/pipeline cluster, mixes and the text.py family
-    # are untouched (diff-checkable against ae9a086). All 29 below were
-    # green in
-    # CORRECTNESS_r08.json, and the full 79-gate set was re-verified
-    # green against the sf0.01 DuckDB oracle in this round's closing
-    # sweep (tools/check_correctness.py).
-    "parse_event_ts",
-    "parse_messages_attrs",
-    "level_precedence",
-    "multiline_entry_stats",
-    "route_sink_counts",
-    "conversation_rollup",
-    "window_turn_rollup",
-    "top_k_noisy",
-    "flush_window_counts",
-    "summary_union",
+    # Current rotation (deletion of the parse/encoding/fingerprint
+    # experiments that lost their A/B, plus the ngram_jaccard_pairs max_df
+    # fix): the touched modules are functions/parse.py, pipeline.py,
+    # config.py, operators/multiline.py, functions/text.py,
+    # functions/dedup.py and streaming/pipeline.py. Every gate whose
+    # DataFrame construction executes code from one of them sits inside
+    # the window — the 14 previously deferred parse/pipeline and text.py
+    # gates (parse_*, level_precedence, multiline_entry_stats,
+    # route_sink_counts, conversation_rollup, window_turn_rollup,
+    # top_k_noisy, flush_window_counts, summary_union, weighted_sample,
+    # lang_id, text_quality) are back. Deferred in their place are 14
+    # gates on untouched modules (multimodal, outliers, bloom, tfidf,
+    # quantize, ivf, semdedup, lmscore, bigram, imagedup, bpe,
+    # cartography), all green in CORRECTNESS_r09.json. semantic_dedup and
+    # image_near_dup import dedup.py's bucket-cap helpers, which are
+    # unchanged and not executed by either gate. The other 15 stay
+    # deferred: untouched, green in CORRECTNESS_r09.json. The full
+    # 79-gate set is re-verified against the sf0.01 DuckDB oracle with
+    # tools/check_correctness.py.
     "pricing_summary",
     "top_revenue_orders",
     "region_rollup",
@@ -66,18 +60,28 @@ GATE_DEFERRED: list[str] = [
     "freqcap",
     "diversity",
     "training_mix",
-    "weighted_sample",
-    "lang_id",
     "decontam_split",
     "snapshot_diff",
     "vocab_oov",
     "chunk_windows",
-    "parse_severity_counts",
-    "text_quality",
     "contamination_profile",
     "temperature_mix",
     "median_gap",
     "rollup_role_style",
+    "multimodal_decode",
+    "audio_stats",
+    "embedding_outliers",
+    "incremental_dedup",
+    "tfidf_terms",
+    "quantized_ann",
+    "ann_ivf_quantized",
+    "semantic_dedup",
+    "lm_fluency",
+    "bigram_fluency",
+    "image_near_dup",
+    "bpe_merges",
+    "bpe_encode",
+    "corpus_cartography",
 ]
 
 

@@ -23,9 +23,9 @@ run against this engine:
 
 from __future__ import annotations
 
-import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 from otel_logger_spark.functions.parse import (
     DEFAULT_LEVEL_FIELDS,
@@ -124,29 +124,12 @@ class PipelineConfig:
     passthrough_raw_sink: bool = False  # tee of raw entries (main.go:42-43)
     repartition: int | None = None  # explicit conv_id hash partitions
     salt_buckets: int = 16
-    # attrs storage format through the pipeline + sinks: "json" (default,
-    # adopted after the 37M-turn A/B — 520k vs 382k turns/s at 8 cores,
-    # identical sink counts; BENCH/AB_attrs_format.md) or "map" (parquet
-    # MAP column). env OTEL_SPARK_ATTRS_FORMAT overrides. The parse API
-    # (with_parsed) itself still defaults to the typed map — this knob is
-    # the PIPELINE's storage choice.
-    attrs_format: str = field(
-        default_factory=lambda: (
-            os.environ.get("OTEL_SPARK_ATTRS_FORMAT", "json").strip().lower()
-            or "json"
-        )
-    )
-    # dictionary-encode role/tool as tinyint codes through the exchange +
-    # coalescer + parse region, decoding after parse (operators/dictenc.py;
-    # lossless via rare-escape columns). Adopt/reject per the measured
-    # 37M-turn A/B in BENCH/AB_dict_enums.md. env OTEL_SPARK_DICT_ENUMS
-    # overrides ("1"/"true" = on).
-    dict_encode_enums: bool = field(
-        default_factory=lambda: (
-            os.environ.get("OTEL_SPARK_DICT_ENUMS", "").strip().lower()
-            in ("1", "true", "yes")
-        )
-    )
+    # attrs storage format through the pipeline + sinks: the JSON string,
+    # adopted after the 37M-turn A/B (520k vs 382k turns/s at 8 cores,
+    # identical sink counts; BENCH/AB_attrs_format.md). A class constant,
+    # not a field: the parse API (with_parsed) itself still defaults to the
+    # typed map, this is the PIPELINE's storage choice.
+    attrs_format: ClassVar[str] = "json"
 
     @classmethod
     def from_reference_args(cls, argv: list[str]) -> "PipelineConfig":

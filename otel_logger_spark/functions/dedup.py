@@ -164,8 +164,10 @@ def ngram_jaccard_pairs(
 
     ``max_df`` drops shingles appearing in more than max_df docs before the
     self-join (at 100 TB this is mandatory; None = exact, used by the
-    oracle-checked gate). Returns (doc_a, doc_b, n_common, n_a, n_b,
-    j_milli) with j_milli = floor(1000 * jaccard).
+    oracle-checked gate); the Jaccard is then the exact one over each
+    doc's SURVIVING shingles, so n_a/n_b count only those. Returns (doc_a,
+    doc_b, n_common, n_a, n_b, j_milli) with j_milli = floor(1000 *
+    jaccard).
     """
     m = int(threshold * 1000)
     # Round-9 shape (the source_overlap lesson applied to doc pairs; output
@@ -177,8 +179,10 @@ def ngram_jaccard_pairs(
     #   the explode (size of the distinct array == exploded rows per doc),
     #   and the per-shingle posting list is ONE groupBy — no join, no
     #   second traversal.
-    # - the hot-shingle cap (max_df) becomes a free filter on the posting
-    #   list size instead of a separate count + broadcast anti-join pass.
+    # - the hot-shingle cap (max_df) is a per-shingle window count instead
+    #   of a separate count + broadcast anti-join pass; a per-doc window
+    #   then recounts the surviving shingles, which the length prune and
+    #   j_milli need.
     # - pair expansion happens in a codegen projection over each posting
     #   list, with the exact length-ratio prune applied in place: j_milli =
     #   floor(1000*c/(n_a+n_b-c)) with c <= min(n_a, n_b) means j_milli >=
@@ -190,12 +194,26 @@ def ngram_jaccard_pairs(
     #   at sf0.1).
     # At 100 TB the posting list of a degenerate hot shingle is the same
     # quadratic hazard the join shape had; max_df remains the mandatory
-    # guard and is now enforceable with zero extra passes.
-    sh = with_shingles(df, n).select(
-        F.col(id_col),
-        F.size("shingles").cast("long").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    )
+    # guard, and its window drops a hot shingle's rows before any posting
+    # list is collected.
+    if max_df is None:
+        sh = with_shingles(df, n).select(
+            F.col(id_col),
+            F.size("shingles").cast("long").alias("n_sh"),
+            F.explode("shingles").alias("shingle"),
+        )
+    else:
+        sh = (
+            with_shingles(df, n)
+            .select(F.col(id_col), F.explode("shingles").alias("shingle"))
+            .withColumn("_df", F.count("*").over(Window.partitionBy("shingle")))
+            .filter(F.col("_df") <= max_df)
+            .select(
+                F.col(id_col),
+                F.count("*").over(Window.partitionBy(id_col)).alias("n_sh"),
+                "shingle",
+            )
+        )
     # posting lists SORTED by (id, n_sh): ids are unique per shingle
     # (distinct shingles per doc), so the upper-triangle expansion below
     # yields exactly the a < b pairs with no ordering filter
@@ -204,8 +222,6 @@ def ngram_jaccard_pairs(
             F.collect_list(F.struct(F.col(id_col).alias("id"), "n_sh"))
         ).alias("ds")
     )
-    if max_df is not None:
-        posting = posting.filter(F.size("ds") <= max_df)
     # upper triangle only (round 9): each x pairs with its suffix — half
     # the struct materialization of the all-ordered-pairs + a<b form,
     # and the only residual filter is the exact length bound

@@ -303,375 +303,6 @@ def parse_entry(
     return ets, level, message, attrs, ok
 
 
-# --- JVM fast path (hybrid parse, OPT-IN — measured slower on this corpus) ----
-#
-# Hypothesis: the pandas UDF is the single-box throughput ceiling
-# (~142k rows/s/core), so rows whose semantics the JVM can reproduce EXACTLY
-# are parsed with from_json + expressions; only the rest cross to Python.
-# Anything ambiguous falls back to the UDF, so the hybrid is
-# semantics-preserving by construction (tests/test_parse_hybrid.py asserts
-# bitwise parity against the pure-UDF plan on adversarial corpora).
-#
-# Measured outcome (37M-turn pipeline A/B, see with_parsed): the pure UDF
-# WINS on the transcript corpus — Go-parity guards cost ~20 JVM expressions
-# per row (~22us) vs one C-speed json.loads (~7us). Default OFF; the
-# machinery stays for long-simple-JSON corpora and as a worked example of
-# the optimizer traps below.
-#
-# Design (from_json-FIRST — a full JSON-grammar Java regex was tried and
-# measured at ~10 MB/s/core, slower than the Python parse it replaced):
-#  1. cheap structural pre-route: exactly one '{' and one '}' in the line
-#     (nested objects change attr rendering to Go's map[...] form — Python
-#     owns those; this also kills Jackson's tolerance of `{..}{..}` trailing
-#     objects), and no "\u" escape (lone-surrogate parity stays in Python).
-#  2. from_json with STRICT Jackson options, which then agrees with
-#     Go/Python JSON acceptance except for trailing garbage (guarded by a
-#     must-end-with-'}' probe).
-#  3. cheap post-hoc probes route residual stringification/type ambiguities
-#     to Python: duplicate keys (element_at returns the FIRST, Go takes the
-#     last), null values (Go renders "<nil>"), values Jackson re-renders
-#     through double/long where Java's toString can differ from Go's %v
-#     (ints >= 7 digits, anything decimal/exponent, integer -0), promoted
-#     level/message keys with non-string values (the first-present-key loop
-#     skips those, main.go:215-240), non-consumed numeric timestamp keys,
-#     and boolean-valued timestamp keys (main.go:194-207).
-# Numeric epochs on the CONSUMED timestamp key are handled JVM-side
-# (string-vs-number read off the raw text: a raw `"key":` sequence can only
-# occur at key position in strict JSON, so `"key"\s*:\s*"` iff the value is
-# a string).
-
-_STRICT_JSON_OPTS = {
-    "allowSingleQuotes": "false",
-    "allowNumericLeadingZeros": "false",
-    "allowNonNumericNumbers": "false",
-    "allowBackslashEscapingAnyCharacter": "false",
-    "allowUnquotedControlChars": "false",
-    "allowUnquotedFieldNames": "false",
-    "allowComments": "false",
-}
-
-# mirror of DEFAULT_PREFIX_RE restricted to ASCII whitespace and a '{' body:
-# a JVM match implies the Python regex extracts the same json_str; a JVM
-# non-match routes to Python (never wrong, at most slower)
-_J_PREFIX_EXTRACT = (
-    r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}[.\d]*[Z\-+\d:]*[ \t]*(\{.*)\z"
-)
-# Go layouts, JVM side (same shape as _TS_RE; space separator carries no tz)
-_J_TS_VALUE = (
-    r"^\d{4}-\d{2}-\d{2}(?:T\d{2}:\d{2}:\d{2}(?:\.\d+)?(?:Z|[+-]\d{2}:\d{2})?"
-    r"| \d{2}:\d{2}:\d{2}(?:\.\d+)?)\z"
-)
-# JSON inter-token whitespace (what Jackson/Go/Python all accept)
-_J_JWS = r"[ \t\r\n]*"
-# map values that must render via gofmt (Python): ints of >= 7 digits (Go
-# unmarshals numbers to float64 and %v switches to e-notation at 1e7 —
-# strconv 'g' shortest uses %e when the decimal exponent exceeds 6; Java
-# prints plain digits), anything decimal/exponent (Java Double.toString vs
-# Go shortest-repr differ on integral floats "5.0"/"5", <1e-3, >=1e7, and
-# rare non-shortest JDK17 cases), and raw object/array values
-_J_BAD_VALUE = r"^(?:-?\d{7,}$|-?\d+[.eE]|[\[{])"
-# Python str.strip() whitespace set, spelled out for Java (Java \s is
-# ASCII-only; Python's is the isspace() set)
-_J_PY_WS = (
-    "[\\t\\n\\u000B\\f\\r\\u001C-\\u001F \\u0085\\u00A0\\u1680"
-    "\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000]"
-)
-
-_KEY_SAFE = re.compile(r"^[\x20-\x7e]+$")
-
-
-def _hybrid_applicable(json_prefix, ts_fields, level_fields, msg_fields) -> bool:
-    if json_prefix is not None:
-        return False  # fast path mirrors only the default prefix regex
-    sets = [set(ts_fields), set(level_fields), set(msg_fields)]
-    if sets[0] & sets[1] or sets[0] & sets[2] or sets[1] & sets[2]:
-        return False  # overlapping field sets change deletion order
-    for k in (*ts_fields, *level_fields, *msg_fields):
-        if not _KEY_SAFE.match(k) or '"' in k or "\\" in k:
-            return False
-    return True
-
-
-def _str_valued_probe(js: Column, key: str) -> Column:
-    """True iff ``key``'s value is written as a JSON string in the raw text.
-    Sound for pre-routed flat objects: a raw (unescaped) `"key":` sequence
-    can only occur at key position — raw quotes inside string values are
-    illegal in strict JSON, and escaped ones are excluded by the
-    lookbehind."""
-    pat = rf'(?<!\\)"{re.escape(key)}"{_J_JWS}:{_J_JWS}"'
-    return js.rlike(pat)
-
-
-def _first_key_probe(js: Column, key_col: Column, fields) -> Column:
-    """String-valued-ness of the (dynamically) consumed key: a when-chain
-    over the static field set, so every probe regex stays foldable."""
-    expr = None
-    for f in fields:
-        cond = key_col == F.lit(f)
-        probe = _str_valued_probe(js, f)
-        expr = F.when(cond, probe) if expr is None else expr.when(cond, probe)
-    return F.coalesce(expr, F.lit(False))
-
-
-def _first_present_key(m: Column, fields) -> Column:
-    expr = None
-    for f in fields:
-        cond = F.map_contains_key(m, F.lit(f))
-        expr = (
-            F.when(cond, F.lit(f)) if expr is None else expr.when(cond, F.lit(f))
-        )
-    return expr
-
-
-def _jvm_ts_raw_parse(v: Column) -> Column:
-    """Go-layout timestamp parse as pure expressions (offset applied, no
-    validity clamps yet) — parity with parse_go_timestamp. The caller MUST
-    stage this as its own column: it is referenced by several clamp
-    predicates, and the final parse project is interpreted (map lambdas are
-    codegen-incompatible), where repeated subexpressions are re-evaluated
-    per reference."""
-    v6 = F.regexp_replace(v, r"(\.\d{6})\d+", "$1")  # truncate to micros
-    naive = F.translate(
-        F.regexp_replace(v6, r"(?:Z|[+-]\d{2}:\d{2})\z", ""), "T", " "
-    ).try_cast("timestamp")
-    sign = F.regexp_extract(v, r"([+-])\d{2}:\d{2}\z", 1)
-    hh = F.regexp_extract(v, r"[+-](\d{2}):\d{2}\z", 1).try_cast("int")
-    mm = F.regexp_extract(v, r"[+-]\d{2}:(\d{2})\z", 1).try_cast("int")
-    offs = F.coalesce(hh, F.lit(0)) * 3600 + F.coalesce(mm, F.lit(0)) * 60
-    signed = (
-        F.when(sign == "+", offs).when(sign == "-", -offs).otherwise(F.lit(0))
-    )
-    return F.timestamp_add("SECOND", -signed, naive)
-
-
-def _jvm_ts_clamped(v: Column, pts: Column) -> Column:
-    """Validity rules over the staged raw parse ``pts``: Go layout shape,
-    IsZero (main.go:201), and Python's datetime range (parity with the
-    OverflowError fallback). NULL means 'caller substitutes the row ts'."""
-    shape_ok = v.rlike(_J_TS_VALUE)
-    zero = F.expr("TIMESTAMP'0001-01-01 00:00:00'")
-    mx = F.expr("TIMESTAMP'9999-12-31 23:59:59.999999'")
-    return F.when(shape_ok & pts.isNotNull() & (pts > zero) & (pts <= mx), pts)
-
-
-def _with_fast_flags(df, text_col, ts_fields, level_fields, msg_fields):
-    """Stages the fast-path routing machinery as columns: ``_js`` (extracted
-    JSON body), ``_m`` (strict from_json map), ``_tk``/``_lk``/``_mk``
-    (consumed keys), ``_tv`` (raw ts value), ``_tnum`` (consumed ts key is
-    numeric), ``_fast`` (row is JVM-parseable). Shared by the hybrid plan
-    and the routing diagnostics."""
-    line = F.col(text_col)
-    is_plain = line.isNull() | ~line.contains("{")
-    # structural pre-route (cheap scans, no JSON parse): single brace pair,
-    # no \u escape. Rows failing it skip from_json entirely and go straight
-    # to the UDF — double-scanning the heavy nested/malformed rows is what
-    # made the previous grammar-regex design a net loss.
-    candidate = (
-        ~is_plain
-        & (F.regexp_count(line, F.lit(r"\{")) == 1)
-        & (F.regexp_count(line, F.lit(r"\}")) == 1)
-        & ~line.contains("\\u")
-    )
-    # extract the JSON body: '{'-start lines verbatim (Python's fast path,
-    # extract_json main.go:156-171); otherwise the ASCII prefix strip. The
-    # prefix path refuses newlines: Python's `.` never spans them, so a
-    # prefixed multiline row falls back — the UDF owns that case.
-    js_raw = F.when(line.startswith("{"), line).otherwise(
-        F.when(
-            ~line.contains("\n"), F.regexp_extract(line, _J_PREFIX_EXTRACT, 1)
-        ).otherwise(F.lit(""))
-    )
-    df = df.withColumn("_js", F.when(candidate, js_raw).otherwise(F.lit("")))
-    df = df.withColumn(
-        "_m", F.from_json("_js", "map<string,string>", _STRICT_JSON_OPTS)
-    )
-    m = F.col("_m")
-    js = F.col("_js")
-    df = (
-        df.withColumn("_tk", _first_present_key(m, ts_fields))
-        .withColumn("_lk", _first_present_key(m, level_fields))
-        .withColumn("_mk", _first_present_key(m, msg_fields))
-    )
-    tk, lk, mk = F.col("_tk"), F.col("_lk"), F.col("_mk")
-    df = df.withColumn("_tv", F.try_element_at(m, tk))
-    # consumed ts key is numeric iff its raw value is unquoted
-    df = df.withColumn(
-        "_tnum", tk.isNotNull() & ~_first_key_probe(js, tk, ts_fields)
-    )
-
-    # post-hoc guards: every residual Jackson-vs-Go/Python divergence routes
-    # to the UDF (see module comment)
-    ks = F.map_keys(m)
-    no_dups = F.size(ks) == F.size(F.array_distinct(ks))
-    no_null_vals = ~F.exists(F.map_values(m), lambda v: v.isNull())
-    # the consumed ts key is exempt from the value-shape check: its numeric
-    # value takes the epoch path, never Go-rendering into attrs
-    vals_ok = ~F.exists(
-        F.map_entries(m),
-        lambda e: ~e["key"].eqNullSafe(tk) & e["value"].rlike(_J_BAD_VALUE),
-    )
-    ends_ok = js.rlike(r"\}[ \t\r\n]*\z")  # Jackson tolerates trailing junk
-    no_neg_zero = ~js.rlike(r":[ \t\r\n]*-0(?![0-9.eE])")  # Go renders "-0"
-    lvl_ok = lk.isNull() | _first_key_probe(js, lk, level_fields)
-    msg_ok = mk.isNull() | _first_key_probe(js, mk, msg_fields)
-    # a non-consumed ts key with a numeric value would land in attrs with
-    # Java rendering; a boolean consumed ts key is not consumed by Go
-    bad_ts = F.lit(False)
-    for f in ts_fields:
-        bad_ts = bad_ts | (
-            F.map_contains_key(m, F.lit(f))
-            & ~tk.eqNullSafe(F.lit(f))
-            & ~_str_valued_probe(js, f)
-        )
-    ts_bool = F.col("_tnum") & F.col("_tv").isin("true", "false")
-    return df.withColumn(
-        "_fast",
-        m.isNotNull()
-        & no_dups
-        & no_null_vals
-        & vals_ok
-        & ends_ok
-        & no_neg_zero
-        & lvl_ok
-        & msg_ok
-        & ~bad_ts
-        & ~ts_bool,
-    )
-
-
-def hybrid_routing_counts(
-    df,
-    text_col: str = "text",
-    ts_fields=DEFAULT_TIMESTAMP_FIELDS,
-    level_fields=DEFAULT_LEVEL_FIELDS,
-    msg_fields=DEFAULT_MESSAGE_FIELDS,
-) -> dict:
-    """Diagnostics: how many rows each parse route handles — ``fast`` (JVM
-    expressions), ``plain`` (JVM fallback), ``python`` (pandas UDF). Used by
-    plan audits and the coverage-guard test."""
-    line = F.col(text_col)
-    flags = _with_fast_flags(
-        df, text_col, tuple(ts_fields), tuple(level_fields), tuple(msg_fields)
-    )
-    is_plain = line.isNull() | ~line.contains("{")
-    row = flags.select(
-        F.count_if(F.col("_fast")).alias("fast"),
-        F.count_if(~F.col("_fast") & is_plain).alias("plain"),
-        F.count_if(~F.col("_fast") & ~is_plain).alias("python"),
-    ).collect()[0]
-    return {"fast": row["fast"], "plain": row["plain"], "python": row["python"]}
-
-
-def _with_hybrid_parsed(
-    df,
-    text_col: str,
-    ts_col: str,
-    udf,
-    ts_fields,
-    level_fields,
-    msg_fields,
-):
-    """Adds the five parse output columns, each as its own
-    when(JVM-eligible, expression parse).when(plain, fallback expr)
-    .otherwise(pandas UDF result) — the UDF sees only the hard rows (masked
-    to NULL elsewhere, which it skips in O(1)).
-
-    Two structural rules, both load-bearing (measured: violating either
-    makes the hybrid ~2.5-10x SLOWER than the pure UDF):
-    - Expensive shared subexpressions (from_json map, consumed keys, raw ts
-      parse) are staged as real columns in separate projections. Spark's subexpression elimination does not merge
-      duplicates across when() branches, the final project is interpreted
-      (map lambdas are codegen-incompatible) where every reference
-      re-evaluates, and CollapseProject leaves multi-referenced non-cheap
-      aliases alone — staging guarantees compute-once.
-    - The outputs are five flat columns, NOT one struct-of-CASE:
-      SimplifyExtractValueOps cannot push a field extraction through CASE,
-      so a struct would force every consumer (even a level-only query) to
-      compute all five fields including map_filter and the ts regexes."""
-    line = F.col(text_col)
-    fallback_ts = F.col(ts_col)
-    is_plain = line.isNull() | ~line.contains("{")
-    df = _with_fast_flags(df, text_col, ts_fields, level_fields, msg_fields)
-    m = F.col("_m")
-    tk, lk, mk = F.col("_tk"), F.col("_lk"), F.col("_mk")
-
-    df = df.withColumn("_pts", _jvm_ts_raw_parse(F.col("_tv")))
-    masked = F.when(~F.col("_fast") & ~is_plain, line)  # else NULL -> UDF skips
-    df = df.withColumn("_pu", udf(masked, F.unix_micros(fallback_ts.cast("timestamp"))))
-
-    pu = F.col("_pu")
-    udf_out = {
-        "event_ts": F.timestamp_micros(pu["event_ts_us"]),
-        "level": pu["level"],
-        "message": pu["message"],
-        "attrs": F.from_json(pu["attrs_json"], "map<string,string>"),
-        "json_ok": pu["json_ok"],
-    }
-    trimmed = F.regexp_replace(line, f"^{_J_PY_WS}+|{_J_PY_WS}+\\z", "")
-
-    def pick(fast_expr, plain_expr, udf_field):
-        case = (
-            F.when(F.col("_fast"), fast_expr)
-            .when(is_plain, plain_expr)
-            .otherwise(udf_out[udf_field])
-        )
-        # Optimizer barrier, value-neutral: spark_partition_id() marks the
-        # expression nondeterministic, which stops PushDownPredicates from
-        # substituting it into pushed filters and CollapseProject from
-        # inlining it into consumers. Without it, a filter or time-window
-        # over a parse output absorbs the whole staging chain with
-        # exponential expression duplication — measured: a 9.4 MB optimized
-        # plan with 361 copies of from_json (~1 ms/row) for a simple
-        # windowed count. (rand() >= -1 does NOT survive: Spark 4's
-        # OptimizeRand folds out-of-range rand comparisons.)
-        return F.when(F.spark_partition_id() >= -1, case)
-
-    # event_ts: epoch semantics for a numeric consumed key
-    # (datetime.fromtimestamp(int(v)) parity: truncate toward zero, Python
-    # datetime range, NO IsZero exclusion — main.go:204-206), Go-layout
-    # string parse otherwise
-    secs = F.col("_tv").try_cast("double").try_cast("long")
-    epoch_ts = F.when(
-        secs.between(-62135596800, 253402300799), F.timestamp_seconds(secs)
-    )
-    out = {
-        "_pe": pick(
-            F.coalesce(
-                F.when(F.col("_tnum"), epoch_ts).otherwise(
-                    _jvm_ts_clamped(F.col("_tv"), F.col("_pts"))
-                ),
-                fallback_ts,
-            ),
-            fallback_ts,
-            "event_ts",
-        ),
-        "_pl": pick(
-            F.coalesce(F.try_element_at(m, lk), F.lit(DEFAULT_LEVEL)),
-            F.lit(DEFAULT_LEVEL),
-            "level",
-        ),
-        "_pm": pick(
-            F.coalesce(F.try_element_at(m, mk), F.lit(DEFAULT_MESSAGE)),
-            F.when(line.isNull(), F.lit("")).otherwise(trimmed),
-            "message",
-        ),
-        "_pa": pick(
-            F.map_filter(
-                m,
-                lambda k, _v: ~k.eqNullSafe(tk)
-                & ~k.eqNullSafe(lk)
-                & ~k.eqNullSafe(mk),
-            ),
-            F.from_json(F.lit("{}"), "map<string,string>"),
-            "attrs",
-        ),
-        "_po": pick(F.lit(True), F.lit(False), "json_ok"),
-    }
-    return df.withColumns(out).drop(
-        "_js", "_m", "_fast", "_tk", "_lk", "_mk", "_tv", "_tnum", "_pts", "_pu"
-    )
-
-
 # --- Spark surface -----------------------------------------------------------
 
 # The UDF exchanges ONLY cheap Arrow types. Timestamps cross as epoch
@@ -736,9 +367,7 @@ def make_parse_udf(
         parse = parse_entry_us
         for i, line in enumerate(text.tolist()):
             if line is None:
-                # parse_entry("") result, inlined — also the O(1) skip for
-                # rows the hybrid plan masked out (JVM-parsed rows arrive
-                # here as NULL and their UDF output is discarded)
+                # parse_entry("") result, inlined
                 out_us[i] = fb[i]
                 out_level[i] = DEFAULT_LEVEL
                 out_msg[i] = ""
@@ -765,16 +394,6 @@ def make_parse_udf(
     return parse_udf
 
 
-def _hybrid_env_enabled() -> bool:
-    """OTEL_SPARK_PARSE_HYBRID opts IN to the (measured-slower) hybrid
-    path: unset/empty and the usual negative spellings all mean OFF."""
-    import os
-
-    return os.environ.get(
-        "OTEL_SPARK_PARSE_HYBRID", ""
-    ).strip().lower() not in ("", "0", "false", "no", "off")
-
-
 def with_parsed(
     df,
     text_col: str = "text",
@@ -784,7 +403,6 @@ def with_parsed(
     level_fields=DEFAULT_LEVEL_FIELDS,
     msg_fields=DEFAULT_MESSAGE_FIELDS,
     keep_text: bool = False,
-    hybrid: bool | None = None,
     attrs_format: str = "map",
 ):
     """Apply the parse stage: adds event_ts, level, message, attrs, json_ok
@@ -798,61 +416,22 @@ def with_parsed(
     encodes as a plain BYTE_ARRAY column: the sink-write A/B in
     BENCH/AB_attrs_format.md quantifies the difference. Map consumers
     re-parse on demand (from_json is cheap on the tiny filtered slices
-    that actually inspect attrs). Under the opt-in hybrid path the JVM
-    branch's map goes through to_json — identical key-values, but key
-    ORDER may differ from the UDF's insertion-ordered rendering.
+    that actually inspect attrs).
 
     ``raw`` is the input column RENAMED, not copied: carrying two identical
     string columns through persist/joins/writes doubles memory traffic,
     which is the single-box scaling ceiling. keep_text=True restores the
-    duplicate for callers that still need ``text`` downstream.
-
-    ``hybrid``: the JVM fast path (strict from_json + expressions for
-    JVM-expressible rows, pandas UDF only for the hard ones; bitwise
-    parity asserted by tests/test_parse_hybrid.py). Default None = the
-    OTEL_SPARK_PARSE_HYBRID env var, itself defaulting OFF: a 37M-turn A/B
-    at local[8] and local[32] measured the pure Arrow-batched UDF FASTER
-    (363k vs 218k turns/s at 8 cores; 468k vs 391k at 32) — C-speed
-    json.loads beats the ~20-expression JVM guard stack that Go-parity
-    semantics require (per-row cost ~22us in JVM machinery vs ~7us in the
-    UDF loop). Kept as an opt-in experiment: corpora whose rows are long,
-    simple JSON (where from_json wins on bytes scanned) can flip it on."""
-    import os
-
-    if hybrid is None:
-        hybrid = _hybrid_env_enabled()
+    duplicate for callers that still need ``text`` downstream."""
     if attrs_format not in ("map", "json"):
         raise ValueError(f"attrs_format must be 'map' or 'json': {attrs_format!r}")
     udf = make_parse_udf(json_prefix, ts_fields, level_fields, msg_fields)
-    if hybrid and _hybrid_applicable(
-        json_prefix, ts_fields, level_fields, msg_fields
-    ):
-        parsed = _with_hybrid_parsed(
-            df,
-            text_col,
-            ts_col,
-            udf,
-            tuple(ts_fields),
-            tuple(level_fields),
-            tuple(msg_fields),
-        )
-        renames = {"_pe": "event_ts", "_pl": "level", "_pm": "message",
-                   "_pa": "attrs", "_po": "json_ok"}
-    else:
-        parsed = df.withColumn(
-            "_p", udf(F.col(text_col), F.unix_micros(F.col(ts_col).cast("timestamp")))
-        )
-        renames = None
+    parsed = df.withColumn(
+        "_p", udf(F.col(text_col), F.unix_micros(F.col(ts_col).cast("timestamp")))
+    )
     if keep_text:
         parsed = parsed.withColumn("raw", F.col(text_col))
     else:
         parsed = parsed.withColumnRenamed(text_col, "raw")
-    if renames:
-        for src, dst in renames.items():
-            parsed = parsed.withColumnRenamed(src, dst)
-        if attrs_format == "json":
-            parsed = parsed.withColumn("attrs", F.to_json(F.col("attrs")))
-        return parsed
     attrs_col = (
         F.col("_p.attrs_json")
         if attrs_format == "json"

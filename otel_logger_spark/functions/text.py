@@ -276,76 +276,7 @@ def fingerprint_udf(texts: pd.Series) -> pd.Series:
 
 def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds a 64-bit content fingerprint (Arrow-batched pandas UDF — the
-    one text op where Python beats the JVM: see fingerprint_expr for the
-    measured comparison)."""
+    one text op where Python beats the JVM: BENCH/AB_fingerprint.md has
+    the measured comparison against a pure-expression fold)."""
     return df.withColumn("fingerprint", fingerprint_udf(F.col(text_col)))
 
-
-# --- pure-JVM expression variant (opt-in) --------------------------------------
-
-_FP_PW = pow(_FP_BASE, _FP_WINDOW - 1, _FP_MOD)
-
-
-def _fp_step_sql(h: str, c: str) -> str:
-    """(h*B + c) % M in int64 SQL: 41-bit limb split of h (h < M,
-    c < 2^21; every intermediate < 2^62)."""
-    x = f"(({h}) div {1 << 41}) * {_FP_BASE}L"
-    return (
-        f"((({x}) div {1 << 20}) + (({x}) % {1 << 20}) * {1 << 41}L"
-        f" + (({h}) % {1 << 41}) * {_FP_BASE}L + ({c})) % {_FP_MOD}L"
-    )
-
-
-def _fp_mulpw_sql(old: str) -> str:
-    """(old * B^31) % M for a codepoint old < 2^21 (21/40-bit limbs)."""
-    p1, p0 = _FP_PW >> 40, _FP_PW & ((1 << 40) - 1)
-    y = f"({old}) * {p1}L"
-    return (
-        f"((({y}) div {1 << 21}) + (({y}) % {1 << 21}) * {1 << 40}L"
-        f" + ({old}) * {p0}L) % {_FP_MOD}L"
-    )
-
-
-def with_fingerprint_jvm(
-    df: DataFrame, text_col: str = "text", out_col: str = "fingerprint"
-) -> DataFrame:
-    """fingerprint_text as pure-JVM expressions (bit-identical; zero
-    Python stages): rolling Mersenne-mod fold over codepoints, with the
-    codepoint array and initial-window hash STAGED as real columns (so
-    each evaluates once — trap 1: interpreted projects re-evaluate every
-    reference) and transform(array(x), v -> ...) as let-bindings inside
-    the fold lambda. The staging columns are dropped from the result.
-
-    OPT-IN, not the default: higher-order-function lambdas are
-    interpreted (codegen-incompatible), and the measured per-byte rate
-    on this box is ~7 Mchar/s/core vs the vectorized UDF
-    (BENCH/AB_fingerprint.md). Use it where Python workers are
-    unavailable or must stay off the hot path."""
-    cps = f"transform(split({text_col}, ''), ch -> CAST(ascii(ch) AS BIGINT))"
-    init = (
-        "aggregate(slice(_fp_cps, 1, 32), CAST(0 AS BIGINT), "
-        f"(h, c) -> {_fp_step_sql('h', 'c')})"
-    )
-    pairs = (
-        "zip_with(slice(_fp_cps, 33, size(_fp_cps) - 32), "
-        "slice(_fp_cps, 1, size(_fp_cps) - 32), "
-        "(n, o) -> named_struct('n', n, 'o', o))"
-    )
-    sub = f"((acc.h - {_fp_mulpw_sql('p.o')} + {_FP_MOD}L) % {_FP_MOD}L)"
-    newh = (
-        f"element_at(transform(array({sub}), s -> "
-        f"element_at(transform(array({_fp_step_sql('s', 'p.n')}), v -> "
-        "named_struct('h', v, 'best', least(acc.best, v))), 1)), 1)"
-    )
-    roll = (
-        f"aggregate({pairs}, element_at(transform(array(_fp_init), "
-        "i -> named_struct('h', i, 'best', i)), 1), "
-        f"(acc, p) -> {newh}).best"
-    )
-    full = f"IF(size(_fp_cps) <= 32, _fp_init, {roll}) - {1 << 62}L"
-    return (
-        df.withColumn("_fp_cps", F.expr(cps))
-        .withColumn("_fp_init", F.expr(init))
-        .withColumn(out_col, F.expr(full))
-        .drop("_fp_cps", "_fp_init")
-    )

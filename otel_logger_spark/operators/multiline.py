@@ -48,14 +48,10 @@ def coalesce_entries(
     cont_pattern: str = DEFAULT_CONTINUATION_PATTERN,
     group_cols: tuple[str, ...] = ("conv_id",),
     order_col: str = "turn_idx",
-    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Window-based coalescer. Input: transcript columns; output one row per
     logical entry: group_cols + turn_idx (of the start line), role, tool, ts
-    (of the start line), text (joined with \\n), n_lines. ``extra_cols``
-    are carried with the same start-line (min_by) semantics — used by the
-    dictionary-encoded pipeline for the rare-escape columns
-    (operators/dictenc.py).
+    (of the start line), text (joined with \\n), n_lines.
     """
     w = (
         Window.partitionBy(*group_cols)
@@ -83,12 +79,8 @@ def coalesce_entries(
             F.min_by("tool", order_col).alias("tool"),
             F.min_by("ts", order_col).alias("ts"),
             F.count("*").alias("n_lines"),
-            *[F.min_by(c, order_col).alias(c) for c in extra_cols],
         )
-        .select(
-            *group_cols, order_col, "role", "text", "tool", "ts", "n_lines",
-            *extra_cols,
-        )
+        .select(*group_cols, order_col, "role", "text", "tool", "ts", "n_lines")
     )
     return entries
 

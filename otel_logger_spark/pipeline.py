@@ -50,27 +50,12 @@ def build_parsed(
         repartition=repartition,
     )
     df = transcripts
-    if cfg.dict_encode_enums:
-        # shrink role/tool to tinyint codes BEFORE the exchange so the
-        # shuffle + coalescer sort move 1-byte codes, not strings
-        # (operators/dictenc.py; BENCH/AB_dict_enums.md)
-        from otel_logger_spark.operators.dictenc import (
-            ENCODED_EXTRA_COLS,
-            decode_enums,
-            encode_enums,
-        )
-
-        df = encode_enums(df)
     if cfg.repartition:
         # explicit conv_id hash partitioning (north_rule); reused by the
         # multiline window AND the metrics groupBy — one shuffle total.
         df = df.repartition(cfg.repartition, "conv_id")
     if cfg.coalesce_multiline:
-        df = coalesce_entries(
-            df,
-            cont_pattern=cfg.continuation_pattern,
-            extra_cols=ENCODED_EXTRA_COLS if cfg.dict_encode_enums else (),
-        )
+        df = coalesce_entries(df, cont_pattern=cfg.continuation_pattern)
     else:
         df = df.filter(F.length("text") > 0)
     df = with_parsed(
@@ -81,8 +66,6 @@ def build_parsed(
         msg_fields=cfg.message_fields,
         attrs_format=cfg.attrs_format,
     )
-    if cfg.dict_encode_enums:
-        df = decode_enums(df)  # one codegen projection; sinks unchanged
     df = enrich_severity(df)
     df = enrich_tool(df)
     return with_routing(df)

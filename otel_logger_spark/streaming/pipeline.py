@@ -97,8 +97,8 @@ def build_streaming_routed(
     from otel_logger_spark.config import PipelineConfig
 
     # same adopted attrs storage format as the batch pipeline
-    # (BENCH/AB_attrs_format.md; OTEL_SPARK_ATTRS_FORMAT overrides)
-    parsed = with_parsed(src, attrs_format=PipelineConfig().attrs_format)
+    # (BENCH/AB_attrs_format.md)
+    parsed = with_parsed(src, attrs_format=PipelineConfig.attrs_format)
     return with_routing(enrich_tool(enrich_severity(parsed)))
 
 

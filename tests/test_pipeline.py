@@ -431,38 +431,35 @@ def test_manifest_crash_window_recovers_from_tmp(spark, tmp_path):
     assert load_manifest(spark, out, "rC") == m  # recovered from .tmp
 
 
-def test_attrs_format_json_equals_map(spark, transcripts, tmp_path, monkeypatch):
-    """attrs_format='json' (BENCH/AB_attrs_format.md) must be a pure
-    storage-format change: same sink counts, and the stored JSON string
-    parses to exactly the map the default format stores."""
+def test_attrs_format_json_equals_map(spark, transcripts, tmp_path):
+    """The pipeline's JSON attrs (BENCH/AB_attrs_format.md) must be a pure
+    storage-format change: every stored JSON string parses back to exactly
+    the map with_parsed(attrs_format="map") builds from the same input."""
+    from otel_logger_spark.functions.parse import with_parsed
+
     src = str(tmp_path / "in_attrs.parquet")
     transcripts.limit(800).toPandas().astype({"ts": "datetime64[us]"}).to_parquet(
         src, index=False
     )
-    out_map = str(tmp_path / "out_map")
     out_json = str(tmp_path / "out_json")
-    monkeypatch.setenv("OTEL_SPARK_ATTRS_FORMAT", "map")
-    m1 = run_pipeline(spark, src, out_map, run_id="am")
-    monkeypatch.setenv("OTEL_SPARK_ATTRS_FORMAT", "json")
-    m2 = run_pipeline(spark, src, out_json, run_id="aj")
-    monkeypatch.delenv("OTEL_SPARK_ATTRS_FORMAT")
-    assert {k: v["n_rows"] for k, v in m1["sinks"].items()} == {
-        k: v["n_rows"] for k, v in m2["sinks"].items()
-    }
+    m = run_pipeline(spark, src, out_json, run_id="aj")
     # canonicalized attrs equality row-by-row (sorted entry list: the JSON
     # string's key order is the UDF's insertion order, not the map's)
     canon = lambda c: F.to_json(F.array_sort(F.map_entries(c)))
-    a = spark.read.parquet(out_map + "/logs").select(
-        "conv_id", "turn_idx", canon(F.col("attrs")).alias("a")
-    )
-    b = spark.read.parquet(out_json + "/logs").select(
+    a = with_parsed(
+        coalesce_entries(spark.read.parquet(src)), attrs_format="map"
+    ).select("conv_id", "turn_idx", canon(F.col("attrs")).alias("a"))
+    logs = spark.read.parquet(out_json + "/logs")
+    assert logs.schema["attrs"].dataType.simpleString() == "string"
+    b = logs.select(
         "conv_id",
         "turn_idx",
         canon(F.from_json("attrs", "map<string,string>")).alias("a"),
     )
-    assert b.schema["a"].dataType.simpleString() == "string"
+    n = a.count()
+    assert n == b.count() == m["sinks"]["logs"]["n_rows"]
     joined = a.join(b, ["conv_id", "turn_idx"])
-    assert joined.count() == a.count()
+    assert joined.count() == n
     assert joined.filter(a["a"] != b["a"]).count() == 0
 
 

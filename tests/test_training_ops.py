@@ -67,6 +67,45 @@ def test_ngram_jaccard_exact_values(spark):
     assert (1, 4) not in pairs
 
 
+def test_ngram_jaccard_max_df_uses_surviving_shingles(spark):
+    """With max_df set, n_a/n_b, the length prune and j_milli count only the
+    shingles that survive the hot-shingle cap: the result is the exact
+    Jaccard over the surviving shingle sets."""
+    from collections import Counter
+    from itertools import combinations
+
+    rows = [
+        (1, "a b c d e f"),
+        (2, "a b c d e g"),
+        (3, "a b c x y z"),  # "a b c" is in 3 docs: hot under max_df=2
+        (4, "p q r s t"),
+        (5, "p q r s u"),
+        (6, "p q r k l m"),  # "p q r" is hot too
+    ]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def shingles(text):
+        w = text.split(" ")
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    sets = {i: shingles(t) for i, t in rows}
+    dfreq = Counter(s for sh in sets.values() for s in sh)
+    surv = {i: {s for s in sh if dfreq[s] <= 2} for i, sh in sets.items()}
+    expected = {}
+    for a, b in combinations(sorted(surv), 2):
+        c = len(surv[a] & surv[b])
+        if c:
+            j = 1000 * c // len(surv[a] | surv[b])
+            if j >= 300:
+                expected[(a, b)] = (c, len(surv[a]), len(surv[b]), j)
+    got = {
+        (r["doc_a"], r["doc_b"]): (r["n_common"], r["n_a"], r["n_b"], r["j_milli"])
+        for r in ngram_jaccard_pairs(corpus, threshold=0.3, max_df=2).collect()
+    }
+    assert expected == {(1, 2): (2, 3, 3, 500), (4, 5): (1, 2, 2, 333)}
+    assert got == expected
+
+
 def test_minhash_recall_vs_exact(spark, docs):
     """On the real corpus + injected dups, banded MinHash must recover
     every exact-Jaccard>=0.5 pair (high-sim pairs; b=8,r=4 makes
@@ -163,34 +202,6 @@ def test_fingerprint_chunking_invariant():
     finally:
         tx._FP_CHUNK_CHARS = old
     assert list(whole) == list(chunked)
-
-
-def test_fingerprint_jvm_expr_matches_udf(spark, docs):
-    """with_fingerprint_jvm (0 Python stages, opt-in) == the UDF path on
-    real documents plus a null row."""
-    from pyspark.sql import types as T
-
-    from otel_logger_spark.functions.text import (
-        with_fingerprint,
-        with_fingerprint_jvm,
-    )
-
-    extra = spark.createDataFrame(
-        [(999999, None)],
-        T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]),
-    )
-    d = docs.select("doc_id", "text").unionByName(extra)
-    a = {r["doc_id"]: r["fingerprint"]
-         for r in with_fingerprint(d).select("doc_id", "fingerprint").collect()}
-    b = {r["doc_id"]: r["fingerprint"]
-         for r in with_fingerprint_jvm(d).select("doc_id", "fingerprint").collect()}
-    assert a == b and a[999999] is None
-    # the JVM variant's plan has zero Python stages
-    plan = with_fingerprint_jvm(d)._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan
 
 
 def test_fingerprint_properties():

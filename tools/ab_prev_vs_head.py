@@ -2,10 +2,9 @@
 at the pass level (BENCH/NOISE.md discipline) — the round-close
 regression gate the round-8 verdict asked to make standing (item #8).
 
-Generalizes tools/ab_r7_vs_r8.py: ``--ref`` is git-archived into a
-second --py-files zip; the job script (tools/run_pipeline_job.py) and
-every spark-submit conf are byte-identical across the two legs, so only
-the package differs. Alternating leg order per pair cancels cache-drift.
+``--ref`` is git-archived into a second --py-files zip; the job script
+(tools/run_pipeline_job.py) and every spark-submit conf are
+byte-identical across the two legs, so only the package differs. Alternating leg order per pair cancels cache-drift.
 
 Usage:
   python tools/ab_prev_vs_head.py --ref <commit> [--convs 1500000]
@@ -28,7 +27,6 @@ from datetime import datetime, timezone
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.ab_r7_vs_r8 import run_once  # noqa: E402  (identical leg runner)
 from tools.bench_scaling import CACHE, build_pyfiles_zip, ensure_input  # noqa: E402
 
 
@@ -56,6 +54,39 @@ def build_ref_zip(ref: str) -> str:
         return zpath
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def run_once(cores: int, input_path: str, zpath: str) -> dict:
+    out = tempfile.mkdtemp(prefix=f"ab_prev_head_{cores}_")
+    try:
+        cmd = [
+            "spark-submit",
+            "--master", f"local[{cores}]",
+            "--driver-memory", "16g",
+            "--conf", f"spark.sql.shuffle.partitions={4 * cores}",
+            "--conf", "spark.sql.adaptive.enabled=true",
+            "--conf", "spark.sql.adaptive.coalescePartitions.enabled=true",
+            "--conf", "spark.sql.adaptive.skewJoin.enabled=true",
+            "--conf", "spark.sql.session.timeZone=UTC",
+            "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
+            "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=10000",
+            "--conf", "spark.ui.enabled=false",
+            "--py-files", zpath,
+            os.path.join(REPO, "tools", "run_pipeline_job.py"),
+            "--input", input_path,
+            "--out", out,
+        ]
+        res = subprocess.run(
+            cmd, capture_output=True, text=True, timeout=3600
+        )
+        for line in res.stdout.splitlines():
+            if line.startswith("{"):
+                return json.loads(line)
+        raise RuntimeError(
+            f"no JSON: {res.stdout[-1500:]}\n{res.stderr[-1500:]}"
+        )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def main():
