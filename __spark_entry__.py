@@ -34,54 +34,48 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Current rotation (deletion of the parse/encoding/fingerprint
-    # experiments that lost their A/B, plus the ngram_jaccard_pairs max_df
-    # fix): the touched modules are functions/parse.py, pipeline.py,
-    # config.py, operators/multiline.py, functions/text.py,
-    # functions/dedup.py and streaming/pipeline.py. Every gate whose
-    # DataFrame construction executes code from one of them sits inside
-    # the window — the 14 previously deferred parse/pipeline and text.py
-    # gates (parse_*, level_precedence, multiline_entry_stats,
-    # route_sink_counts, conversation_rollup, window_turn_rollup,
-    # top_k_noisy, flush_window_counts, summary_union, weighted_sample,
-    # lang_id, text_quality) are back. Deferred in their place are 14
-    # gates on untouched modules (multimodal, outliers, bloom, tfidf,
-    # quantize, ivf, semdedup, lmscore, bigram, imagedup, bpe,
-    # cartography), all green in CORRECTNESS_r09.json. semantic_dedup and
-    # image_near_dup import dedup.py's bucket-cap helpers, which are
-    # unchanged and not executed by either gate. The other 15 stay
-    # deferred: untouched, green in CORRECTNESS_r09.json. The full
-    # 79-gate set is re-verified against the sf0.01 DuckDB oracle with
-    # tools/check_correctness.py.
-    "pricing_summary",
-    "top_revenue_orders",
-    "region_rollup",
-    "distinct_users",
-    "freqcap",
-    "diversity",
-    "training_mix",
-    "decontam_split",
-    "snapshot_diff",
-    "vocab_oov",
-    "chunk_windows",
-    "contamination_profile",
-    "temperature_mix",
-    "median_gap",
-    "rollup_role_style",
-    "multimodal_decode",
-    "audio_stats",
-    "embedding_outliers",
-    "incremental_dedup",
-    "tfidf_terms",
-    "quantized_ann",
-    "ann_ivf_quantized",
-    "semantic_dedup",
-    "lm_fluency",
-    "bigram_fluency",
-    "image_near_dup",
-    "bpe_merges",
-    "bpe_encode",
-    "corpus_cartography",
+    # Current rotation (one implementation per pipeline stage: parse,
+    # multiline, enrich, route, sinks, pipeline, queries, textfile and
+    # streaming touched). Tracing each gate's DataFrame construction finds
+    # the touched-module gates: the eleven parse/pipeline gates
+    # (parse_severity_counts .. summary_union), pivot_role_severity, and
+    # the four queries.py gates pricing_summary, top_revenue_orders,
+    # region_rollup and distinct_users, which the previous rotation had
+    # deferred. All sit inside the window. The rotation is a full swap:
+    # every gate deferred in either of the last two rounds is back in the
+    # window, and deferred in their place are 29 gates on untouched
+    # modules that the previous round verified inside the window. The
+    # full 79-gate set is re-verified against the sf0.01 DuckDB oracle
+    # with tools/check_correctness.py.
+    "simhash_pairs",
+    "embedding_topk",
+    "embedding_near_dup",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "doc_fingerprint",
+    "pii_redaction",
+    "pack_shards",
+    "doc_repetition",
+    "span_dedup",
+    "dedup_canonical",
+    "normalized_dedup",
+    "token_mix",
+    "fixed_k_sample",
+    "leakage_split",
+    "dsir_select",
+    "source_overlap",
+    "hygiene_manifest",
+    "funnel",
+    "cms_counts",
+    "exact_percentiles",
+    "zorder_buckets",
+    "rate_spikes",
+    "log_templates",
+    "asof_latest_signup",
+    "asof_next_purchase",
+    "range_click_incidents",
+    "sessionization",
+    "approx_distinct",
 ]
 
 

@@ -12,13 +12,18 @@ run against this engine:
 | --level-fields            | level_fields                  |
 | --message-fields          | message_fields                |
 | --continuation-pattern    | continuation_pattern          |
-| --batch-size              | arrow batch size / trigger    |
-| --flush-interval          | streaming trigger interval    |
+| --batch-size              | batch_size (*)                |
+| --flush-interval          | flush_interval (*)            |
 | --timeout                 | per-sink export deadline      |
 |                           | (<= 0 disables, as in OTel)   |
 | --passthrough-stdout/err  | passthrough_raw_sink          |
 | positional command        | (n/a: input table plays the   |
 |                           |  wrapped process's streams)   |
+
+(*) parsed and validated with the reference's syntax, but no engine path
+reads them yet: the Arrow batch size is a session setting
+(session.py) and streaming triggers are set by run_streaming_pipeline's
+own arguments.
 """
 
 from __future__ import annotations
@@ -113,9 +118,8 @@ class PipelineConfig:
     message_fields: tuple[str, ...] = DEFAULT_MESSAGE_FIELDS
     continuation_pattern: str = DEFAULT_CONTINUATION_PATTERN
     coalesce_multiline: bool = True
-    batch_size: int = 10_000  # arrow batch (reference default 50 is an
-    # export batch; Arrow batches are the engine's unit of bounded memory)
-    flush_interval: str = "5 seconds"  # streaming trigger (main.go:38)
+    batch_size: int = 10_000  # --batch-size; not read yet (see table above)
+    flush_interval: str = "5 seconds"  # --flush-interval; not read yet
     # --timeout (main.go:35 -> WithExportTimeout, main.go:357): per-sink
     # export deadline. None = no deadline — the reference's 10s default
     # suits OTLP RPC exports; a distributed parquet write's natural scale
@@ -123,7 +127,6 @@ class PipelineConfig:
     export_timeout_ms: int | None = None
     passthrough_raw_sink: bool = False  # tee of raw entries (main.go:42-43)
     repartition: int | None = None  # explicit conv_id hash partitions
-    salt_buckets: int = 16
     # attrs storage format through the pipeline + sinks: the JSON string,
     # adopted after the 37M-turn A/B (520k vs 382k turns/s at 8 cores,
     # identical sink counts; BENCH/AB_attrs_format.md). A class constant,

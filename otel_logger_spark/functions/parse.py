@@ -30,7 +30,6 @@ import re
 from datetime import datetime, timedelta, timezone
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -82,34 +81,55 @@ _TS_RE = re.compile(
     r"^(\d{4})-(\d{2})-(\d{2})([T ])(\d{2}):(\d{2}):(\d{2})(?:\.(\d+))?(Z|[+-]\d{2}:\d{2})?$"
 )
 
-_GO_ZERO = datetime(1, 1, 1, tzinfo=timezone.utc)
+# epoch-micros bounds of Python's datetime range (year 1 .. 9999)
+_MIN_US = -62135596800_000_000
+_MAX_US = 253402300799_999_999
+_EPOCH_ORD = 719163  # date(1970,1,1).toordinal()
 
 
-def parse_go_timestamp(s: str) -> datetime | None:
-    """parseTimestamp (main.go:248-266) -> UTC-aware datetime, or None."""
+def parse_go_timestamp_us(s: str) -> int | None:
+    """parseTimestamp (main.go:248-266) -> epoch micros, or None for
+    unparseable/out-of-range. Micros-native: the UDF hot path avoids
+    building tz-aware datetimes entirely (datetime.replace alone was ~7% of
+    worker time); parse_go_timestamp is the datetime view of it."""
     m = _TS_RE.match(s)
     if m is None:
         return None
     y, mo, d, sep, hh, mm, ss, frac, tz = m.groups()
     if sep == " " and tz is not None:
         return None  # no space-separated layout carries a zone
-    micros = int((frac or "").ljust(6, "0")[:6]) if frac else 0
+    hh_i, mm_i, ss_i = int(hh), int(mm), int(ss)
+    if hh_i > 23 or mm_i > 59 or ss_i > 59:  # Go rejects 24:00 / leap seconds
+        return None
     try:
-        dt = datetime(int(y), int(mo), int(d), int(hh), int(mm), int(ss), micros)
+        days = datetime(int(y), int(mo), int(d)).toordinal() - _EPOCH_ORD
     except ValueError:
         return None
+    micros = int(frac.ljust(6, "0")[:6]) if frac else 0
+    us = (days * 86400 + hh_i * 3600 + mm_i * 60 + ss_i) * 1_000_000 + micros
     if tz and tz != "Z":
-        sign = 1 if tz[0] == "+" else -1
-        off = timedelta(hours=int(tz[1:3]), minutes=int(tz[4:6]))
-        try:
-            dt = dt - sign * off
-        except OverflowError:
+        off = (int(tz[1:3]) * 3600 + int(tz[4:6]) * 60) * 1_000_000
+        us = us - off if tz[0] == "+" else us + off
+        if not (_MIN_US <= us <= _MAX_US):
             # 0001-01-01T00:00:00+01:00 / 9999-12-31T23:59:59-01:00 leave
             # Python's datetime range; Go's time.Time handles them, but the
-            # zero-rows-dropped invariant wins — treat as unparseable and let
-            # the caller fall back to the row ts.
+            # zero-rows-dropped invariant wins — treat as unparseable and
+            # let the caller fall back to the row ts.
             return None
-    return dt.replace(tzinfo=timezone.utc)
+    return us
+
+
+_GO_ZERO = datetime(1, 1, 1, tzinfo=timezone.utc)
+
+
+def _us_to_datetime(us: int | None) -> datetime | None:
+    return None if us is None else _GO_ZERO + timedelta(microseconds=us - _MIN_US)
+
+
+def parse_go_timestamp(s: str) -> datetime | None:
+    """parseTimestamp (main.go:248-266) -> UTC-aware datetime, or None —
+    the datetime view of parse_go_timestamp_us, the parser the UDF runs."""
+    return _us_to_datetime(parse_go_timestamp_us(s))
 
 
 # --- P2/P3/P5/P6/P8: full entry parse ---------------------------------------
@@ -157,39 +177,6 @@ _SURROGATE_RE = re.compile("[\ud800-\udfff]")
 
 def _scrub_surrogates(s: str) -> str:
     return _SURROGATE_RE.sub("�", s)
-
-
-# epoch-micros bounds of Python's datetime range (year 1 .. 9999)
-_MIN_US = -62135596800_000_000
-_MAX_US = 253402300799_999_999
-_EPOCH_ORD = 719163  # date(1970,1,1).toordinal()
-
-
-def parse_go_timestamp_us(s: str) -> int | None:
-    """parse_go_timestamp, micros-native: the UDF hot path avoids building
-    tz-aware datetimes entirely (datetime.replace alone was ~7% of worker
-    time). Returns epoch micros, or None for unparseable/out-of-range."""
-    m = _TS_RE.match(s)
-    if m is None:
-        return None
-    y, mo, d, sep, hh, mm, ss, frac, tz = m.groups()
-    if sep == " " and tz is not None:
-        return None  # no space-separated layout carries a zone
-    hh_i, mm_i, ss_i = int(hh), int(mm), int(ss)
-    if hh_i > 23 or mm_i > 59 or ss_i > 59:  # Go rejects 24:00 / leap seconds
-        return None
-    try:
-        days = datetime(int(y), int(mo), int(d)).toordinal() - _EPOCH_ORD
-    except ValueError:
-        return None
-    micros = int(frac.ljust(6, "0")[:6]) if frac else 0
-    us = (days * 86400 + hh_i * 3600 + mm_i * 60 + ss_i) * 1_000_000 + micros
-    if tz and tz != "Z":
-        off = (int(tz[1:3]) * 3600 + int(tz[4:6]) * 60) * 1_000_000
-        us = us - off if tz[0] == "+" else us + off
-        if not (_MIN_US <= us <= _MAX_US):
-            return None  # OverflowError parity (see parse_go_timestamp)
-    return us
 
 
 def parse_entry_us(
@@ -295,12 +282,7 @@ def parse_entry(
     us, level, message, attrs, ok = parse_entry_us(
         line, prefix_re, ts_fields, level_fields, msg_fields
     )
-    ets = None
-    if us is not None:
-        ets = datetime.fromtimestamp(us // 1_000_000, tz=timezone.utc).replace(
-            microsecond=us % 1_000_000
-        )
-    return ets, level, message, attrs, ok
+    return _us_to_datetime(us), level, message, attrs, ok
 
 
 # --- Spark surface -----------------------------------------------------------
@@ -322,18 +304,11 @@ PARSED_STRUCT = T.StructType(
     ]
 )
 
-_EPOCH_NAIVE = datetime(1970, 1, 1)
-
 _dumps = (
     (lambda d: _orjson.dumps(d).decode())
     if _orjson is not None
     else (lambda d: json.dumps(d, ensure_ascii=False, separators=(",", ":")))
 )
-
-
-def _dt_to_us(dt: datetime) -> int:
-    td = dt - _EPOCH_NAIVE
-    return (td.days * 86400 + td.seconds) * 1_000_000 + td.microseconds
 
 
 def make_parse_udf(
@@ -402,7 +377,6 @@ def with_parsed(
     ts_fields=DEFAULT_TIMESTAMP_FIELDS,
     level_fields=DEFAULT_LEVEL_FIELDS,
     msg_fields=DEFAULT_MESSAGE_FIELDS,
-    keep_text: bool = False,
     attrs_format: str = "map",
 ):
     """Apply the parse stage: adds event_ts, level, message, attrs, json_ok
@@ -420,18 +394,14 @@ def with_parsed(
 
     ``raw`` is the input column RENAMED, not copied: carrying two identical
     string columns through persist/joins/writes doubles memory traffic,
-    which is the single-box scaling ceiling. keep_text=True restores the
-    duplicate for callers that still need ``text`` downstream."""
+    which is the single-box scaling ceiling."""
     if attrs_format not in ("map", "json"):
         raise ValueError(f"attrs_format must be 'map' or 'json': {attrs_format!r}")
     udf = make_parse_udf(json_prefix, ts_fields, level_fields, msg_fields)
     parsed = df.withColumn(
         "_p", udf(F.col(text_col), F.unix_micros(F.col(ts_col).cast("timestamp")))
     )
-    if keep_text:
-        parsed = parsed.withColumn("raw", F.col(text_col))
-    else:
-        parsed = parsed.withColumnRenamed(text_col, "raw")
+    parsed = parsed.withColumnRenamed(text_col, "raw")
     attrs_col = (
         F.col("_p.attrs_json")
         if attrs_format == "json"
@@ -444,20 +414,4 @@ def with_parsed(
         .withColumn("attrs", attrs_col)
         .withColumn("json_ok", F.col("_p.json_ok"))
         .drop("_p")
-    )
-
-
-def severity_expr(level_col: Column) -> Column:
-    """Pure-expression severity mapping (logLevelToSeverity,
-    main.go:311-328) — stays inside whole-stage codegen; the broadcast-join
-    variant lives in operators/enrich.py."""
-    lv = F.lower(level_col)
-    return (
-        F.when(lv == "trace", F.lit(1))
-        .when(lv == "debug", F.lit(5))
-        .when(lv == "info", F.lit(9))
-        .when((lv == "warn") | (lv == "warning"), F.lit(13))
-        .when(lv == "error", F.lit(17))
-        .when(lv == "fatal", F.lit(21))
-        .otherwise(F.lit(9))
     )

@@ -3,57 +3,30 @@
 Replaces the reference's severity switch (logLevelToSeverity,
 /root/reference/main.go:311-328) and the graft's tool-registry lookup.
 
-Both lookups are CONSTANT and tiny, so the default implementation is a
-literal-map expression (`element_at(map(...), key)`) inside whole-stage
-codegen — zero extra operators. The broadcast-join variants are kept (and
-equality-tested) because they are the right shape the moment a lookup
-stops being constant (a registry table that changes per run): measured on
-24.6M wide rows (attrs MapType + raw/message strings), EACH BroadcastHashJoin
-cost ~20s/32 cores — not the hash probe, but the UnsafeRow conversion and
-copy of the wide fact row through the extra operator — while the
-expression variant is free. Lesson: never route a big map/string-bearing
-row through a join operator to attach a constant."""
+Both lookups are CONSTANT and tiny, so each is a literal-map expression
+(`element_at(map(...), key)`) inside whole-stage codegen — zero extra
+operators. A broadcast join measured, on 24.6M wide rows (attrs MapType +
+raw/message strings), ~20s/32 cores PER lookup — not the hash probe, but
+the UnsafeRow conversion and copy of the wide fact row through the extra
+operator. Lesson: never route a big map/string-bearing row through a join
+operator to attach a constant."""
 
 from __future__ import annotations
 
-from itertools import chain
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from otel_logger_spark.schemas import (
     DEFAULT_SEVERITY,
     SEVERITY_ROWS,
-    SEVERITY_SCHEMA,
     TOOL_REGISTRY_ROWS,
-    TOOL_REGISTRY_SCHEMA,
 )
-
-
-def severity_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SEVERITY_ROWS, SEVERITY_SCHEMA)
-
-
-def tool_registry_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_REGISTRY_ROWS, TOOL_REGISTRY_SCHEMA)
 
 
 # built lazily: F.lit needs an active SparkContext, which doesn't exist at
 # import time on executors / in spark-submit --py-files cold starts
-def _severity_map():
-    return F.create_map(*[F.lit(x) for x in chain.from_iterable(SEVERITY_ROWS)])
-
-
-def _tool_category_map():
-    return F.create_map(
-        *[F.lit(x) for r in TOOL_REGISTRY_ROWS for x in (r[0], r[1])]
-    )
-
-
-def _tool_priv_map():
-    return F.create_map(
-        *[F.lit(x) for r in TOOL_REGISTRY_ROWS for x in (r[0], r[2])]
-    )
+def _lit_map(pairs) -> Column:
+    return F.create_map(*[F.lit(x) for pair in pairs for x in pair])
 
 
 def enrich_severity(df: DataFrame) -> DataFrame:
@@ -63,7 +36,7 @@ def enrich_severity(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "severity_num",
         F.coalesce(
-            F.try_element_at(_severity_map(), F.lower(df["level"])),
+            F.try_element_at(_lit_map(SEVERITY_ROWS), F.lower(df["level"])),
             F.lit(DEFAULT_SEVERITY),
         ),
     )
@@ -73,26 +46,8 @@ def enrich_tool(df: DataFrame) -> DataFrame:
     """Tool-registry lookup; unknown tools keep NULL category (still routed
     to the tool_call sink — presence of ``tool`` drives routing, not
     registry membership)."""
+    category = _lit_map((name, cat) for name, cat, _ in TOOL_REGISTRY_ROWS)
+    privileged = _lit_map((name, priv) for name, _, priv in TOOL_REGISTRY_ROWS)
     return df.withColumn(
-        "tool_category", F.try_element_at(_tool_category_map(), df["tool"])
-    ).withColumn("is_privileged", F.try_element_at(_tool_priv_map(), df["tool"]))
-
-
-def enrich_severity_join(df: DataFrame, lookup: DataFrame | None = None) -> DataFrame:
-    """Broadcast-join variant: the shape for NON-constant lookup tables.
-    Semantics equal to enrich_severity (tested)."""
-    spark = df.sparkSession
-    lookup = lookup if lookup is not None else severity_lookup_df(spark)
-    out = df.join(
-        F.broadcast(lookup), F.lower(df["level"]) == lookup["level_key"], "left"
-    ).drop("level_key")
-    return out.withColumn(
-        "severity_num", F.coalesce("severity_num", F.lit(DEFAULT_SEVERITY))
-    )
-
-
-def enrich_tool_join(df: DataFrame, registry: DataFrame | None = None) -> DataFrame:
-    """Broadcast-join variant of enrich_tool (for mutable registries)."""
-    spark = df.sparkSession
-    registry = registry if registry is not None else tool_registry_df(spark)
-    return df.join(F.broadcast(registry), on="tool", how="left")
+        "tool_category", F.try_element_at(category, df["tool"])
+    ).withColumn("is_privileged", F.try_element_at(privileged, df["tool"]))

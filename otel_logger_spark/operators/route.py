@@ -13,7 +13,7 @@ enriched frame is persisted and each sink write is a filter over it, so the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from otel_logger_spark.schemas import SINK_ERROR, SINK_LOGS, SINK_TOOL_CALL
@@ -21,11 +21,21 @@ from otel_logger_spark.schemas import SINK_ERROR, SINK_LOGS, SINK_TOOL_CALL
 ERROR_SEVERITY_THRESHOLD = 17  # SeverityError1 (main.go:321-322)
 
 
+def is_error_col() -> Column:
+    """The ``error`` sink predicate over the enriched columns."""
+    return F.col("severity_num") >= ERROR_SEVERITY_THRESHOLD
+
+
+def is_tool_call_col() -> Column:
+    """The ``tool_call`` sink predicate: a tool is present."""
+    return F.col("tool").isNotNull()
+
+
 def with_routing(df: DataFrame) -> DataFrame:
     """Adds is_error / is_tool_call / sinks (array of sink names; every row
     carries at least ``logs``)."""
-    is_error = F.col("severity_num") >= ERROR_SEVERITY_THRESHOLD
-    is_tool = F.col("tool").isNotNull()
+    is_error = is_error_col()
+    is_tool = is_tool_call_col()
     sinks = F.array_compact(
         F.array(
             F.lit(SINK_LOGS),

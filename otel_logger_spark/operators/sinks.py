@@ -32,7 +32,7 @@ from pyspark.storagelevel import StorageLevel
 
 from otel_logger_spark.schemas import SINK_ERROR, SINK_LOGS, SINK_TOOL_CALL
 from otel_logger_spark.fsio import HadoopFS, join_path
-from otel_logger_spark.operators.route import ERROR_SEVERITY_THRESHOLD
+from otel_logger_spark.operators.route import is_error_col, is_tool_call_col
 
 
 def _manifest_path(out_dir: str, run_id: str) -> str:
@@ -283,14 +283,13 @@ def write_routed_sinks(
     metrics: DataFrame | None = None,
     out_dir: str = "",
     run_id: str = "run-0",
-    persist: bool | None = None,
     passthrough_raw: bool = False,
     sink_format: str | None = None,
     partition_logs_by_date: bool = False,
     export_timeout_ms: int | None = None,
 ) -> dict:
     """Fan out the routed frame to the four sinks. ``routed`` must carry
-    is_error / is_tool_call (see route.with_routing) and the parsed columns.
+    the parsed and enriched columns (see pipeline.parse_enrich_route).
 
     Single-pass discipline at scale: the expensive plan (coalesce + parse +
     enrich) executes ONCE to stage the ``logs`` sink; the routed sinks
@@ -298,10 +297,11 @@ def write_routed_sinks(
     re-reading the staged columnar table — column-pruned, predicate-pushed
     scans of compact parquet, far cheaper than caching 10s-of-GB of wide
     rows in the storage layer (the Iceberg-staging-table pattern,
-    SURVEY.md §4). ``persist=True`` forces the in-memory variant instead
-    (right for small foreachBatch micro-batches).
+    SURVEY.md §4). A json logs sink can't be re-read cheaply, so json
+    staging persists ``routed`` in memory instead.
 
-    ``metrics`` defaults to conversation_metrics over the staged rows.
+    ``metrics`` is used only when staging in memory (json); otherwise, or
+    when None, conversation_metrics is computed over the staged rows.
     Returns the committed manifest (A5: every sink committed == ForceFlush).
     """
     fmt = resolve_sink_format(sink_format, SINK_LOGS)
@@ -310,7 +310,7 @@ def write_routed_sinks(
     done = {
         s for s, e in manifest["sinks"].items() if e.get("status") == "committed"
     }
-    use_persist = bool(persist) or fmt == "json"  # json staging can't be re-read cheaply
+    use_persist = fmt == "json"
     if use_persist:
         routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -320,44 +320,27 @@ def write_routed_sinks(
         if SINK_LOGS not in done:
             t0 = time.monotonic()
             opts = resolve_sink_options(SINK_LOGS)
+            partition_by = None
             if partition_logs_by_date:
-                n, parts = _run_with_timeout(
-                    spark,
-                    f"{run_id}:{SINK_LOGS}",
-                    export_timeout_ms,
-                    lambda: _write_one(
-                        base.withColumn("event_date", F.to_date("event_ts")),
-                        logs_path,
-                        fmt,
-                        partition_by=["event_date"],
-                        options=opts,
-                    ),
-                )
-            else:
-                n, parts = _run_with_timeout(
-                    spark,
-                    f"{run_id}:{SINK_LOGS}",
-                    export_timeout_ms,
-                    lambda: _write_one(base, logs_path, fmt, options=opts),
-                )
+                base = base.withColumn("event_date", F.to_date("event_ts"))
+                partition_by = ["event_date"]
+            n, parts = _run_with_timeout(
+                spark,
+                f"{run_id}:{SINK_LOGS}",
+                export_timeout_ms,
+                lambda: _write_one(
+                    base, logs_path, fmt, partition_by=partition_by, options=opts
+                ),
+            )
             _commit(spark, manifest, out_dir, SINK_LOGS, logs_path, n, t0, parts)
 
         # derive the remaining sinks from the staged table (or the persisted
         # frame) — the expensive upstream plan never re-executes
         staged = routed if use_persist else spark.read.parquet(logs_path)
-        is_error = (
-            routed["is_error"] if use_persist else F.col("severity_num") >= ERROR_SEVERITY_THRESHOLD
-        )
-        is_tool = (
-            routed["is_tool_call"] if use_persist else F.col("tool").isNotNull()
-        )
+        staged_out = staged.select(*[c for c in OUT_COLS if c in staged.columns])
         derived = {
-            SINK_ERROR: staged.select(
-                *[c for c in OUT_COLS if c in staged.columns]
-            ).filter(is_error),
-            SINK_TOOL_CALL: staged.select(
-                *[c for c in OUT_COLS if c in staged.columns]
-            ).filter(is_tool),
+            SINK_ERROR: staged_out.filter(is_error_col()),
+            SINK_TOOL_CALL: staged_out.filter(is_tool_call_col()),
         }
         if passthrough_raw:  # tee of raw entries (K3, main.go:481-484)
             derived["raw"] = staged.select("conv_id", "turn_idx", "role", "raw")
@@ -365,11 +348,8 @@ def write_routed_sinks(
             if metrics is None or not use_persist:
                 from otel_logger_spark.operators.rollups import conversation_metrics
 
-                metrics = conversation_metrics(
-                    staged.withColumn(
-                        "is_error", F.col("severity_num") >= ERROR_SEVERITY_THRESHOLD
-                    ).withColumn("is_tool_call", F.col("tool").isNotNull())
-                )
+                flags = {"is_error": is_error_col(), "is_tool_call": is_tool_call_col()}
+                metrics = conversation_metrics(staged.withColumns(flags))
             derived["conversation_metrics"] = metrics
 
         # the derived writes are independent scans of the staged table —

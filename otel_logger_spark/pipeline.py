@@ -13,7 +13,7 @@ local[N]):
   can split hot conversations.
 - parse stage is Arrow-batched pandas UDF, everything before/after is
   whole-stage-codegen JVM.
-- both lookup joins are broadcast (no fact-side shuffle).
+- both lookups are literal-map expressions (no join operator).
 - fan-out writes read ONE persisted frame (single-pass discipline).
 """
 
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_logger_spark.config import PipelineConfig
 from otel_logger_spark.functions.parse import with_parsed
 from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
 from otel_logger_spark.operators.multiline import coalesce_entries
@@ -30,20 +31,38 @@ from otel_logger_spark.operators.route import with_routing
 from otel_logger_spark.operators.sinks import write_routed_sinks
 
 
+def parse_enrich_route(
+    entries: DataFrame, config: PipelineConfig | None = None
+) -> DataFrame:
+    """parse -> enrich -> route over log entries (coalesced, or one turn
+    each). The one chain the batch pipeline, the streaming pipeline and the
+    query gates share; ``config`` supplies the parse field mappings and
+    prefix regex. attrs are stored in the pipeline's adopted format
+    (PipelineConfig.attrs_format, BENCH/AB_attrs_format.md)."""
+    cfg = config or PipelineConfig()
+    df = with_parsed(
+        entries,
+        json_prefix=cfg.json_prefix,
+        ts_fields=cfg.timestamp_fields,
+        level_fields=cfg.level_fields,
+        msg_fields=cfg.message_fields,
+        attrs_format=PipelineConfig.attrs_format,
+    )
+    return with_routing(enrich_tool(enrich_severity(df)))
+
+
 def build_parsed(
     transcripts: DataFrame,
     coalesce_multiline: bool = True,
     repartition: int | None = None,
     json_prefix: str | None = None,
-    config=None,
+    config: PipelineConfig | None = None,
 ) -> DataFrame:
     """The transformation plan up to the routed frame (no actions).
 
     ``config`` (config.PipelineConfig) carries the reference CLI surface
     (field mappings, prefix/continuation regexes) and takes precedence
     when given; the convenience kwargs apply only with config=None."""
-    from otel_logger_spark.config import PipelineConfig
-
     cfg = config or PipelineConfig(
         coalesce_multiline=coalesce_multiline,
         json_prefix=json_prefix,
@@ -58,17 +77,7 @@ def build_parsed(
         df = coalesce_entries(df, cont_pattern=cfg.continuation_pattern)
     else:
         df = df.filter(F.length("text") > 0)
-    df = with_parsed(
-        df,
-        json_prefix=cfg.json_prefix,
-        ts_fields=cfg.timestamp_fields,
-        level_fields=cfg.level_fields,
-        msg_fields=cfg.message_fields,
-        attrs_format=cfg.attrs_format,
-    )
-    df = enrich_severity(df)
-    df = enrich_tool(df)
-    return with_routing(df)
+    return parse_enrich_route(df, cfg)
 
 
 def run_pipeline(

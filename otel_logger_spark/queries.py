@@ -24,15 +24,15 @@ from otel_logger_spark.graftdata import (
     load_events_transcripts,
     transcripts_cte,
 )
-from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
 from otel_logger_spark.operators.multiline import coalesce_entries
-from otel_logger_spark.operators.route import sink_counts, with_routing
+from otel_logger_spark.operators.route import sink_counts
 from otel_logger_spark.operators.rollups import (
     conversation_metrics,
     flush_window_counts,
     top_k_noisy,
     with_turn_windows,
 )
+from otel_logger_spark.pipeline import logs_with_summaries, parse_enrich_route
 
 # reusable oracle fragment: the severity switch (main.go:311-328)
 _SEV_CASE = (
@@ -53,14 +53,11 @@ _PRED_EP_US = (
 def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full engine chain over the constructed transcripts (no multiline
     — constructed turns are single-line; the coalescer has its own gate).
-    attrs ride in the pipeline's adopted storage format (json string —
-    BENCH/AB_attrs_format.md) so the bench's full_pipeline measures the
-    shipped configuration; none of the _routed gate queries read attrs."""
-    from otel_logger_spark.config import PipelineConfig
-
-    t = load_events_transcripts(spark, sf_dir)
-    parsed = with_parsed(t, attrs_format=PipelineConfig().attrs_format)
-    return with_routing(enrich_tool(enrich_severity(parsed)))
+    It is the pipeline's own parse -> enrich -> route (attrs in the
+    adopted json storage format), so the bench's full_pipeline measures
+    the shipped configuration; none of the _routed gate queries read
+    attrs."""
+    return parse_enrich_route(load_events_transcripts(spark, sf_dir))
 
 
 # --- A. pipeline-semantics gates ---------------------------------------------
@@ -299,8 +296,6 @@ O_FLUSH_WINDOW_COUNTS = (
 
 
 def q_summary_union(spark, sf_dir):
-    from otel_logger_spark.pipeline import logs_with_summaries
-
     return (
         logs_with_summaries(_routed(spark, sf_dir))
         .groupBy("role")

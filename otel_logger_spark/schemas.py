@@ -33,13 +33,6 @@ SEVERITY_ROWS = [
 ]
 DEFAULT_SEVERITY = 9
 
-SEVERITY_SCHEMA = T.StructType(
-    [
-        T.StructField("level_key", T.StringType(), False),
-        T.StructField("severity_num", T.IntegerType(), False),
-    ]
-)
-
 # tool registry for enrichment (graft-side lookup; FIXTURES.md §2)
 TOOL_REGISTRY_ROWS = [
     ("bash", "shell", True),
@@ -53,14 +46,6 @@ TOOL_REGISTRY_ROWS = [
     ("file.read", "fs", False),
     ("file.write", "fs", True),
 ]
-
-TOOL_REGISTRY_SCHEMA = T.StructType(
-    [
-        T.StructField("tool", T.StringType(), False),
-        T.StructField("tool_category", T.StringType(), False),
-        T.StructField("is_privileged", T.BooleanType(), False),
-    ]
-)
 
 # sink names for the routed fan-out (north_star: error, tool-call,
 # conversation-metrics; plus the full log stream — the reference's single

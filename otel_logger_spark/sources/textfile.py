@@ -44,9 +44,12 @@ def read_log_files(
         for pdf in batches:
             out = {"conv_id": [], "turn_idx": [], "role": [], "text": [], "tool": [], "ts": []}
             for content, fp in zip(pdf["value"], pdf["file_path"]):
-                lines = (content or "").split("\n")
+                content = content or ""
+                lines = content.split("\n")
                 if lines and lines[-1] == "":  # trailing newline artifact
                     lines.pop()
+                if "\r" in content:  # ScanLines drops one CR per line (main.go:419)
+                    lines = [s[:-1] if s.endswith("\r") else s for s in lines]
                 for i, line in enumerate(lines):
                     out["conv_id"].append(fp)
                     out["turn_idx"].append(i)

@@ -24,9 +24,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from otel_logger_spark.operators.multiline import (
     DEFAULT_CONTINUATION_PATTERN,
-    _BARE_CLOSERS,
+    is_start_line,
 )
 
+OUTPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "n_lines"]
 OUTPUT_SCHEMA = (
     "conv_id string, turn_idx long, role string, text string, tool string, "
     "ts timestamp, n_lines int"
@@ -43,13 +44,6 @@ def make_coalesce_state_fn(
 ):
     pat = re.compile(cont_pattern)
 
-    def is_start(line: str) -> bool:
-        return (
-            len(line) > 0
-            and not pat.search(line)
-            and line.strip() not in _BARE_CLOSERS
-        )
-
     def fn(key, pdfs, state: GroupState):
         (conv_id,) = key
         out = []
@@ -60,10 +54,7 @@ def make_coalesce_state_fn(
                 ti, role, tool, ts, lines, n = state.get
                 out.append((conv_id, ti, role, "\n".join(lines), tool, ts, n))
                 state.remove()
-            yield pd.DataFrame(
-                out,
-                columns=["conv_id", "turn_idx", "role", "text", "tool", "ts", "n_lines"],
-            )
+            yield pd.DataFrame(out, columns=OUTPUT_COLS)
             return
 
         cur = list(state.get) if state.exists else None
@@ -75,7 +66,7 @@ def make_coalesce_state_fn(
                 line = r.text or ""
                 if len(line) == 0:
                     continue
-                if is_start(line):
+                if is_start_line(line, pat):
                     if cur is not None:
                         out.append(
                             (conv_id, cur[0], cur[1], "\n".join(cur[4]), cur[2], cur[3], cur[5])
@@ -92,10 +83,7 @@ def make_coalesce_state_fn(
         elif state.exists:
             state.remove()
 
-        yield pd.DataFrame(
-            out,
-            columns=["conv_id", "turn_idx", "role", "text", "tool", "ts", "n_lines"],
-        )
+        yield pd.DataFrame(out, columns=OUTPUT_COLS)
 
     return fn
 

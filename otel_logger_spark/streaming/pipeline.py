@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from otel_logger_spark.functions.parse import with_parsed
-from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
-from otel_logger_spark.operators.route import with_routing
+from otel_logger_spark.pipeline import parse_enrich_route
 from otel_logger_spark.schemas import TRANSCRIPT_SCHEMA
 
 
@@ -94,12 +93,7 @@ def build_streaming_routed(
         )
     else:
         src = stream.filter(F.length("text") > 0)
-    from otel_logger_spark.config import PipelineConfig
-
-    # same adopted attrs storage format as the batch pipeline
-    # (BENCH/AB_attrs_format.md)
-    parsed = with_parsed(src, attrs_format=PipelineConfig.attrs_format)
-    return with_routing(enrich_tool(enrich_severity(parsed)))
+    return parse_enrich_route(src)
 
 
 STREAM_OUT_COLS = [

@@ -4,17 +4,16 @@ becomes one transcript turn; expected output is the list of coalesced
 entry texts in (conv_id, turn_idx) order.
 
 Both formulations are tested: the window/running-sum plan (production,
-scales) and the applyInPandas sequential cross-check.
+scales) and the applyInPandas transcription of the Go loop
+(tests/multiline_reference.py).
 """
 
 from datetime import datetime
 
 import pytest
 
-from otel_logger_spark.operators.multiline import (
-    coalesce_entries,
-    coalesce_entries_pandas,
-)
+from multiline_reference import coalesce_entries_pandas
+from otel_logger_spark.operators.multiline import coalesce_entries
 
 CASES = {
     "single_line": (
@@ -198,67 +197,3 @@ def test_multiline_multiple_conversations(spark):
     )
     out = {(r["conv_id"], r["text"]) for r in coalesce_entries(df).collect()}
     assert out == {("a", "start A\n  cont A"), ("b", "start B")}
-
-
-def test_partitioned_coalescer_matches_window(spark, tmp_path):
-    """The shuffle-free per-partition coalescer must equal the window
-    coalescer on the textfile source (one file = one ordered stream)."""
-    from otel_logger_spark.operators.multiline import (
-        coalesce_entries,
-        coalesce_entries_partitioned,
-    )
-    from otel_logger_spark.sources.textfile import read_log_files
-
-    d = tmp_path / "logsA"
-    d.mkdir()
-    for i in range(6):
-        (d / f"f{i}.log").write_text(
-            f"2024-01-15T10:30:0{i}Z ERROR boom {i}\n"
-            "  at Frame.one(File.java:1)\n"
-            "  orphan-free continuation\n"
-            f"plain line {i}\n"
-            "}\n"  # bare closer attaches to the open entry
-        )
-    src = read_log_files(spark, str(d))
-    key = lambda r: (r["conv_id"], r["turn_idx"], r["text"], r["n_lines"])
-    a = sorted(map(key, coalesce_entries(src).collect()))
-    b = sorted(map(key, coalesce_entries_partitioned(src).collect()))
-    assert a == b and a
-
-
-def test_limit_early_exit_over_coalesced_stream(spark, tmp_path):
-    """Reference parity for pull-based early exit (multiline_test.go:258-294):
-    limit(k) over the shuffle-free coalesced stream must NOT read the whole
-    input. An Observation on the line stream counts rows actually scanned —
-    CollectLimit runs input partitions incrementally when no exchange sits
-    in between."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from otel_logger_spark.operators.multiline import coalesce_entries_partitioned
-    from otel_logger_spark.sources.textfile import read_log_files
-
-    d = tmp_path / "logsB"
-    d.mkdir()
-    n_files, lines_per_file = 32, 40
-    for i in range(n_files):
-        (d / f"f{i:02d}.log").write_text(
-            "".join(f"2024-01-15T10:30:45Z INFO line {j}\n  cont {j}\n"
-                    for j in range(lines_per_file // 2))
-        )
-    total_lines = n_files * lines_per_file
-
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-    try:
-        src = read_log_files(spark, str(d))
-        obs = Observation()
-        observed = src.observe(obs, F.count(F.lit(1)).alias("n_scanned"))
-        got = coalesce_entries_partitioned(observed).limit(3).collect()
-        assert len(got) == 3
-        scanned = obs.get["n_scanned"]
-        assert scanned < total_lines / 4, (
-            f"limit(3) scanned {scanned}/{total_lines} lines — no early exit"
-        )
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)

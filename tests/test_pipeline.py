@@ -12,9 +12,11 @@ invariants from the reference + the graft contract.
 import os
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from otel_logger_spark.operators.multiline import coalesce_entries, coalesce_entries_pandas
+from multiline_reference import coalesce_entries_pandas
+from otel_logger_spark.operators.multiline import coalesce_entries
 from otel_logger_spark.operators.rollups import conversation_metrics
 from otel_logger_spark.operators.route import sink_counts
 from otel_logger_spark.pipeline import build_parsed, run_pipeline
@@ -77,14 +79,46 @@ def test_raw_equals_coalesced_text(spark, transcripts):
     assert joined == 0
 
 
-def test_severity_enrichment_matches_expr(spark, transcripts):
-    from otel_logger_spark.functions.parse import severity_expr
+def severity_expr(level_col: Column) -> Column:
+    """Reference severity mapping written as the switch it transcribes
+    (logLevelToSeverity, main.go:311-328)."""
+    lv = F.lower(level_col)
+    return (
+        F.when(lv == "trace", F.lit(1))
+        .when(lv == "debug", F.lit(5))
+        .when(lv == "info", F.lit(9))
+        .when((lv == "warn") | (lv == "warning"), F.lit(13))
+        .when(lv == "error", F.lit(17))
+        .when(lv == "fatal", F.lit(21))
+        .otherwise(F.lit(9))
+    )
 
+
+def test_severity_enrichment_matches_expr(spark, transcripts):
     routed = build_parsed(transcripts)
     bad = routed.filter(severity_expr(F.col("level")) != F.col("severity_num")).count()
     assert bad == 0
     sev = {r["severity_num"] for r in routed.select("severity_num").distinct().collect()}
     assert sev <= {1, 5, 9, 13, 17, 21}
+
+
+def test_batch_and_streaming_chains_share_one_plan(spark, transcripts):
+    """The batch pipeline without coalescing and the streaming chain
+    without coalescing build the same optimized plan over one static
+    frame (expression ids aside): the parse -> enrich -> route chain has a
+    single definition."""
+    import re
+
+    from otel_logger_spark.streaming.pipeline import build_streaming_routed
+
+    def plan(df):
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    batch = plan(build_parsed(transcripts, coalesce_multiline=False))
+    stream = plan(build_streaming_routed(transcripts, coalesce=False))
+    assert "parse_udf" in batch
+    assert batch == stream
 
 
 def test_routing_predicates(spark, transcripts):
@@ -248,23 +282,29 @@ def test_manifest_io_hadoop_fs(spark, tmp_path):
     assert names == ["rX.json"]
 
 
-def test_enrich_expr_equals_join_variants(spark, transcripts):
-    """The literal-map enrichment (default, codegen) must equal the
-    broadcast-join variants kept for non-constant lookups."""
+def test_enrich_matches_reference(spark, transcripts):
+    """enrich_severity / enrich_tool, row by row, against the severity
+    switch and a plain dict over the tool registry."""
     from otel_logger_spark.functions.parse import with_parsed
-    from otel_logger_spark.operators.enrich import (
-        enrich_severity,
-        enrich_severity_join,
-        enrich_tool,
-        enrich_tool_join,
-    )
+    from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
+    from otel_logger_spark.schemas import TOOL_REGISTRY_ROWS
 
     parsed = with_parsed(transcripts.limit(3000))
-    cols = ["conv_id", "turn_idx", "severity_num", "tool_category", "is_privileged"]
-    expr = enrich_tool(enrich_severity(parsed)).select(*cols)
-    join = enrich_tool_join(enrich_severity_join(parsed)).select(*cols)
-    assert expr.exceptAll(join).count() == 0
-    assert join.exceptAll(expr).count() == 0
+    rows = (
+        enrich_tool(enrich_severity(parsed))
+        .select(
+            "tool", "severity_num", "tool_category", "is_privileged",
+            severity_expr(F.col("level")).alias("want_severity"),
+        )
+        .collect()
+    )
+    registry = {name: (cat, priv) for name, cat, priv in TOOL_REGISTRY_ROWS}
+    assert rows and any(r["tool"] in registry for r in rows)
+    for r in rows:
+        assert r["severity_num"] == r["want_severity"]
+        assert (r["tool_category"], r["is_privileged"]) == registry.get(
+            r["tool"], (None, None)
+        )
 
 
 def test_lineage_distributed_no_serial_footer_loop(spark, tmp_path, monkeypatch):

@@ -48,6 +48,18 @@ def test_log_files_through_pipeline(spark, tmp_path):
     assert rows["prefixed json"]["severity_num"] == 9
 
 
+def test_crlf_log_lines_drop_cr(spark, tmp_path):
+    """bufio.Scanner's ScanLines drops one trailing CR per line
+    (main.go:419): a CRLF closer still joins the open entry, and no raw
+    keeps the CR."""
+    d = tmp_path / "crlf"
+    d.mkdir()
+    (d / "win.log").write_bytes(b"ERROR boom\r\n  at x\r\n}\r\nINFO next\r")
+    routed = build_parsed(read_log_files(spark, str(d)))
+    raws = [r["raw"] for r in routed.orderBy("turn_idx").collect()]
+    assert raws == ["ERROR boom\n  at x\n}", "INFO next"]
+
+
 def test_config_reference_args():
     cfg = PipelineConfig.from_reference_args(
         [
