@@ -3,7 +3,7 @@
 ``entry(spark)`` — flagship pipeline query (parse -> enrich -> severity
 rollup) over transcripts constructed from sf0.001 events.
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator from
-SURVEY.md §2 (see otel_logger_spark/queries.py).
+SURVEY.md §2, read from the gate registry (otel_logger_spark/gates.py).
 """
 
 from __future__ import annotations
@@ -34,48 +34,51 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Current rotation (one implementation per pipeline stage: parse,
-    # multiline, enrich, route, sinks, pipeline, queries, textfile and
-    # streaming touched). Tracing each gate's DataFrame construction finds
-    # the touched-module gates: the eleven parse/pipeline gates
-    # (parse_severity_counts .. summary_union), pivot_role_severity, and
-    # the four queries.py gates pricing_summary, top_revenue_orders,
-    # region_rollup and distinct_users, which the previous rotation had
-    # deferred. All sit inside the window. The rotation is a full swap:
-    # every gate deferred in either of the last two rounds is back in the
-    # window, and deferred in their place are 29 gates on untouched
-    # modules that the previous round verified inside the window. The
-    # full 79-gate set is re-verified against the sf0.01 DuckDB oracle
-    # with tools/check_correctness.py.
-    "simhash_pairs",
-    "embedding_topk",
-    "embedding_near_dup",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "doc_fingerprint",
-    "pii_redaction",
-    "pack_shards",
-    "doc_repetition",
-    "span_dedup",
-    "dedup_canonical",
-    "normalized_dedup",
-    "token_mix",
-    "fixed_k_sample",
-    "leakage_split",
-    "dsir_select",
-    "source_overlap",
-    "hygiene_manifest",
-    "funnel",
-    "cms_counts",
-    "exact_percentiles",
-    "zorder_buckets",
-    "rate_spikes",
-    "log_templates",
-    "asof_latest_signup",
-    "asof_next_purchase",
-    "range_click_incidents",
-    "sessionization",
-    "approx_distinct",
+    # Current rotation (one gate registry, otel_logger_spark/gates.py,
+    # replaces the per-module query and oracle tables). No gate's builder
+    # changed. The oracle code that moved: dedup_canonical's {MARKERS} substitution
+    # (now _o_dedup_canonical) and the resolution of the ten corpus-derived
+    # oracles (now in oracle_sql()); those eleven gates sit in the window.
+    # The rotation is a full swap: the 29 gates deferred last round are
+    # back in the window, and deferred in their place are 29 gates the
+    # last round verified in the window. Also kept in the window: the
+    # gates whose oracle text shares the n-gram chain or stopword markers
+    # with dedup_canonical (ngram_jaccard, dedup_clusters*, minhash_pairs,
+    # weighted_sample, text_quality), freqcap and diversity (their
+    # second-SF oracle test now reads the registry), and six gates deferred
+    # in both rotations before the last (pricing_summary,
+    # top_revenue_orders, region_rollup, distinct_users, median_gap,
+    # rollup_role_style). The full 79-gate set is re-verified against the
+    # sf0.01 DuckDB oracle with tools/check_correctness.py.
+    "parse_severity_counts",
+    "parse_event_ts",
+    "parse_messages_attrs",
+    "level_precedence",
+    "multiline_entry_stats",
+    "route_sink_counts",
+    "conversation_rollup",
+    "window_turn_rollup",
+    "top_k_noisy",
+    "flush_window_counts",
+    "summary_union",
+    "dedup_exact_stats",
+    "dedup_drop_exact",
+    "training_mix",
+    "lang_id",
+    "multimodal_decode",
+    "audio_stats",
+    "embedding_outliers",
+    "decontam_split",
+    "incremental_dedup",
+    "tfidf_terms",
+    "snapshot_diff",
+    "quantized_ann",
+    "vocab_oov",
+    "chunk_windows",
+    "image_near_dup",
+    "contamination_profile",
+    "temperature_mix",
+    "pivot_role_severity",
 ]
 
 
@@ -87,21 +90,24 @@ def _gate_order(merged: dict) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from otel_logger_spark.queries import QUERIES_AB
-    from otel_logger_spark.queries_extra import QUERIES_X
-    from otel_logger_spark.queries_training import QUERIES_C
+    from otel_logger_spark.gates import GATES
 
-    return _gate_order({**QUERIES_AB, **QUERIES_C, **QUERIES_X})
+    return _gate_order({name: g.build for name, g in GATES.items()})
 
 
 def oracle_sql() -> dict[str, str]:
-    from otel_logger_spark.queries import ORACLES_AB
-    from otel_logger_spark.queries_extra import ORACLES_X
-    from otel_logger_spark.queries_training import (
-        ORACLES_C,
-        resolve_lazy_oracles,
-    )
+    from otel_logger_spark.gates import GATES
 
-    # the IVF oracle trains k-means on the gate input — resolved here,
-    # not at module import (see resolve_lazy_oracles)
-    return {**ORACLES_AB, **resolve_lazy_oracles(ORACLES_C), **ORACLES_X}
+    out = {}
+    for name, g in GATES.items():
+        sql = g.oracle
+        if callable(sql):
+            # corpus-derived oracle: generated here, not at import; if it
+            # fails (no duckdb, no corpus) the gate is checked on rows only
+            try:
+                sql = sql()
+            except Exception:
+                sql = None
+        if sql is not None:
+            out[name] = sql
+    return out

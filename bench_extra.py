@@ -23,71 +23,22 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _query_actions(spark, sf_dir):
-    """name -> zero-arg callable, mirroring bench.py's action per query."""
+    """name -> (action, zero-arg callable), mirroring bench.py's action
+    per query: the registry's gates with a bench action, under bench.py's
+    names, plus the sink fan-out flagship."""
+    from functools import partial
+
     from otel_logger_spark import queries as Q
-    from otel_logger_spark import queries_extra as QX
-    from otel_logger_spark import queries_training as QT
+    from otel_logger_spark.gates import GATES
     from otel_logger_spark.operators.rollups import conversation_metrics
     from otel_logger_spark.operators.sinks import write_routed_sinks
 
-    COUNT = {
-        "dedup_minhash": lambda: QT.q_minhash_pairs(spark, sf_dir),
-        "asof_latest_signup": lambda: QX.q_asof_latest_signup(spark, sf_dir),
-        "pack_shards": lambda: QT.q_pack_shards(spark, sf_dir),
-        "doc_repetition": lambda: QT.q_doc_repetition(spark, sf_dir),
-        "tfidf_terms": lambda: QT.q_tfidf_terms(spark, sf_dir),
-        "span_dedup": lambda: QT.q_span_dedup(spark, sf_dir),
-        "cms_counts": lambda: QX.q_cms_counts(spark, sf_dir),
-        "chunk_windows": lambda: QT.q_chunk_windows(spark, sf_dir),
+    bench_name = {"minhash_pairs": "dedup_minhash"}
+    actions = {
+        bench_name.get(n, n): (g.bench, partial(g.build, spark, sf_dir))
+        for n, g in GATES.items()
+        if g.bench
     }
-    COLLECT = {
-        "parse_severity_counts": lambda: Q.q_parse_severity_counts(spark, sf_dir),
-        "multiline_entry_stats": lambda: Q.q_multiline_entry_stats(spark, sf_dir),
-        "conversation_rollup": lambda: Q.q_conversation_rollup(spark, sf_dir),
-        "window_turn_rollup": lambda: Q.q_window_turn_rollup(spark, sf_dir),
-        "flush_window_counts": lambda: Q.q_flush_window_counts(spark, sf_dir),
-        "pricing_summary": lambda: Q.q_pricing_summary(spark, sf_dir),
-        "top_revenue_orders": lambda: Q.q_top_revenue_orders(spark, sf_dir),
-        "region_rollup": lambda: Q.q_region_rollup(spark, sf_dir),
-        "embedding_topk": lambda: QT.q_embedding_topk(spark, sf_dir),
-        "text_quality": lambda: QT.q_text_quality(spark, sf_dir),
-        "range_click_incidents": lambda: QX.q_range_click_incidents(spark, sf_dir),
-        "rate_spikes": lambda: QX.q_rate_spikes(spark, sf_dir),
-        "pii_redaction": lambda: QT.q_pii_redaction(spark, sf_dir),
-        "decontam_split": lambda: QT.q_decontam_split(spark, sf_dir),
-        "incremental_dedup": lambda: QT.q_incremental_dedup(spark, sf_dir),
-        "exact_percentiles": lambda: QX.q_exact_percentiles(spark, sf_dir),
-        "snapshot_diff": lambda: QT.q_snapshot_diff(spark, sf_dir),
-        "dedup_canonical": lambda: QT.q_dedup_canonical(spark, sf_dir),
-        "normalized_dedup": lambda: QT.q_normalized_dedup(spark, sf_dir),
-        "token_mix": lambda: QT.q_token_mix(spark, sf_dir),
-        "funnel": lambda: QX.q_funnel(spark, sf_dir),
-        "fixed_k_sample": lambda: QT.q_fixed_k_sample(spark, sf_dir),
-        "quantized_ann": lambda: QT.q_quantized_ann(spark, sf_dir),
-        "ann_ivf_quantized": lambda: QT.q_ann_ivf_quantized(spark, sf_dir),
-        "semantic_dedup": lambda: QT.q_semantic_dedup(spark, sf_dir),
-        "leakage_split": lambda: QT.q_leakage_split(spark, sf_dir),
-        "dsir_select": lambda: QT.q_dsir_select(spark, sf_dir),
-        "source_overlap": lambda: QT.q_source_overlap(spark, sf_dir),
-        "lm_fluency": lambda: QT.q_lm_fluency(spark, sf_dir),
-        "vocab_oov": lambda: QT.q_vocab_oov(spark, sf_dir),
-        "contamination_profile": lambda: QT.q_contamination_profile(spark, sf_dir),
-        "freqcap": lambda: QT.q_freqcap(spark, sf_dir),
-        "diversity": lambda: QT.q_diversity(spark, sf_dir),
-        "temperature_mix": lambda: QT.q_temperature_mix(spark, sf_dir),
-        "corpus_cartography": lambda: QT.q_corpus_cartography(spark, sf_dir),
-        "audio_stats": lambda: QT.q_audio_stats(spark, sf_dir),
-        "embedding_outliers": lambda: QT.q_embedding_outliers(spark, sf_dir),
-        "bigram_fluency": lambda: QT.q_bigram_fluency(spark, sf_dir),
-        "image_near_dup": lambda: QT.q_image_near_dup(spark, sf_dir),
-        "bpe_encode": lambda: QT.q_bpe_encode(spark, sf_dir),
-        "hygiene_manifest": lambda: QT.q_hygiene_manifest(spark, sf_dir),
-    }
-    actions: dict[str, tuple] = {}
-    for n, build in COUNT.items():
-        actions[n] = ("count", build)
-    for n, build in COLLECT.items():
-        actions[n] = ("collect", build)
 
     def full_pipeline():
         import shutil
@@ -120,6 +71,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+    from otel_logger_spark.plans.audit import formatted_plan
     from otel_logger_spark.session import get_spark
 
     spark = get_spark("bench-extra", cores=cpus, shuffle_partitions=cpus)
@@ -177,9 +129,7 @@ def main():
                 df = build2()
                 p = os.path.join(args.plan, f"{name}{args.plan_suffix}.txt")
                 with open(p, "w") as f:
-                    f.write(df._jdf.queryExecution().explainString(
-                        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                    ))
+                    f.write(formatted_plan(df))
                 print(f"# wrote {p}")
     print(json.dumps({"summary": {n: r["median"] for n, r in out.items()}}))
     spark.stop()

@@ -1,5 +1,6 @@
 """Driver-facing query inventory: every operator from SURVEY.md §2 exposed
-as a (spark_fn, oracle_sql) pair over the testdata tables.
+as a (spark_fn, oracle_sql) pair over the testdata tables; the pairs are
+registered as gates in otel_logger_spark/gates.py.
 
 Spark side runs the REAL engine operators (parse UDF, coalescer, enrich,
 route, rollups, dedup, similarity); the DuckDB oracle predicts the result
@@ -9,8 +10,6 @@ hashing is exact.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -420,40 +419,3 @@ O_DISTINCT_USERS = """
 SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events
 FROM events GROUP BY 1
 """
-
-
-QUERIES_AB: dict[str, Callable] = {
-    "parse_severity_counts": q_parse_severity_counts,
-    "parse_event_ts": q_parse_event_ts,
-    "parse_messages_attrs": q_parse_messages_attrs,
-    "level_precedence": q_level_precedence,
-    "multiline_entry_stats": q_multiline_entry_stats,
-    "route_sink_counts": q_route_sink_counts,
-    "conversation_rollup": q_conversation_rollup,
-    "window_turn_rollup": q_window_turn_rollup,
-    "top_k_noisy": q_top_k_noisy,
-    "flush_window_counts": q_flush_window_counts,
-    "summary_union": q_summary_union,
-    "pricing_summary": q_pricing_summary,
-    "top_revenue_orders": q_top_revenue_orders,
-    "region_rollup": q_region_rollup,
-    "distinct_users": q_distinct_users,
-}
-
-ORACLES_AB: dict[str, str] = {
-    "parse_severity_counts": O_PARSE_SEVERITY_COUNTS,
-    "parse_event_ts": O_PARSE_EVENT_TS,
-    "parse_messages_attrs": O_PARSE_MESSAGES_ATTRS,
-    "level_precedence": O_LEVEL_PRECEDENCE,
-    "multiline_entry_stats": O_MULTILINE_ENTRY_STATS,
-    "route_sink_counts": O_ROUTE_SINK_COUNTS,
-    "conversation_rollup": O_CONVERSATION_ROLLUP,
-    "window_turn_rollup": O_WINDOW_TURN_ROLLUP,
-    "top_k_noisy": O_TOP_K_NOISY,
-    "flush_window_counts": O_FLUSH_WINDOW_COUNTS,
-    "summary_union": O_SUMMARY_UNION,
-    "pricing_summary": O_PRICING_SUMMARY,
-    "top_revenue_orders": O_TOP_REVENUE_ORDERS,
-    "region_rollup": O_REGION_ROLLUP,
-    "distinct_users": O_DISTINCT_USERS,
-}

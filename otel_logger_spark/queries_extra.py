@@ -448,38 +448,3 @@ def _o_funnel() -> str:
     return funnel_counts_sql(
         "events", ["view", "click", "purchase"], max_gap_seconds=86400
     )
-
-
-QUERIES_X = {
-    "funnel": q_funnel,
-    "cms_counts": q_cms_counts,
-    "exact_percentiles": q_exact_percentiles,
-    "zorder_buckets": q_zorder_buckets,
-    "median_gap": q_median_gap,
-    "rate_spikes": q_rate_spikes,
-    "log_templates": q_log_templates,
-    "asof_latest_signup": q_asof_latest_signup,
-    "asof_next_purchase": q_asof_next_purchase,
-    "range_click_incidents": q_range_click_incidents,
-    "sessionization": q_sessionization,
-    "pivot_role_severity": q_pivot_role_severity,
-    "rollup_role_style": q_rollup_role_style,
-    "approx_distinct": q_approx_distinct,
-}
-
-ORACLES_X = {
-    "funnel": _o_funnel(),
-    "cms_counts": _o_cms_counts(),
-    "exact_percentiles": _o_exact_percentiles(),
-    "zorder_buckets": _o_zorder_buckets(),
-    "median_gap": O_MEDIAN_GAP,
-    "rate_spikes": _o_rate_spikes(),
-    "log_templates": _o_log_templates(),
-    "asof_latest_signup": O_ASOF_LATEST_SIGNUP,
-    "asof_next_purchase": O_ASOF_NEXT_PURCHASE,
-    "range_click_incidents": O_RANGE_CLICK_INCIDENTS,
-    "sessionization": O_SESSIONIZATION,
-    "pivot_role_severity": O_PIVOT_ROLE_SEVERITY,
-    "rollup_role_style": O_ROLLUP_ROLE_STYLE,
-    "approx_distinct": _o_approx_distinct(),
-}

@@ -1,10 +1,15 @@
 """Training-data operator gates: dedup, similarity, text analysis,
-redaction, multimodal — queries() entries with DuckDB oracles THROUGHOUT
-(since round 5 nothing is rows-only). Everything engine-specific has a
-real oracle: XXH64 re-implemented in SQL (oracles_xxh64.py) for
-simhash/minhash, literal-embedded hyperplanes with bit-exact unrolled
-float arithmetic for the LSH ANN (oracles_lsh.py), independent-sample +
-centroid-literal re-derivation for the IVF ANN (oracles_ivf.py).
+redaction, multimodal. This module holds each gate's Spark builder
+(``q_*``) and its DuckDB oracle text (``O_*``) or generator (``_o_*``);
+otel_logger_spark/gates.py pairs them into queries() entries, and every
+entry has a real oracle. Everything engine-specific is re-derived in
+SQL: XXH64 (oracles_xxh64.py) for simhash/minhash, literal-embedded
+hyperplanes with bit-exact unrolled float arithmetic for the LSH ANN
+(oracles_lsh.py), independent-sample + centroid-literal re-derivation
+for the IVF ANN (oracles_ivf.py). The generators that read the gate's
+own corpus (``_o_ann_ivf_topk`` and the other ``-> str | None`` ones)
+are registered uncalled, so importing this module or gates.py runs no
+DuckDB scan.
 """
 
 from __future__ import annotations
@@ -223,6 +228,11 @@ O_DEDUP_CANONICAL = (
    CAST(SUM(CASE WHEN rn = 1 THEN doc_id ELSE 0 END) AS BIGINT) AS sum_kept_ids
  FROM ranked GROUP BY 1"""
 )
+
+
+def _o_dedup_canonical() -> str:
+    # _ALL_MARKERS_SQL is defined further down this module
+    return O_DEDUP_CANONICAL.replace("{MARKERS}", _ALL_MARKERS_SQL)
 
 
 def q_normalized_dedup(spark, sf_dir):
@@ -2145,132 +2155,3 @@ def _o_temperature_mix() -> str:
     )
 
     return temperature_mix_report_sql("documents", _TEMP_BUDGET, alpha="0.5")
-
-
-QUERIES_C = {
-    "freqcap": q_freqcap,
-    "diversity": q_diversity,
-    "dedup_exact_stats": q_dedup_exact_stats,
-    "dedup_drop_exact": q_dedup_drop_exact,
-    "ngram_jaccard": q_ngram_jaccard,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_clusters_two_phase": q_dedup_clusters_two_phase,
-    "training_mix": q_training_mix,
-    "weighted_sample": q_weighted_sample,
-    "minhash_pairs": q_minhash_pairs,
-    "simhash_pairs": q_simhash_pairs,
-    "embedding_topk": q_embedding_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "lang_id": q_lang_id,
-    "text_quality": q_text_quality,
-    "doc_fingerprint": q_doc_fingerprint,
-    "multimodal_decode": q_multimodal_decode,
-    "audio_stats": q_audio_stats,
-    "embedding_outliers": q_embedding_outliers,
-    "pii_redaction": q_pii_redaction,
-    "pack_shards": q_pack_shards,
-    "doc_repetition": q_doc_repetition,
-    "decontam_split": q_decontam_split,
-    "incremental_dedup": q_incremental_dedup,
-    "tfidf_terms": q_tfidf_terms,
-    "span_dedup": q_span_dedup,
-    "snapshot_diff": q_snapshot_diff,
-    "dedup_canonical": q_dedup_canonical,
-    "normalized_dedup": q_normalized_dedup,
-    "token_mix": q_token_mix,
-    "fixed_k_sample": q_fixed_k_sample,
-    "quantized_ann": q_quantized_ann,
-    "ann_ivf_quantized": q_ann_ivf_quantized,
-    "semantic_dedup": q_semantic_dedup,
-    "leakage_split": q_leakage_split,
-    "dsir_select": q_dsir_select,
-    "vocab_oov": q_vocab_oov,
-    "source_overlap": q_source_overlap,
-    "lm_fluency": q_lm_fluency,
-    "bigram_fluency": q_bigram_fluency,
-    "chunk_windows": q_chunk_windows,
-    "image_near_dup": q_image_near_dup,
-    "bpe_merges": q_bpe_merges,
-    "bpe_encode": q_bpe_encode,
-    "hygiene_manifest": q_hygiene_manifest,
-    "contamination_profile": q_contamination_profile,
-    "temperature_mix": q_temperature_mix,
-    "corpus_cartography": q_corpus_cartography,
-}
-
-ORACLES_C = {
-    "freqcap": O_FREQCAP,
-    "diversity": _o_diversity(),
-    "dedup_exact_stats": O_DEDUP_EXACT_STATS,
-    "dedup_drop_exact": O_DEDUP_DROP_EXACT,
-    "ngram_jaccard": O_NGRAM_JACCARD,
-    "dedup_clusters": O_DEDUP_CLUSTERS,
-    "dedup_clusters_two_phase": O_DEDUP_CLUSTERS,
-    "training_mix": O_TRAINING_MIX,
-    "weighted_sample": _o_weighted_sample(),
-    "minhash_pairs": O_MINHASH_PAIRS,
-    "simhash_pairs": _o_simhash_pairs(),
-    "embedding_topk": O_EMBEDDING_TOPK,
-    "embedding_near_dup": O_EMBEDDING_NEAR_DUP,
-    "ann_lsh_topk": _o_ann_lsh_topk(),
-    "lang_id": O_LANG_ID,
-    "text_quality": O_TEXT_QUALITY,
-    "doc_fingerprint": O_DOC_FINGERPRINT,
-    "multimodal_decode": _o_multimodal_decode(),
-    "audio_stats": _o_audio_stats(),
-    "embedding_outliers": O_EMBEDDING_OUTLIERS,
-    "chunk_windows": _o_chunk_windows(),
-    "image_near_dup": _o_image_near_dup(),
-    "pii_redaction": _o_pii_redaction(),
-    "pack_shards": O_PACK_SHARDS,
-    "doc_repetition": _o_doc_repetition(),
-    "decontam_split": _o_decontam_split(),
-    "incremental_dedup": O_INCREMENTAL_DEDUP,
-    "tfidf_terms": _o_tfidf_terms(),
-    "span_dedup": _o_span_dedup(),
-    "snapshot_diff": _o_snapshot_diff(),
-    # {MARKERS} resolves here: _ALL_MARKERS_SQL is defined below the
-    # oracle template in this module
-    "dedup_canonical": O_DEDUP_CANONICAL.replace("{MARKERS}", _ALL_MARKERS_SQL),
-    "normalized_dedup": _o_normalized_dedup(),
-    "token_mix": _o_token_mix(),
-    "fixed_k_sample": O_FIXED_K_SAMPLE,
-    "quantized_ann": _o_quantized_ann(),
-    "leakage_split": _o_leakage_split(),
-    "vocab_oov": O_VOCAB_OOV,
-    "source_overlap": O_SOURCE_OVERLAP,
-    "contamination_profile": _o_contamination_profile(),
-    "temperature_mix": _o_temperature_mix(),
-}
-
-def resolve_lazy_oracles(oracles: dict) -> dict:
-    """Round 6 (advisor): the IVF oracle used to be generated AT MODULE
-    IMPORT — a DuckDB parquet scan + numpy Lloyd k-means on every import
-    of this module (bench runs, plan audits, tests that never touch
-    oracles), and an import-time crash if duckdb is unimportable while
-    the testdata exists. Now it resolves only where oracles are actually
-    consumed (__spark_entry__.oracle_sql / the gate runner); any failure
-    degrades that ONE query to the rows-only check instead of breaking
-    the module import."""
-    out = dict(oracles)
-    for name, gen in (
-        ("ann_ivf_topk", _o_ann_ivf_topk),
-        ("ann_ivf_quantized", _o_ann_ivf_quantized),
-        ("semantic_dedup", _o_semantic_dedup),
-        ("corpus_cartography", _o_corpus_cartography),
-        ("dsir_select", _o_dsir_select),
-        ("lm_fluency", _o_lm_fluency),
-        ("bigram_fluency", _o_bigram_fluency),
-        ("bpe_merges", _o_bpe_merges),
-        ("bpe_encode", _o_bpe_encode),
-        ("hygiene_manifest", _o_hygiene_manifest),
-    ):
-        try:
-            sql = gen()
-        except Exception:
-            sql = None
-        if sql is not None:
-            out[name] = sql
-    return out

@@ -46,7 +46,8 @@ def test_exactly_one_keeper_per_cluster(spark):
 
 
 def test_gate_parity_second_sf(spark):
-    from otel_logger_spark.queries_training import ORACLES_C, q_dedup_canonical
+    from otel_logger_spark.gates import GATES
+    from otel_logger_spark.queries_training import q_dedup_canonical
 
     got = sorted(map(tuple, q_dedup_canonical(spark, SF).collect()))
     con = duckdb.connect()
@@ -54,5 +55,5 @@ def test_gate_parity_second_sf(spark):
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
     )
     want = sorted(map(tuple,
-                      con.execute(ORACLES_C["dedup_canonical"]).fetchall()))
+                      con.execute(GATES["dedup_canonical"].oracle).fetchall()))
     assert got == want

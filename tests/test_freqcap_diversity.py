@@ -79,13 +79,14 @@ def test_diversity_group_with_no_ngrams(spark):
 
 def test_oracle_parity_second_sf(spark):
     from otel_logger_spark import queries_training as QT
+    from otel_logger_spark.gates import GATES
 
     con = duckdb.connect()
     con.sql(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
     )
     for name, q in (("freqcap", QT.q_freqcap), ("diversity", QT.q_diversity)):
-        sql = QT.ORACLES_C[name]
+        sql = GATES[name].oracle
         exp = {tuple(r) for r in con.sql(sql).fetchall()}
         cols = [d[0] for d in con.sql(sql).description]
         got = {tuple(r[c] for c in cols) for r in q(spark, SF).collect()}

@@ -1093,16 +1093,18 @@ def test_weighted_sample_overflow_guard(spark):
 
 def test_query_module_import_is_side_effect_free():
     """Round 6 (advisor): the IVF oracle (DuckDB scan + numpy Lloyd) must
-    NOT run at queries_training import — and with duckdb unimportable the
-    module still imports and oracle_sql() degrades that one query to the
-    rows-only check instead of crashing every bench/plan-audit import."""
+    NOT run at queries_training or gate-registry import — and with duckdb
+    unimportable both still import and oracle_sql() degrades that one
+    query to the rows-only check instead of crashing every
+    bench/plan-audit import."""
     import subprocess
     import sys
 
     code = (
         "import sys; sys.modules['duckdb'] = None;"
-        "import otel_logger_spark.queries_training as qt;"
-        "assert 'ann_ivf_topk' not in qt.ORACLES_C;"
+        "import otel_logger_spark.queries_training;"
+        "from otel_logger_spark.gates import GATES;"
+        "assert callable(GATES['ann_ivf_topk'].oracle);"
         "import __spark_entry__ as e; o = e.oracle_sql();"
         "assert 'ann_ivf_topk' not in o and 'pack_shards' in o"
     )

@@ -425,12 +425,15 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     from otel_logger_spark import queries as Q
-    from otel_logger_spark import queries_training as QT
+    from otel_logger_spark.gates import GATES
+    from otel_logger_spark.operators.rollups import conversation_metrics
+    from otel_logger_spark.operators.skew import conversation_metrics_salted
     from otel_logger_spark.pipeline import build_parsed
 
-    dfs = {
-        "parse_severity_counts": Q.q_parse_severity_counts(spark, sf_dir),
-        "full_pipeline_routed": build_parsed(
+    # the audited frames that are not gates; every other COMMENT key is
+    # built by its gate's builder
+    extra = {
+        "full_pipeline_routed": lambda: build_parsed(
             spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
                 "cast(event_id as string) conv_id",
                 "cast(event_id % 100 as int) turn_idx",
@@ -438,144 +441,19 @@ def main():
                 "cast(null as string) tool", "ts",
             )
         ),
-        "top_revenue_orders": Q.q_top_revenue_orders(spark, sf_dir),
-        "region_rollup": Q.q_region_rollup(spark, sf_dir),
-        "dedup_minhash": QT.q_minhash_pairs(spark, sf_dir),
-        "embedding_topk": QT.q_embedding_topk(spark, sf_dir),
-        "flush_window_counts": Q.q_flush_window_counts(spark, sf_dir),
-        "training_mix": QT.q_training_mix(spark, sf_dir),
+        "dedup_minhash": lambda: GATES["minhash_pairs"].build(spark, sf_dir),
+        "full_pipeline_metrics": lambda: conversation_metrics(
+            Q._routed(spark, sf_dir)
+        ),
+        "conversation_metrics_salted": lambda: conversation_metrics_salted(
+            Q._routed(spark, sf_dir)
+        ),
     }
-    from otel_logger_spark.operators.skew import conversation_metrics_salted
-    from otel_logger_spark.queries_extra import (
-        q_asof_latest_signup,
-        q_range_click_incidents,
-    )
-
-    from otel_logger_spark.queries_extra import q_log_templates
-    from otel_logger_spark.queries_training import q_weighted_sample
-
-    dfs["asof_latest_signup"] = q_asof_latest_signup(spark, sf_dir)
-    dfs["range_click_incidents"] = q_range_click_incidents(spark, sf_dir)
-    dfs["log_templates"] = q_log_templates(spark, sf_dir)
-    dfs["weighted_sample"] = q_weighted_sample(spark, sf_dir)
-    from otel_logger_spark.queries_extra import q_rate_spikes
-    from otel_logger_spark.queries_training import q_pack_shards
-
-    dfs["rate_spikes"] = q_rate_spikes(spark, sf_dir)
-    dfs["pack_shards"] = q_pack_shards(spark, sf_dir)
-    from otel_logger_spark.queries_extra import q_zorder_buckets
-    from otel_logger_spark.queries_training import q_pii_redaction
-
-    dfs["zorder_buckets"] = q_zorder_buckets(spark, sf_dir)
-    dfs["pii_redaction"] = q_pii_redaction(spark, sf_dir)
-    from otel_logger_spark.queries_training import (
-        q_decontam_split,
-        q_incremental_dedup,
-    )
-
-    dfs["decontam_split"] = q_decontam_split(spark, sf_dir)
-    dfs["incremental_dedup"] = q_incremental_dedup(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_tfidf_terms
-
-    dfs["tfidf_terms"] = q_tfidf_terms(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_span_dedup
-
-    dfs["span_dedup"] = q_span_dedup(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_snapshot_diff
-
-    dfs["snapshot_diff"] = q_snapshot_diff(spark, sf_dir)
-    from otel_logger_spark.queries_extra import q_cms_counts
-
-    dfs["cms_counts"] = q_cms_counts(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_normalized_dedup
-
-    dfs["normalized_dedup"] = q_normalized_dedup(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_token_mix
-
-    dfs["token_mix"] = q_token_mix(spark, sf_dir)
-    from otel_logger_spark.queries_extra import q_funnel
-
-    dfs["funnel"] = q_funnel(spark, sf_dir)
-    from otel_logger_spark.queries_training import (
-        q_fixed_k_sample,
-        q_quantized_ann,
-    )
-
-    dfs["fixed_k_sample"] = q_fixed_k_sample(spark, sf_dir)
-    dfs["quantized_ann"] = q_quantized_ann(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_ann_ivf_quantized
-
-    dfs["ann_ivf_quantized"] = q_ann_ivf_quantized(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_semantic_dedup
-
-    dfs["semantic_dedup"] = q_semantic_dedup(spark, sf_dir)
-    from otel_logger_spark.queries_training import (
-        q_dsir_select,
-        q_leakage_split,
-        q_vocab_oov,
-    )
-
-    from otel_logger_spark.queries_training import q_source_overlap
-
-    dfs["source_overlap"] = q_source_overlap(spark, sf_dir)
-    dfs["leakage_split"] = q_leakage_split(spark, sf_dir)
-    dfs["dsir_select"] = q_dsir_select(spark, sf_dir)
-    dfs["vocab_oov"] = q_vocab_oov(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_lm_fluency
-
-    dfs["lm_fluency"] = q_lm_fluency(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_contamination_profile
-
-    dfs["contamination_profile"] = q_contamination_profile(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_diversity, q_freqcap
-
-    dfs["freqcap"] = q_freqcap(spark, sf_dir)
-    dfs["diversity"] = q_diversity(spark, sf_dir)
-    from otel_logger_spark.queries_training import (
-        q_bigram_fluency,
-        q_chunk_windows,
-        q_corpus_cartography,
-        q_embedding_outliers,
-        q_image_near_dup,
-        q_temperature_mix,
-    )
-
-    dfs["temperature_mix"] = q_temperature_mix(spark, sf_dir)
-    dfs["corpus_cartography"] = q_corpus_cartography(spark, sf_dir)
-    dfs["embedding_outliers"] = q_embedding_outliers(spark, sf_dir)
-    dfs["bigram_fluency"] = q_bigram_fluency(spark, sf_dir)
-    dfs["chunk_windows"] = q_chunk_windows(spark, sf_dir)
-    dfs["image_near_dup"] = q_image_near_dup(spark, sf_dir)
-    from otel_logger_spark.queries_training import q_hygiene_manifest
-
-    dfs["hygiene_manifest"] = q_hygiene_manifest(spark, sf_dir)
-    # round 9 (verdict r8 #3): the 11 bench queries that had no audit entry
-    from otel_logger_spark.operators.rollups import conversation_metrics
-    from otel_logger_spark.queries_extra import q_exact_percentiles
-    from otel_logger_spark.queries_training import (
-        q_audio_stats,
-        q_bpe_encode,
-        q_dedup_canonical,
-        q_doc_repetition,
-        q_text_quality,
-    )
-
-    dfs["dedup_canonical"] = q_dedup_canonical(spark, sf_dir)
-    dfs["exact_percentiles"] = q_exact_percentiles(spark, sf_dir)
-    dfs["bpe_encode"] = q_bpe_encode(spark, sf_dir)
-    dfs["audio_stats"] = q_audio_stats(spark, sf_dir)
-    dfs["conversation_rollup"] = Q.q_conversation_rollup(spark, sf_dir)
-    dfs["doc_repetition"] = q_doc_repetition(spark, sf_dir)
-    dfs["text_quality"] = q_text_quality(spark, sf_dir)
-    dfs["multiline_entry_stats"] = Q.q_multiline_entry_stats(spark, sf_dir)
-    dfs["pricing_summary"] = Q.q_pricing_summary(spark, sf_dir)
-    dfs["window_turn_rollup"] = Q.q_window_turn_rollup(spark, sf_dir)
-    dfs["full_pipeline_metrics"] = conversation_metrics(
-        Q._routed(spark, sf_dir)
-    )
-    dfs["conversation_metrics_salted"] = conversation_metrics_salted(
-        Q._routed(spark, sf_dir)
-    )
+    dfs = {
+        name: GATES[name].build(spark, sf_dir) if name in GATES
+        else extra[name]()
+        for name in COMMENT
+    }
 
     out = [
         "# BENCH/PLANS — physical-plan audit of the headline queries\n",
