@@ -6,9 +6,10 @@ engine.
 
 Reference flags honored (main.go:34-47): --json-prefix,
 --timestamp-fields/--level-fields/--message-fields (repeatable or
-comma-separated), --continuation-pattern, --batch-size, --flush-interval,
---timeout (per-sink export deadline, A3), --passthrough-stdout/
---passthrough-stderr.
+comma-separated), --continuation-pattern, --timeout (per-sink export
+deadline, A3), --passthrough-stdout/--passthrough-stderr. --batch-size and
+--flush-interval are accepted and validated (malformed values raise) but
+drive nothing: see the config.py table.
 """
 
 from __future__ import annotations

@@ -12,18 +12,19 @@ run against this engine:
 | --level-fields            | level_fields                  |
 | --message-fields          | message_fields                |
 | --continuation-pattern    | continuation_pattern          |
-| --batch-size              | batch_size (*)                |
-| --flush-interval          | flush_interval (*)            |
+| --batch-size              | (*)                           |
+| --flush-interval          | (*)                           |
 | --timeout                 | per-sink export deadline      |
 |                           | (<= 0 disables, as in OTel)   |
 | --passthrough-stdout/err  | passthrough_raw_sink          |
 | positional command        | (n/a: input table plays the   |
 |                           |  wrapped process's streams)   |
 
-(*) parsed and validated with the reference's syntax, but no engine path
-reads them yet: the Arrow batch size is a session setting
-(session.py) and streaming triggers are set by run_streaming_pipeline's
-own arguments.
+(*) accepted and validated with the reference's syntax, so reference
+command lines parse and malformed values raise, but not stored: the Arrow
+batch size is a session setting (session.py) and streaming triggers are
+set by run_streaming_pipeline's own arguments (max_files_per_trigger,
+processing_time).
 """
 
 from __future__ import annotations
@@ -118,8 +119,6 @@ class PipelineConfig:
     message_fields: tuple[str, ...] = DEFAULT_MESSAGE_FIELDS
     continuation_pattern: str = DEFAULT_CONTINUATION_PATTERN
     coalesce_multiline: bool = True
-    batch_size: int = 10_000  # --batch-size; not read yet (see table above)
-    flush_interval: str = "5 seconds"  # --flush-interval; not read yet
     # --timeout (main.go:35 -> WithExportTimeout, main.go:357): per-sink
     # export deadline. None = no deadline — the reference's 10s default
     # suits OTLP RPC exports; a distributed parquet write's natural scale
@@ -160,10 +159,10 @@ class PipelineConfig:
                 cfg.continuation_pattern = argv[i + 1]
                 i += 2
             elif a == "--batch-size":
-                cfg.batch_size = int(argv[i + 1])
+                int(argv[i + 1])  # validated only (see table above)
                 i += 2
             elif a == "--flush-interval":
-                cfg.flush_interval = go_duration_to_interval(argv[i + 1])
+                go_duration_to_interval(argv[i + 1])  # validated only
                 i += 2
             elif a == "--timeout":
                 # reference semantics: a non-positive export timeout means

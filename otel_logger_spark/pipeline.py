@@ -85,8 +85,6 @@ def run_pipeline(
     input_path: str,
     out_dir: str,
     run_id: str = "run-0",
-    coalesce_multiline: bool = True,
-    repartition: int | None = None,
     config=None,
 ) -> dict:
     """Execute the full pipeline and commit all sinks; returns the lineage
@@ -96,12 +94,7 @@ def run_pipeline(
     from otel_logger_spark.io import read_table
 
     transcripts = read_table(spark, input_path)
-    routed = build_parsed(
-        transcripts,
-        coalesce_multiline=coalesce_multiline,
-        repartition=repartition,
-        config=config,
-    )
+    routed = build_parsed(transcripts, config=config)
     metrics = conversation_metrics(routed)
     return write_routed_sinks(
         routed,

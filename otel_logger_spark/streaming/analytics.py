@@ -1,23 +1,33 @@
-"""Streaming variants of the two batch-analytics operators that summarize
-event VOLUME — log template mining (functions/templates.py) and rate-spike
-detection (operators/anomaly.py) — using the same partials-then-finalize
-pattern as the pipeline's conversation_metrics sink
-(streaming/pipeline.write_streaming_batch): each micro-batch writes a
-DECOMPOSABLE partial aggregate into its own ``batchid=<id>`` directory
-(overwrite => exactly-once per (sink, batchId) on top of the checkpoint's
-at-least-once redelivery), and a finalizer re-aggregates the partials into
-exactly the batch operator's answer — row-for-row, whatever the
-micro-batch boundaries were.
+"""Sink builders for the streaming analytics, and their finalizers.
 
-Why partials, not stateful streaming aggregation: both finalized tables
-are unbounded-history summaries (a template's distinct-conversation count,
+Each builder maps one micro-batch frame to ``{sink_name: DataFrame}`` of
+DECOMPOSABLE partials — the same partials-then-finalize pattern as the
+pipeline's conversation_metrics sink (streaming/pipeline.routed_sinks).
+streaming/pipeline.start_batch_sinks runs a builder over a stream and
+write_batch_sinks lands each partial in its own ``batchid=<id>`` directory
+(overwrite => exactly-once per (sink, batchId) on top of the checkpoint's
+at-least-once redelivery); a finalizer (``read_*``) re-aggregates the
+partials into exactly the batch operator's answer — row-for-row, whatever
+the micro-batch boundaries were. Compose a query as::
+
+    start_batch_sinks(read_stream(spark, in_dir, DOCUMENTS_SCHEMA), out, ckpt,
+                      lambda b: oov_sinks(b, vocab))
+
+Volume analytics over the transcript stream (analytics_sinks): log
+template mining (functions/templates.py), rate-spike detection
+(operators/anomaly.py) and the count-min sketch (functions/cms.py).
+Document analytics over a documents stream: contamination, OOV coverage,
+hygiene manifest and n-gram diversity.
+
+Why partials, not stateful streaming aggregation: the finalized volume
+tables are unbounded-history summaries (a template's distinct-conversation count,
 a bucket's trailing-24h baseline). Keeping them in streaming state would
 grow without bound and still be unreadable mid-stream; per-batch partials
 are bounded (distinct keys per batch), cheap (map-side combine inside the
 micro-batch), and the finalize is an ordinary batch query over the sink —
 run it whenever a fresh table is wanted.
 
-Partial schemas (both tiny next to event volume):
+Volume partial schemas (tiny next to event volume):
 - templates: (template, conv_id, n) — per-conversation counts, because
   ``n_convs`` (COUNT DISTINCT) is not sum-decomposable but IS re-derivable
   from per-(template, conv) partials;
@@ -67,10 +77,8 @@ def rate_partials(
     )
 
 
-def write_analytics_batch(
+def analytics_sinks(
     batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
     text_col: str = "text",
     conv_col: str = "conv_id",
     ts_col: str = "ts",
@@ -79,62 +87,19 @@ def write_analytics_batch(
     cms_key_col: str | None = "conv_id",
     cms_d: int = 4,
     cms_w: int = 512,
-) -> None:
-    """One micro-batch's analytics partials, batchId-idempotent. The CMS
+) -> dict[str, DataFrame]:
+    """One micro-batch's volume partials over its non-empty turns. The CMS
     partial is the per-batch sketch itself (<= d*w cells): cms_merge's
     cell-wise-sum law makes the union of batch sketches EXACTLY the
     sketch of the union, whatever the micro-batch boundaries were."""
-    batch_df = batch_df.persist()
-    try:
-        template_partials(batch_df, text_col, conv_col).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, TEMPLATE_SINK, f"batchid={batch_id}"))
-        rate_partials(batch_df, ts_col, group_cols, bucket_seconds).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, RATE_SINK, f"batchid={batch_id}"))
-        if cms_key_col:
-            cms_sketch(batch_df, cms_key_col, cms_d, cms_w).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, CMS_SINK, f"batchid={batch_id}"))
-    finally:
-        batch_df.unpersist()
-
-
-def run_streaming_analytics(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
-    group_cols: tuple[str, ...] = ("role",),
-    bucket_seconds: int = 3600,
-    cms_key_col: str | None = "conv_id",
-):
-    """Run the analytics partial sinks over the live transcript stream;
-    returns the started query. Same trigger semantics as
-    run_streaming_pipeline (availableNow drains then stops)."""
-    from otel_logger_spark.streaming.pipeline import read_transcript_stream
-
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    src = stream.filter(F.length("text") > 0)
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        write_analytics_batch(
-            batch_df, batch_id, out_dir,
-            group_cols=group_cols, bucket_seconds=bucket_seconds,
-            cms_key_col=cms_key_col,
-        )
-
-    writer = src.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    src = batch_df.filter(F.length(text_col) > 0)
+    sinks = {
+        TEMPLATE_SINK: template_partials(src, text_col, conv_col),
+        RATE_SINK: rate_partials(src, ts_col, group_cols, bucket_seconds),
+    }
+    if cms_key_col:
+        sinks[CMS_SINK] = cms_sketch(src, cms_key_col, cms_d, cms_w)
+    return sinks
 
 
 def read_cms_sketch(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -204,123 +169,45 @@ DOCUMENTS_SCHEMA = (
 )
 
 
-def read_documents_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
-
-
-def write_contam_batch(
+def contam_sinks(
     batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
     bench: DataFrame,
     n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
     group_col: str = "source",
     use_hash: bool = False,
-) -> None:
-    """One micro-batch's per-doc contamination partial, batchId-idempotent."""
+) -> dict[str, DataFrame]:
+    """One micro-batch's per-doc contamination partial (see above: a doc
+    lives wholly in one micro-batch, so the per-doc rows union losslessly)."""
     from otel_logger_spark.functions.decontam import contamination_per_doc
 
-    contamination_per_doc(
-        batch_df, bench, n, id_col, text_col, group_col, use_hash
-    ).write.mode("overwrite").parquet(
-        os.path.join(out_dir, CONTAM_SINK, f"batchid={batch_id}")
-    )
-
-
-def run_streaming_contamination(
-    spark: SparkSession,
-    input_dir: str,
-    bench: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
-    n: int = 13,
-    group_col: str = "source",
-    use_hash: bool = False,
-):
-    """Contamination partials over a live documents stream; returns the
-    started query (availableNow drains then stops, like the pipeline)."""
-    stream = read_documents_stream(spark, input_dir, max_files_per_trigger)
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        write_contam_batch(
-            batch_df, batch_id, out_dir, bench,
-            n=n, group_col=group_col, use_hash=use_hash,
+    return {
+        CONTAM_SINK: contamination_per_doc(
+            batch_df, bench, n, id_col, text_col, group_col, use_hash
         )
-
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    }
 
 
 OOV_SINK = "oov_partials"
 
 
-def write_oov_batch(
+def oov_sinks(
     batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
     vocab: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     group_col: str = "lang",
-) -> None:
-    """One micro-batch's per-doc OOV partial against the PINNED
-    vocabulary, batchId-idempotent (overwrite of batchid=<id> makes
-    redelivery converge to the same bytes)."""
+) -> dict[str, DataFrame]:
+    """One micro-batch's per-doc OOV partial against a PINNED tokenizer
+    vocabulary (the production monitoring shape: the vocab is a build-time
+    artifact; what streams is the corpus). A doc lives wholly in one
+    micro-batch, so per-doc (group, n_tokens, n_oov) rows are exact
+    partials and the finalizer's group sums are associative across
+    batches."""
     from otel_logger_spark.functions.vocab import with_oov_stats
 
-    with_oov_stats(
-        batch_df, vocab, text_col, id_col, (group_col,)
-    ).write.mode("overwrite").parquet(
-        os.path.join(out_dir, OOV_SINK, f"batchid={batch_id}")
-    )
-
-
-def run_streaming_oov(
-    spark: SparkSession,
-    input_dir: str,
-    vocab: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
-    group_col: str = "lang",
-):
-    """OOV-coverage partials over a live documents stream against a
-    pinned tokenizer vocabulary (the production monitoring shape: the
-    vocab is a build-time artifact; what streams is the corpus). A doc
-    lives wholly in one micro-batch, so per-doc (group, n_tokens, n_oov)
-    rows are exact partials and the finalizer's group sums are
-    associative across batches. Returns the started query."""
-    stream = read_documents_stream(spark, input_dir, max_files_per_trigger)
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        write_oov_batch(batch_df, batch_id, out_dir, vocab, group_col=group_col)
-
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return {OOV_SINK: with_oov_stats(batch_df, vocab, text_col, id_col, (group_col,))}
 
 
 def read_oov_report(
@@ -339,69 +226,28 @@ def read_oov_report(
 HYGIENE_SINK = "hygiene_partials"
 
 
-def write_hygiene_batch(
+def hygiene_sinks(
     batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
     uni_tab: dict,
     oov_nll: int,
     quality_min_milli: int,
     nll_max_micro: int,
     rep_thresholds_milli: dict | None = None,
     group_col: str = "lang",
-) -> None:
-    """One micro-batch's per-doc hygiene manifest against the PINNED
-    rule parameters (the NLL table is a build-time artifact, like the
-    streaming-OOV vocabulary), batchId-idempotent via batchid=<id>
-    overwrite. Per-doc flag rows are exact partials: a doc lives wholly
-    in one micro-batch and the report is pure flag sums."""
+) -> dict[str, DataFrame]:
+    """One micro-batch's per-doc hygiene manifest against PINNED rule
+    parameters (the NLL table is a build-time artifact, like the
+    streaming-OOV vocabulary). Per-doc flag rows are exact partials: a doc
+    lives wholly in one micro-batch and the report is pure per-group flag
+    sums, associative across batches."""
     from otel_logger_spark.functions.hygiene import hygiene_manifest
 
-    hygiene_manifest(
-        batch_df, uni_tab, oov_nll, quality_min_milli, nll_max_micro,
-        rep_thresholds_milli, carry_cols=(group_col,),
-    ).write.mode("overwrite").parquet(
-        os.path.join(out_dir, HYGIENE_SINK, f"batchid={batch_id}")
-    )
-
-
-def run_streaming_hygiene(
-    spark: SparkSession,
-    input_dir: str,
-    uni_tab: dict,
-    oov_nll: int,
-    quality_min_milli: int,
-    nll_max_micro: int,
-    out_dir: str,
-    checkpoint_dir: str,
-    rep_thresholds_milli: dict | None = None,
-    group_col: str = "lang",
-    available_now: bool = True,
-    processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """Hygiene-manifest partials over a live documents stream — the
-    monitoring shape for an ingest pipeline: rule parameters are pinned
-    build-time artifacts, the corpus streams, and the finalizer's
-    per-group flag sums are associative across batches. Returns the
-    started query."""
-    stream = read_documents_stream(spark, input_dir, max_files_per_trigger)
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        write_hygiene_batch(
-            batch_df, batch_id, out_dir, uni_tab, oov_nll,
-            quality_min_milli, nll_max_micro, rep_thresholds_milli,
-            group_col,
+    return {
+        HYGIENE_SINK: hygiene_manifest(
+            batch_df, uni_tab, oov_nll, quality_min_milli, nll_max_micro,
+            rep_thresholds_milli, carry_cols=(group_col,),
         )
-
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    }
 
 
 def read_hygiene_report(
@@ -410,8 +256,6 @@ def read_hygiene_report(
     """Finalize the hygiene sink: per-group flag sums over the union of
     all micro-batch per-doc manifests — row-for-row equal to batch
     hygiene_report with the same pinned parameters (pinned by pytest)."""
-    from pyspark.sql import functions as F
-
     m = spark.read.parquet(os.path.join(out_dir, HYGIENE_SINK))
     return m.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -426,58 +270,19 @@ DIVERSITY_COUNTS_SINK = "diversity_counts"
 DIVERSITY_DIGESTS_SINK = "diversity_digests"
 
 
-def write_diversity_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    n: int = 3,
-    group_col: str = "source",
-) -> None:
-    """One micro-batch's diversity partials: summable counts + the
-    batch-DISTINCT digest set (the exact-distinct decomposition —
-    distinct-of-union == distinct). Both sinks batchId-idempotent via
-    batchid=<id> overwrite."""
+def diversity_sinks(
+    batch_df: DataFrame, n: int = 3, group_col: str = "source"
+) -> dict[str, DataFrame]:
+    """One micro-batch's diversity partials. Unlike the contamination/OOV
+    partials (pure sums), the distinct-gram metrics need the exact-distinct
+    decomposition: summable counts plus the batch-DISTINCT (group, kind,
+    digest) set — bounded by the batch's vocabulary, never its token
+    stream — and the finalizer re-distincts the union (distinct-of-union
+    == distinct)."""
     from otel_logger_spark.functions.diversity import diversity_partials
 
     counts, digests = diversity_partials(batch_df, n, group_col)
-    counts.write.mode("overwrite").parquet(
-        os.path.join(out_dir, DIVERSITY_COUNTS_SINK, f"batchid={batch_id}")
-    )
-    digests.write.mode("overwrite").parquet(
-        os.path.join(out_dir, DIVERSITY_DIGESTS_SINK, f"batchid={batch_id}")
-    )
-
-
-def run_streaming_diversity(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    n: int = 3,
-    group_col: str = "source",
-    available_now: bool = True,
-    processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """N-gram diversity partials over a live documents stream. Unlike
-    the contamination/OOV partials (pure sums), the distinct-gram
-    metrics need the exact-distinct decomposition: each batch ships its
-    DISTINCT (group, kind, digest) set — bounded by the batch's
-    vocabulary, never its token stream — and the finalizer re-distincts
-    the union. Returns the started query."""
-    stream = read_documents_stream(spark, input_dir, max_files_per_trigger)
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        write_diversity_batch(batch_df, batch_id, out_dir, n, group_col)
-
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return {DIVERSITY_COUNTS_SINK: counts, DIVERSITY_DIGESTS_SINK: digests}
 
 
 def read_diversity_report(

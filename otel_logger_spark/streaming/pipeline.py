@@ -1,19 +1,23 @@
-"""Structured Streaming variant of the pipeline.
+"""Structured Streaming variant of the pipeline, and the one micro-batch
+fan-out every streaming query shares.
 
 The reference is a true streaming program with batch+interval flushing and
 no event-time windowing (SURVEY.md §2.8; BatchProcessor
 /root/reference/main.go:354-358). Mapping:
 
-- unbounded source  -> file-source readStream over the transcripts dir
-  (kafka at production scale — same plan after the source swap)
+- unbounded source  -> file-source readStream over the input dir
+  (read_stream; kafka at production scale — same plan after the source swap)
 - batch/flush       -> micro-batch trigger (processingTime ~ FlushInterval,
   maxFilesPerTrigger ~ BatchSize) or availableNow for drain-then-exit
 - ForceFlush at EOF -> trigger(availableNow=True) + awaitTermination
-- multi-sink fan-out-> foreachBatch: persist the parsed micro-batch once,
-  one filtered write per sink into a batchId-keyed subdirectory — skipped
-  when already committed, so a retried micro-batch (failure between sink
-  writes) never double-appends: exactly-once per (sink, batchId) on top of
-  the streaming checkpoint's at-least-once redelivery
+- multi-sink fan-out-> start_batch_sinks / write_batch_sinks: a streaming
+  query is a SINK BUILDER, a function from the micro-batch frame to
+  {sink_name: DataFrame} (routed_sinks here, the analytics builders in
+  streaming/analytics.py). Each sink lands in a batchId-keyed
+  subdirectory with overwrite, so a retried micro-batch (failure between
+  sink writes) rewrites instead of double-appending: exactly-once per
+  (sink, batchId) on top of the streaming checkpoint's at-least-once
+  redelivery
 - flush-interval metrics -> watermarked 5s tumbling-window counts
 
 Multiline coalescing: ``coalesce=True`` routes the stream through the
@@ -27,9 +31,11 @@ entry (no coalescing), for line-structured inputs that need none.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from otel_logger_spark.functions.parse import with_parsed
 from otel_logger_spark.pipeline import parse_enrich_route
@@ -66,10 +72,15 @@ def install_graceful_shutdown(query, signals=None):
     return {s: _signal.signal(s, _handler) for s in signals}
 
 
-def read_transcript_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
+def read_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema: StructType | str = TRANSCRIPT_SCHEMA,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
+    """Parquet file-source stream over ``input_dir`` (transcripts by
+    default; the document analytics pass analytics.DOCUMENTS_SCHEMA)."""
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_dir)
@@ -102,16 +113,10 @@ STREAM_OUT_COLS = [
 ]
 
 
-def write_streaming_batch(batch_df: DataFrame, batch_id: int, out_dir: str):
-    """One micro-batch's fan-out: the SAME FOUR sinks as the batch pipeline
-    (logs / error / tool_call / conversation_metrics — A4 parity with
-    executeCommand's terminal record, /root/reference/main.go:577-591).
-
-    Exactly-once per (sink, batchId): each micro-batch lands in its own
-    batchid=<id> partition with overwrite, so a retried batch (failure
-    between sink writes) rewrites its partitions instead of
-    double-appending — idempotent on top of the streaming checkpoint's
-    at-least-once redelivery.
+def routed_sinks(batch_df: DataFrame) -> dict[str, DataFrame]:
+    """The pipeline's sink builder: the SAME FOUR sinks as the batch
+    pipeline (logs / error / tool_call / conversation_metrics — A4 parity
+    with executeCommand's terminal record, /root/reference/main.go:577-591).
 
     conversation_metrics is written as PER-BATCH PARTIALS: every metric
     field is a decomposable aggregate (sums / mins / maxes), so
@@ -121,23 +126,75 @@ def write_streaming_batch(batch_df: DataFrame, batch_id: int, out_dir: str):
     streaming state."""
     from otel_logger_spark.operators.rollups import conversation_metrics
 
-    batch_df = batch_df.persist()
+    base = batch_df.select(*STREAM_OUT_COLS)
+    return {
+        "logs": base,
+        "error": base.filter(batch_df["is_error"]),
+        "tool_call": base.filter(batch_df["is_tool_call"]),
+        "conversation_metrics": conversation_metrics(batch_df),
+    }
+
+
+def write_batch_sinks(
+    batch_df: DataFrame,
+    batch_id: int,
+    out_dir: str,
+    sinks: Callable[[DataFrame], dict[str, DataFrame]],
+) -> None:
+    """One micro-batch's fan-out: write every frame of ``sinks(batch_df)``
+    to ``out_dir/<sink>/batchid=<batch_id>``.
+
+    Exactly-once per (sink, batchId): each micro-batch lands in its own
+    batchid=<id> partition with overwrite, so a retried batch (failure
+    between sink writes) rewrites its partitions instead of
+    double-appending — idempotent on top of the streaming checkpoint's
+    at-least-once redelivery.
+
+    The batch is persisted only when more than one sink reads it, so its
+    source is computed once per micro-batch either way. The sink frames
+    are built before persist(): their writes still plan over the cached
+    relation, because cache substitution happens when each write is
+    planned."""
+    frames = sinks(batch_df)
+    shared = len(frames) > 1
+    if shared:
+        batch_df.persist()
     try:
-        base = batch_df.select(*STREAM_OUT_COLS)
-        for sink, flt in (
-            ("logs", None),
-            ("error", batch_df["is_error"]),
-            ("tool_call", batch_df["is_tool_call"]),
-        ):
-            df = base if flt is None else base.filter(flt)
+        for sink, df in frames.items():
             df.write.mode("overwrite").parquet(
                 os.path.join(out_dir, sink, f"batchid={batch_id}")
             )
-        conversation_metrics(batch_df).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "conversation_metrics", f"batchid={batch_id}")
-        )
     finally:
-        batch_df.unpersist()
+        if shared:
+            batch_df.unpersist()
+
+
+def start_batch_sinks(
+    stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    sinks: Callable[[DataFrame], dict[str, DataFrame]],
+    available_now: bool = True,
+    processing_time: str | None = None,
+):
+    """Start ``stream`` with write_batch_sinks as its foreachBatch;
+    returns the started query.
+
+    availableNow=True drains everything then stops (the ForceFlush-at-EOF
+    semantics, main.go:652-655); processing_time mirrors FlushInterval for
+    continuous mode."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int):
+        write_batch_sinks(batch_df, batch_id, out_dir, sinks)
+
+    writer = stream.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 def read_conversation_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -172,11 +229,9 @@ def run_streaming_pipeline(
     dedup: str | None = None,
     dedup_horizon: str = "30 seconds",
 ):
-    """Fan-out streaming write via foreachBatch; returns the started query.
-
-    availableNow=True drains everything then stops (the ForceFlush-at-EOF
-    semantics, main.go:652-655); processing_time mirrors FlushInterval for
-    continuous mode. ``coalesce=True`` enables the cross-batch stateful
+    """The streaming pipeline: routed_sinks over the transcript stream,
+    started by start_batch_sinks (same trigger semantics); returns the
+    started query. ``coalesce=True`` enables the cross-batch stateful
     multiline coalescer (entries flush on close or after ``idle_flush_ms``
     of conversation idleness — the ForceFlush analogue).
 
@@ -188,7 +243,7 @@ def run_streaming_pipeline(
       exactly-once rows in all four sinks;
     - ``"content"``: state keyed by sha2(text) — corpus-ingest semantics
       (identical text dropped even under fresh ids)."""
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
+    stream = read_stream(spark, input_dir, max_files_per_trigger=max_files_per_trigger)
     if dedup == "exact":
         from otel_logger_spark.streaming.dedup import dedup_stream_exact
 
@@ -208,18 +263,9 @@ def run_streaming_pipeline(
         coalesce=coalesce,
         idle_flush_ms=idle_flush_ms,
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        write_streaming_batch(batch_df, batch_id, out_dir)
-
-    writer = routed.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batch_sinks(
+        routed, out_dir, checkpoint_dir, routed_sinks, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def streaming_session_stats(

@@ -61,6 +61,8 @@ def test_crlf_log_lines_drop_cr(spark, tmp_path):
 
 
 def test_config_reference_args():
+    import pytest
+
     cfg = PipelineConfig.from_reference_args(
         [
             "--json-prefix", r"^PREFIX\s*",
@@ -78,9 +80,12 @@ def test_config_reference_args():
     assert cfg.level_fields == ("severity", "priority")  # repeatable flag accumulates
     assert cfg.message_fields == ("message", "msg", "text", "content")  # defaults kept
     assert cfg.continuation_pattern == r"^\.\.\."
-    assert cfg.batch_size == 500
-    assert cfg.flush_interval == "1000 milliseconds"
     assert cfg.passthrough_raw_sink
+    # --batch-size / --flush-interval parse (reference command lines stay
+    # valid) and are validated, but no engine path reads them
+    for bad in (["--batch-size", "x"], ["--flush-interval", "-1s"]):
+        with pytest.raises(ValueError):
+            PipelineConfig.from_reference_args(bad)
 
 
 def test_config_go_durations():

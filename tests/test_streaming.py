@@ -4,15 +4,19 @@ counts must match the batch flush windows."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from otel_logger_spark.functions.parse import with_parsed
 from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
 from otel_logger_spark.operators.route import with_routing
+from otel_logger_spark.streaming.analytics import DOCUMENTS_SCHEMA, diversity_sinks
 from otel_logger_spark.streaming.pipeline import (
-    read_transcript_stream,
+    read_stream,
+    routed_sinks,
     run_streaming_pipeline,
     streaming_flush_window_counts,
+    write_batch_sinks,
 )
 from otel_logger_spark.synth import synthesize_pandas
 
@@ -59,7 +63,7 @@ def test_streaming_matches_batch(spark, tmp_path):
 
 def test_streaming_flush_windows(spark, tmp_path):
     in_dir, _ = _write_input(tmp_path)
-    stream = read_transcript_stream(spark, in_dir)
+    stream = read_stream(spark, in_dir)
     agg = streaming_flush_window_counts(stream)
     q = (
         agg.writeStream.outputMode("complete")
@@ -89,7 +93,7 @@ def test_streaming_session_stats_matches_batch(spark, tmp_path):
     from otel_logger_spark.streaming.pipeline import streaming_session_stats
 
     in_dir, _ = _write_input(tmp_path)
-    stream = read_transcript_stream(spark, in_dir)
+    stream = read_stream(spark, in_dir)
     q = (
         streaming_session_stats(stream, gap="5 minutes")
         .writeStream.outputMode("complete")
@@ -160,25 +164,53 @@ def test_streaming_batch_retry_idempotent(spark, tmp_path):
     """A retried micro-batch (same batchId redelivered after a failure
     between sink writes) must rewrite its partitions, not double-append —
     for all FOUR sinks including conversation_metrics."""
-    from otel_logger_spark.streaming.pipeline import write_streaming_batch
-
     in_dir, _ = _write_input(tmp_path, n_convs=10)
     out = str(tmp_path / "out_r")
     batch = spark.read.parquet(in_dir).filter(F.length("text") > 0)
     routed = with_routing(enrich_tool(enrich_severity(with_parsed(batch))))
 
-    write_streaming_batch(routed, 0, out)
+    write_batch_sinks(routed, 0, out, routed_sinks)
     counts1 = {
         s: spark.read.parquet(os.path.join(out, s)).count()
         for s in ("logs", "error", "tool_call", "conversation_metrics")
     }
-    write_streaming_batch(routed, 0, out)  # the retry
+    write_batch_sinks(routed, 0, out, routed_sinks)  # the retry
     counts2 = {
         s: spark.read.parquet(os.path.join(out, s)).count()
         for s in ("logs", "error", "tool_call", "conversation_metrics")
     }
     assert counts1 == counts2
     assert counts1["logs"] > 0 and counts1["conversation_metrics"] > 0
+
+
+@pytest.mark.parametrize("builder", ["routed", "diversity"])
+def test_batch_sinks_compute_source_once(spark, tmp_path, builder):
+    """A micro-batch that feeds several sinks computes its source once: a
+    counting Python-UDF filter on the batch frame sees each row once, not
+    once per sink that reads it."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def counted(_):
+        acc.add(1)
+        return True
+
+    if builder == "routed":
+        in_dir, _ = _write_input(tmp_path, n_convs=10)
+        src = spark.read.parquet(in_dir).filter(F.length("text") > 0)
+        batch = with_routing(enrich_tool(enrich_severity(with_parsed(src))))
+        sinks = routed_sinks
+    else:
+        batch = spark.createDataFrame(
+            [(i, f"s{i % 3}", "en", f"w{i % 5} w{i % 7} w{i % 4} x") for i in range(60)],
+            DOCUMENTS_SCHEMA,
+        )
+        sinks = diversity_sinks
+    n_rows = batch.count()
+    batch = batch.filter(counted(F.col(batch.columns[0])))
+    write_batch_sinks(batch, 0, str(tmp_path / "out"), sinks)
+    assert len(sinks(batch)) > 1
+    assert acc.value == n_rows > 0
 
 
 def test_sigterm_graceful_drain(tmp_path):

@@ -11,9 +11,14 @@ from pyspark.sql import functions as F
 from otel_logger_spark.functions.templates import template_counts
 from otel_logger_spark.operators.anomaly import rate_spikes
 from otel_logger_spark.streaming.analytics import (
+    analytics_sinks,
     read_rate_spikes,
     read_template_counts,
-    run_streaming_analytics,
+)
+from otel_logger_spark.streaming.pipeline import (
+    read_stream,
+    start_batch_sinks,
+    write_batch_sinks,
 )
 
 T0 = datetime(2024, 3, 1, 0, 0, 0)
@@ -64,10 +69,9 @@ def test_streaming_analytics_matches_batch(spark, tmp_path):
     in_dir = _write_files(spark, tmp_path)
     out = str(tmp_path / "analytics_out")
     ckpt = str(tmp_path / "analytics_ckpt")
-    q = run_streaming_analytics(
-        spark, in_dir, out, ckpt,
-        available_now=True, max_files_per_trigger=1,
-        group_cols=("role",), bucket_seconds=3600,
+    q = start_batch_sinks(
+        read_stream(spark, in_dir, max_files_per_trigger=1), out, ckpt,
+        lambda b: analytics_sinks(b, group_cols=("role",), bucket_seconds=3600),
     )
     q.awaitTermination(300)
 
@@ -115,8 +119,6 @@ def test_streaming_analytics_batch_retry_is_idempotent(spark, tmp_path):
     """Re-running a batch id (redelivery after a failure between sink
     writes) overwrites its own partial directory instead of
     double-appending."""
-    from otel_logger_spark.streaming.analytics import write_analytics_batch
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.createDataFrame(
         [("c1", 0, "a", "n 1", None, T0)],
@@ -124,8 +126,8 @@ def test_streaming_analytics_batch_retry_is_idempotent(spark, tmp_path):
         "tool string, ts timestamp",
     )
     out = str(tmp_path / "retry_out")
-    write_analytics_batch(df, 7, out)
-    write_analytics_batch(df, 7, out)  # redelivered
+    write_batch_sinks(df, 7, out, analytics_sinks)
+    write_batch_sinks(df, 7, out, analytics_sinks)  # redelivered
     t = read_template_counts(spark, out).collect()
     assert [(r["template"], r["n"], r["n_convs"]) for r in t] == [("n <n>", 1, 1)]
     # CMS partial is batchid-idempotent too: one row, one cell count each

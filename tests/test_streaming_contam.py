@@ -12,9 +12,14 @@ from pyspark.sql import functions as F
 from otel_logger_spark.functions.decontam import contamination_profile
 from otel_logger_spark.streaming.analytics import (
     CONTAM_SINK,
+    DOCUMENTS_SCHEMA,
+    contam_sinks,
     read_contamination_profile,
-    run_streaming_contamination,
-    write_contam_batch,
+)
+from otel_logger_spark.streaming.pipeline import (
+    read_stream,
+    start_batch_sinks,
+    write_batch_sinks,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -49,9 +54,9 @@ def test_streaming_contam_matches_batch(spark, tmp_path):
 
     out = str(tmp_path / "contam_out")
     ckpt = str(tmp_path / "ckpt")
-    q = run_streaming_contamination(
-        spark, in_dir, bench, out, ckpt,
-        max_files_per_trigger=1, n=N,
+    q = start_batch_sinks(
+        read_stream(spark, in_dir, DOCUMENTS_SCHEMA, max_files_per_trigger=1),
+        out, ckpt, lambda b: contam_sinks(b, bench, n=N),
     )
     q.awaitTermination(300)
 
@@ -79,11 +84,15 @@ def test_contam_batch_retry_is_idempotent(spark, tmp_path):
     train = docs.filter(F.col("doc_id") % 7 != 0).limit(40)
 
     out = str(tmp_path / "contam_out")
-    write_contam_batch(train, 0, out, bench, n=N)
+
+    def sinks(b):
+        return contam_sinks(b, bench, n=N)
+
+    write_batch_sinks(train, 0, out, sinks)
     first = {
         tuple(r) for r in read_contamination_profile(spark, out).collect()
     }
-    write_contam_batch(train, 0, out, bench, n=N)  # redelivery
+    write_batch_sinks(train, 0, out, sinks)  # redelivery
     second = {
         tuple(r) for r in read_contamination_profile(spark, out).collect()
     }

@@ -19,9 +19,14 @@ from otel_logger_spark.functions.diversity import (
 from otel_logger_spark.streaming.analytics import (
     DIVERSITY_COUNTS_SINK,
     DIVERSITY_DIGESTS_SINK,
+    DOCUMENTS_SCHEMA,
+    diversity_sinks,
     read_diversity_report,
-    run_streaming_diversity,
-    write_diversity_batch,
+)
+from otel_logger_spark.streaming.pipeline import (
+    read_stream,
+    start_batch_sinks,
+    write_batch_sinks,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -74,8 +79,9 @@ def test_streaming_diversity_matches_batch(spark, tmp_path):
 
     out = str(tmp_path / "div_out")
     ckpt = str(tmp_path / "ckpt")
-    q = run_streaming_diversity(
-        spark, in_dir, out, ckpt, max_files_per_trigger=1
+    q = start_batch_sinks(
+        read_stream(spark, in_dir, DOCUMENTS_SCHEMA, max_files_per_trigger=1),
+        out, ckpt, diversity_sinks,
     )
     q.awaitTermination(300)
 
@@ -103,8 +109,8 @@ def test_streaming_diversity_matches_batch(spark, tmp_path):
 def test_diversity_batch_retry_is_idempotent(spark, tmp_path):
     docs = _docs(spark).limit(40)
     out = str(tmp_path / "div_out")
-    write_diversity_batch(docs, 0, out)
+    write_batch_sinks(docs, 0, out, diversity_sinks)
     first = {tuple(r) for r in read_diversity_report(spark, out).collect()}
-    write_diversity_batch(docs, 0, out)  # redelivery
+    write_batch_sinks(docs, 0, out, diversity_sinks)  # redelivery
     second = {tuple(r) for r in read_diversity_report(spark, out).collect()}
     assert first == second

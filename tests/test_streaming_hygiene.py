@@ -13,10 +13,15 @@ from pyspark.sql import functions as F
 from otel_logger_spark.functions.hygiene import hygiene_report
 from otel_logger_spark.functions.lmscore import nll_table, reference_counts
 from otel_logger_spark.streaming.analytics import (
+    DOCUMENTS_SCHEMA,
     HYGIENE_SINK,
+    hygiene_sinks,
     read_hygiene_report,
-    run_streaming_hygiene,
-    write_hygiene_batch,
+)
+from otel_logger_spark.streaming.pipeline import (
+    read_stream,
+    start_batch_sinks,
+    write_batch_sinks,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -60,9 +65,9 @@ def test_streaming_hygiene_matches_batch(spark, tmp_path):
 
     out = str(tmp_path / "hyg_out")
     ckpt = str(tmp_path / "ckpt")
-    q = run_streaming_hygiene(
-        spark, in_dir, tab, oov, QMIN, NMAX, out, ckpt,
-        rep_thresholds_milli=REP_THR, max_files_per_trigger=1,
+    q = start_batch_sinks(
+        read_stream(spark, in_dir, DOCUMENTS_SCHEMA, max_files_per_trigger=1),
+        out, ckpt, lambda b: hygiene_sinks(b, tab, oov, QMIN, NMAX, REP_THR),
     )
     q.awaitTermination(300)
 
@@ -86,8 +91,12 @@ def test_hygiene_batch_retry_is_idempotent(spark, tmp_path):
     docs = _docs(spark).limit(40)
     tab, oov = _pinned_tables(spark)
     out = str(tmp_path / "hyg_out")
-    write_hygiene_batch(docs, 0, out, tab, oov, QMIN, NMAX, REP_THR)
+
+    def sinks(b):
+        return hygiene_sinks(b, tab, oov, QMIN, NMAX, REP_THR)
+
+    write_batch_sinks(docs, 0, out, sinks)
     first = {tuple(r) for r in read_hygiene_report(spark, out).collect()}
-    write_hygiene_batch(docs, 0, out, tab, oov, QMIN, NMAX, REP_THR)
+    write_batch_sinks(docs, 0, out, sinks)
     second = {tuple(r) for r in read_hygiene_report(spark, out).collect()}
     assert first == second

@@ -17,10 +17,15 @@ from otel_logger_spark.functions.vocab import (
     with_oov_stats,
 )
 from otel_logger_spark.streaming.analytics import (
+    DOCUMENTS_SCHEMA,
     OOV_SINK,
+    oov_sinks,
     read_oov_report,
-    run_streaming_oov,
-    write_oov_batch,
+)
+from otel_logger_spark.streaming.pipeline import (
+    read_stream,
+    start_batch_sinks,
+    write_batch_sinks,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -57,8 +62,9 @@ def test_streaming_oov_matches_batch(spark, tmp_path):
 
     out = str(tmp_path / "oov_out")
     ckpt = str(tmp_path / "ckpt")
-    q = run_streaming_oov(
-        spark, in_dir, vocab, out, ckpt, max_files_per_trigger=1
+    q = start_batch_sinks(
+        read_stream(spark, in_dir, DOCUMENTS_SCHEMA, max_files_per_trigger=1),
+        out, ckpt, lambda b: oov_sinks(b, vocab),
     )
     q.awaitTermination(300)
 
@@ -84,8 +90,12 @@ def test_oov_batch_retry_is_idempotent(spark, tmp_path):
     vocab = vocab_topk(docs, K)
 
     out = str(tmp_path / "oov_out")
-    write_oov_batch(docs, 0, out, vocab)
+
+    def sinks(b):
+        return oov_sinks(b, vocab)
+
+    write_batch_sinks(docs, 0, out, sinks)
     first = {tuple(r) for r in read_oov_report(spark, out).collect()}
-    write_oov_batch(docs, 0, out, vocab)  # redelivery
+    write_batch_sinks(docs, 0, out, sinks)  # redelivery
     second = {tuple(r) for r in read_oov_report(spark, out).collect()}
     assert first == second
