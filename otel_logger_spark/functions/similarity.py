@@ -141,21 +141,6 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def with_lsh_bucket(
-    df: DataFrame, planes: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Sign-of-projection bit signature -> integer bucket id."""
-    bucket = None
-    for i, p in enumerate(planes):
-        lit_p = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(_dot(F.col(vec_col), lit_p) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, i)
-        bucket = term if bucket is None else bucket.bitwiseXOR(term)
-    return df.withColumn("bucket", bucket)
-
-
 def _with_multitable_buckets(
     df: DataFrame,
     n_planes: int,

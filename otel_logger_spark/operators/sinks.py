@@ -93,10 +93,13 @@ def parquet_partition_lineage(spark, path: str) -> list[dict]:
     Relativization of returned URIs is pure-Python string work
     (fsio.relativize_many): O(1) extra gateway calls.
 
-    A zero-row sink (overwrite leaves only _SUCCESS, no part files) yields
-    an empty lineage; any OTHER failure (permissions, transient object-store
-    errors, corrupt footers) PROPAGATES — a blanket catch here would let a
-    transient error masquerade as a legitimately-empty sink."""
+    A zero-row write still leaves one part file carrying the schema and 0
+    rows, so its lineage is that one part with ``n_rows`` 0 and the sink
+    reads back empty with its columns. A directory with no part files at
+    all (only commit markers) yields an empty lineage; any OTHER failure
+    (permissions, transient object-store errors, corrupt footers)
+    PROPAGATES — a blanket catch here would let a transient error
+    masquerade as a legitimately-empty sink."""
     fs = HadoopFS(spark, path)
     # raw file count (ONE gateway call) includes commit markers and local-FS
     # .crc shadows, so it only gates whether listing is cheap; the branch
@@ -105,7 +108,7 @@ def parquet_partition_lineage(spark, path: str) -> list[dict]:
     if fs.file_count(path) <= 2 * SMALL_SINK_MAX_FILES + 4:
         files = fs.list_files_recursive(path, ".parquet")
         if not files:
-            return []  # zero-row sink: only commit markers present
+            return []  # only commit markers present
     if files is not None and len(files) <= SMALL_SINK_MAX_FILES:
         pairs = [(f, fs.parquet_row_count(f)) for f in files]
         rels = fs.relativize_many(path, [f for f, _ in pairs])
@@ -316,14 +319,14 @@ def write_routed_sinks(
 
     try:
         base = routed.select(*[c for c in OUT_COLS if c in routed.columns])
+        partition_by = None
+        if partition_logs_by_date:
+            base = base.withColumn("event_date", F.to_date("event_ts"))
+            partition_by = ["event_date"]
         logs_path = resolve_sink_path(out_dir, SINK_LOGS)
         if SINK_LOGS not in done:
             t0 = time.monotonic()
             opts = resolve_sink_options(SINK_LOGS)
-            partition_by = None
-            if partition_logs_by_date:
-                base = base.withColumn("event_date", F.to_date("event_ts"))
-                partition_by = ["event_date"]
             n, parts = _run_with_timeout(
                 spark,
                 f"{run_id}:{SINK_LOGS}",
@@ -335,8 +338,12 @@ def write_routed_sinks(
             _commit(spark, manifest, out_dir, SINK_LOGS, logs_path, n, t0, parts)
 
         # derive the remaining sinks from the staged table (or the persisted
-        # frame) — the expensive upstream plan never re-executes
-        staged = routed if use_persist else spark.read.parquet(logs_path)
+        # frame) — the expensive upstream plan never re-executes; the
+        # re-read takes the schema it was written with, so no footer
+        # inference job runs
+        staged = (
+            routed if use_persist else spark.read.schema(base.schema).parquet(logs_path)
+        )
         staged_out = staged.select(*[c for c in OUT_COLS if c in staged.columns])
         derived = {
             SINK_ERROR: staged_out.filter(is_error_col()),

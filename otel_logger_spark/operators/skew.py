@@ -50,16 +50,3 @@ def conversation_metrics_salted(routed: DataFrame, buckets: int = 16) -> DataFra
         F.max("exit_code").alias("exit_code"),
     )
 
-
-def coalesce_entries_salt_safe(df: DataFrame, hot_threshold: int = 100_000):
-    """Note on the multiline coalescer under skew: its window needs ALL of a
-    conv_id in one partition, so it cannot be salted without breaking
-    entry boundaries. The mitigation at 10^12 scale is (a) AQE skew
-    handling inside the shuffle, and (b) the per-conversation row count is
-    bounded by transcript length in practice; this helper simply surfaces
-    the hot conversations for monitoring."""
-    return (
-        df.groupBy("conv_id")
-        .agg(F.count("*").alias("n_turns"))
-        .filter(F.col("n_turns") >= hot_threshold)
-    )

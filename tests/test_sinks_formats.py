@@ -141,3 +141,23 @@ def test_per_sink_env_applied_end_to_end(spark, tmp_path, monkeypatch):
     assert got.count() == manifest["sinks"]["error"]["n_rows"]
     assert not os.path.exists(os.path.join(out, "error"))
     assert os.path.exists(os.path.join(out, "logs"))
+
+
+def test_zero_row_sink_keeps_schema_and_one_empty_part(spark, tmp_path):
+    """Text input with no tool calls: the 0-row tool_call overwrite still
+    leaves one part file that carries the logs columns, and its lineage is
+    that one part with 0 rows."""
+    from otel_logger_spark.sources.textfile import read_log_files
+
+    d = tmp_path / "text"
+    d.mkdir()
+    (d / "a.log").write_text("INFO start\nERROR boom\n  at x\n")
+    (d / "b.log").write_text("plain line\n")
+    out = str(tmp_path / "out0")
+    manifest = write_routed_sinks(build_parsed(read_log_files(spark, str(d))), None, out)
+    tool_call = manifest["sinks"]["tool_call"]
+    assert tool_call["n_rows"] == 0
+    assert [p["n_rows"] for p in tool_call["partitions"]] == [0]
+    got = spark.read.parquet(os.path.join(out, "tool_call"))
+    assert got.count() == 0
+    assert got.columns == spark.read.parquet(os.path.join(out, "logs")).columns
