@@ -34,49 +34,49 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Current rotation (one micro-batch sink writer in otel_logger_spark/
-    # streaming/; PipelineConfig loses batch_size and flush_interval).
-    # queries._routed builds the default PipelineConfig, so the eleven
-    # parse/pipeline gates and pivot_role_severity, whose construction runs
-    # config.py, sit in the window. No gate builds a stream. The rotation is
-    # a full swap: the 29 gates deferred last round are back in the window,
-    # and deferred in their place are 29 gates the last round verified in
-    # the window on code this change does not touch: the six gates verified
-    # three rounds running, the fourteen verified two rounds running
-    # (diversity stays in the window), and nine more. Also kept in the
-    # window: the gates whose operators the streaming sink builders call
-    # (log_templates, rate_spikes, cms_counts, hygiene_manifest,
-    # diversity). The full 79-gate set is re-verified against the sf0.01
+    # Current rotation (one declaration of the routed sinks in
+    # operators/sinks.py, shared by the batch and streaming pipelines;
+    # pipeline.run_pipeline no longer builds a metrics frame). Every gate
+    # built on queries._routed runs pipeline.py and operators/route.py:
+    # the eleven parse/pipeline gates and pivot_role_severity sit in the
+    # window. No gate builds a stream or writes a sink. The rotation is a
+    # full swap: the 29 gates deferred for the last two changes are back
+    # in the window, and deferred in their place are 29 gates those
+    # changes verified in the window on code this change does not touch.
+    # Also kept in the window: the gates whose operators the streaming
+    # sink builders call (log_templates, rate_spikes, cms_counts,
+    # hygiene_manifest, diversity) and the four exact/simhash dedup and
+    # mix gates. The full 79-gate set is re-verified against the sf0.01
     # DuckDB oracle with tools/check_correctness.py.
-    "ngram_jaccard",
-    "dedup_clusters",
-    "dedup_clusters_two_phase",
-    "weighted_sample",
-    "minhash_pairs",
-    "text_quality",
-    "pricing_summary",
-    "top_revenue_orders",
-    "region_rollup",
-    "distinct_users",
-    "freqcap",
-    "median_gap",
-    "rollup_role_style",
-    "ann_ivf_quantized",
-    "semantic_dedup",
-    "lm_fluency",
-    "bigram_fluency",
-    "bpe_merges",
-    "bpe_encode",
-    "corpus_cartography",
-    "funnel",
-    "exact_percentiles",
-    "zorder_buckets",
-    "asof_latest_signup",
-    "asof_next_purchase",
-    "range_click_incidents",
-    "sessionization",
-    "approx_distinct",
-    "pack_shards",
+    "embedding_topk",
+    "embedding_near_dup",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "lang_id",
+    "doc_fingerprint",
+    "multimodal_decode",
+    "audio_stats",
+    "embedding_outliers",
+    "pii_redaction",
+    "doc_repetition",
+    "decontam_split",
+    "incremental_dedup",
+    "tfidf_terms",
+    "span_dedup",
+    "snapshot_diff",
+    "dedup_canonical",
+    "normalized_dedup",
+    "token_mix",
+    "fixed_k_sample",
+    "quantized_ann",
+    "leakage_split",
+    "dsir_select",
+    "vocab_oov",
+    "source_overlap",
+    "chunk_windows",
+    "image_near_dup",
+    "contamination_profile",
+    "temperature_mix",
 ]
 
 

@@ -30,7 +30,6 @@ def _query_actions(spark, sf_dir):
 
     from otel_logger_spark import queries as Q
     from otel_logger_spark.gates import GATES
-    from otel_logger_spark.operators.rollups import conversation_metrics
     from otel_logger_spark.operators.sinks import write_routed_sinks
 
     bench_name = {"minhash_pairs": "dedup_minhash"}
@@ -46,10 +45,7 @@ def _query_actions(spark, sf_dir):
 
         out_dir = tempfile.mkdtemp(prefix="bx_sinks_")
         try:
-            routed = Q._routed(spark, sf_dir)
-            write_routed_sinks(
-                routed, conversation_metrics(routed), out_dir, run_id="bx"
-            )
+            write_routed_sinks(Q._routed(spark, sf_dir), None, out_dir, run_id="bx")
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
 

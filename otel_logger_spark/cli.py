@@ -40,7 +40,6 @@ def main(argv=None):
     args, passthrough = ap.parse_known_args(argv)
     cfg = PipelineConfig.from_reference_args(passthrough)
 
-    from otel_logger_spark.operators.rollups import conversation_metrics
     from otel_logger_spark.operators.sinks import write_routed_sinks
     from otel_logger_spark.pipeline import build_parsed
     from otel_logger_spark.session import get_spark
@@ -54,10 +53,9 @@ def main(argv=None):
     else:
         transcripts = spark.read.parquet(args.input)
 
-    routed = build_parsed(transcripts, config=cfg)
     manifest = write_routed_sinks(
-        routed,
-        conversation_metrics(routed),
+        build_parsed(transcripts, config=cfg),
+        None,
         args.out,
         run_id=args.run_id,
         passthrough_raw=cfg.passthrough_raw_sink,

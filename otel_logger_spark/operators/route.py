@@ -6,9 +6,11 @@ the graft fans out to routed sinks (north_star): ``error`` (severity >= 17),
 and ``logs`` (everything — the reference's single stream, preserving the
 zero-rows-dropped invariant, main.go:184-190/463-471).
 
-Routing is computed as boolean columns + a ``sinks`` array in ONE pass; the
-enriched frame is persisted and each sink write is a filter over it, so the
-(expensive) parse stage runs exactly once regardless of sink count.
+Routing is computed as boolean columns + a ``sinks`` array in ONE pass.
+The sink predicates below are the ones operators/sinks.routed_sinks
+filters with; the batch pipeline applies them to a re-read of the staged
+logs sink, so the (expensive) parse stage runs exactly once regardless of
+sink count.
 """
 
 from __future__ import annotations

@@ -1,4 +1,6 @@
-"""Multi-sink fan-out writes with checkpointed lineage (K1-K4 + A5).
+"""The routed sinks, declared once (routed_sinks: the batch and streaming
+pipelines both build their sinks with it), and their checkpointed
+multi-sink writes with lineage (K1-K4 + A5).
 
 The reference guarantees no record is dropped: ForceFlush before exit
 (/root/reference/main.go:652-655) and at-least-once batched export
@@ -11,27 +13,37 @@ from checkpoint with per-partition lineage + metrics").
 Commit unit: (sink). Parquet/Iceberg writes are atomic per sink directory
 (_SUCCESS / snapshot), so a killed run resumes at sink granularity; the
 per-partition counts in the manifest give partition-level lineage for
-audit.
+audit. Every sink goes through one write path (path/format/options from
+the environment, deadline, counted write, footer lineage, commit).
 
 Action economy (matters at 100 TB): the expensive plan executes once to
-stage the logs sink; error/tool_call/raw/metrics derive from column-pruned
-re-reads of that staged table (no multi-GB cache churn); per-partition
-lineage comes from the committed parquet footers and row counts ride the
-writes via Observation. Total: 4-5 writes, zero extra aggregations.
+stage the logs sink; error/tool_call/metrics (routed_sinks) and the raw
+tee are column-pruned re-reads of that staged table (no multi-GB cache churn);
+per-partition lineage comes from the committed parquet footers and row
+counts ride the writes via Observation. Total: 4-5 writes, zero extra
+aggregations.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from otel_logger_spark.schemas import SINK_ERROR, SINK_LOGS, SINK_TOOL_CALL
+from otel_logger_spark.schemas import (
+    SINK_CONV_METRICS,
+    SINK_ERROR,
+    SINK_LOGS,
+    SINK_TOOL_CALL,
+)
 from otel_logger_spark.fsio import HadoopFS, join_path
+from otel_logger_spark.operators.rollups import conversation_metrics
 from otel_logger_spark.operators.route import is_error_col, is_tool_call_col
 
 
@@ -143,6 +155,13 @@ def _commit(spark, manifest, out_dir, sink, path, n_rows, t0, partitions):
 
 SUPPORTED_FORMATS = ("parquet", "json")
 
+# the thread-local properties SparkContext.setJobGroup sets
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
 
 def _run_with_timeout(spark, group: str, timeout_ms: int | None, fn):
     """Per-sink export deadline — the --timeout / WithExportTimeout
@@ -152,14 +171,15 @@ def _run_with_timeout(spark, group: str, timeout_ms: int | None, fn):
     so a resume retries exactly the timed-out export — the same
     at-least-once retry shape as the reference's batching exporter.
     Job groups are thread-local, which is exactly right here: every sink
-    write already runs in its own thread (or the main thread for logs).
+    write already runs in its own thread (or the main thread for logs),
+    and the thread's job-group properties are restored afterwards, so
+    later jobs in the thread carry none of them.
     A non-positive timeout means NO deadline (the reference's exporter
     skips its WithTimeout branch when the configured timeout is <= 0)."""
-    import threading
-
     if timeout_ms is None or timeout_ms <= 0:
         return fn()
     sc = spark.sparkContext
+    prior = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
     sc.setJobGroup(group, f"sink export (timeout {timeout_ms} ms)", True)
     watchdog = threading.Timer(timeout_ms / 1000.0, sc.cancelJobGroup, (group,))
     watchdog.daemon = True
@@ -168,7 +188,8 @@ def _run_with_timeout(spark, group: str, timeout_ms: int | None, fn):
         return fn()
     finally:
         watchdog.cancel()
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in zip(_JOB_GROUP_PROPS, prior):
+            sc.setLocalProperty(k, v)
 
 
 def _env_sink(base: str, sink: str | None) -> str | None:
@@ -183,15 +204,13 @@ def _env_sink(base: str, sink: str | None) -> str | None:
     return os.environ.get(base)
 
 
-def resolve_sink_format(explicit: str | None = None, sink: str = SINK_LOGS) -> str:
+def resolve_sink_format(sink: str = SINK_LOGS) -> str:
     """Sink-format dispatch mirroring createExporter
     (/root/reference/main.go:330-345): an env var selects the protocol,
     the sink-specific var overrides the generic one, unsupported values
-    are an error (not a silent default). Applies per sink — all four sinks
-    honor OTEL_SPARK_SINK_FORMAT and OTEL_SPARK_SINK_FORMAT_<SINK>."""
-    fmt = explicit
-    if fmt is None:
-        fmt = _env_sink("OTEL_SPARK_SINK_FORMAT", sink)
+    are an error (not a silent default). Applies per sink — every sink
+    honors OTEL_SPARK_SINK_FORMAT and OTEL_SPARK_SINK_FORMAT_<SINK>."""
+    fmt = _env_sink("OTEL_SPARK_SINK_FORMAT", sink)
     if fmt is None:
         return "parquet"
     f = fmt.strip().lower()
@@ -239,6 +258,32 @@ OUT_COLS = [
 ]
 
 
+def _logs_sink(df: DataFrame) -> DataFrame:
+    return df.select(*[c for c in OUT_COLS if c in df.columns])
+
+
+def routed_sinks(df: DataFrame) -> dict[str, DataFrame]:
+    """The four routed sinks over the parsed and enriched columns: ``logs``
+    (every entry — the reference's single stream), ``error``,
+    ``tool_call`` and ``conversation_metrics`` (A4 parity with
+    executeCommand's terminal record, /root/reference/main.go:577-591).
+
+    The routing flags are recomputed from the sink columns, so the routed
+    frame and the staged logs re-read (which carries no flags) give the
+    same sinks. Over a micro-batch, conversation_metrics rows are
+    PER-BATCH PARTIALS: every field is a decomposable aggregate, and
+    streaming.pipeline.read_conversation_metrics re-aggregates them into
+    exactly this per-conversation rollup."""
+    out = _logs_sink(df)
+    flags = {"is_error": is_error_col(), "is_tool_call": is_tool_call_col()}
+    return {
+        SINK_LOGS: out,
+        SINK_ERROR: out.filter(is_error_col()),
+        SINK_TOOL_CALL: out.filter(is_tool_call_col()),
+        SINK_CONV_METRICS: conversation_metrics(df.withColumns(flags)),
+    }
+
+
 def _write_one(
     df: DataFrame,
     path: str,
@@ -249,25 +294,19 @@ def _write_one(
     # the authoritative row count rides the write itself via Observation —
     # zero extra actions over the data for ANY format
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    if fmt == "json":
-        w = df.write.mode("overwrite")
-        if options:
-            w = w.options(**options)
-        w.json(path)
-        return obs.get["n"], []  # json has no footers for per-file lineage
-    # snappy on the sink critical path (encode ~3x faster than zstd);
-    # storage-economy runs can override via OTEL_SPARK_SINK_CODEC=zstd
-    codec = os.environ.get("OTEL_SPARK_SINK_CODEC", "snappy")
-    w = df.write.mode("overwrite").option("compression", codec)
-    if options:
-        w = w.options(**options)
+    w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+    if fmt == "parquet":
+        # snappy on the sink critical path (encode ~3x faster than zstd);
+        # OTEL_SPARK_SINK_OPTIONS[_<SINK>]=compression=... overrides it
+        w = w.option("compression", "snappy")
     if partition_by:
         # date-partitioned layout: partition pruning for time-ranged reads
         # (the parquet stand-in for Iceberg's day(ts) partition spec)
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    w.options(**(options or {})).format(fmt).save(path)
     n_rows = obs.get["n"]
+    if fmt != "parquet":
+        return n_rows, []  # json has no footers for per-file lineage
     parts = parquet_partition_lineage(df.sparkSession, path)
     n_footer = sum(p["n_rows"] for p in parts)
     if n_footer != n_rows:
@@ -287,116 +326,84 @@ def write_routed_sinks(
     out_dir: str = "",
     run_id: str = "run-0",
     passthrough_raw: bool = False,
-    sink_format: str | None = None,
     partition_logs_by_date: bool = False,
     export_timeout_ms: int | None = None,
 ) -> dict:
-    """Fan out the routed frame to the four sinks. ``routed`` must carry
-    the parsed and enriched columns (see pipeline.parse_enrich_route).
+    """Write routed_sinks of ``routed`` (plus the ``raw`` tee with
+    ``passthrough_raw``) and commit each one. ``routed`` must carry the
+    parsed and enriched columns (see pipeline.parse_enrich_route).
 
     Single-pass discipline at scale: the expensive plan (coalesce + parse +
-    enrich) executes ONCE to stage the ``logs`` sink; the routed sinks
-    (error, tool_call, raw tee) and conversation metrics are derived by
-    re-reading the staged columnar table — column-pruned, predicate-pushed
-    scans of compact parquet, far cheaper than caching 10s-of-GB of wide
-    rows in the storage layer (the Iceberg-staging-table pattern,
-    SURVEY.md §4). A json logs sink can't be re-read cheaply, so json
-    staging persists ``routed`` in memory instead.
+    enrich) executes ONCE to stage the ``logs`` sink; the other sinks are
+    routed_sinks over a re-read of the staged columnar table —
+    column-pruned, predicate-pushed scans of compact parquet, far cheaper
+    than caching 10s-of-GB of wide rows in the storage layer (the
+    Iceberg-staging-table pattern, SURVEY.md §4). A json logs sink can't
+    be re-read cheaply, so json staging persists ``routed`` in memory and
+    derives the sinks from it instead.
 
-    ``metrics`` is used only when staging in memory (json); otherwise, or
-    when None, conversation_metrics is computed over the staged rows.
-    Returns the committed manifest (A5: every sink committed == ForceFlush).
+    ``metrics`` is unused; the slot is kept for callers that still pass a
+    conversation_metrics frame. Returns the committed manifest (A5: every
+    sink committed == ForceFlush).
     """
-    fmt = resolve_sink_format(sink_format, SINK_LOGS)
     spark = routed.sparkSession
     manifest = load_manifest(spark, out_dir, run_id)
     done = {
         s for s, e in manifest["sinks"].items() if e.get("status") == "committed"
     }
-    use_persist = fmt == "json"
+    lock = threading.Lock()
+
+    def export(sink: str, df: DataFrame, partition_by: list[str] | None = None):
+        t0 = time.monotonic()
+        path = resolve_sink_path(out_dir, sink)
+        fmt = resolve_sink_format(sink)
+        opts = resolve_sink_options(sink)
+        n, parts = _run_with_timeout(
+            spark,
+            f"{run_id}:{sink}",
+            export_timeout_ms,
+            lambda: _write_one(df, path, fmt, partition_by, opts),
+        )
+        with lock:
+            _commit(spark, manifest, out_dir, sink, path, n, t0, parts)
+
+    use_persist = resolve_sink_format(SINK_LOGS) == "json"
     if use_persist:
         routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-
     try:
-        base = routed.select(*[c for c in OUT_COLS if c in routed.columns])
+        # the logs projection alone: building every sink over the full
+        # upstream plan costs ~0.1 s of driver-side analysis (4 vCPUs)
+        logs = _logs_sink(routed)
         partition_by = None
         if partition_logs_by_date:
-            base = base.withColumn("event_date", F.to_date("event_ts"))
+            logs = logs.withColumn("event_date", F.to_date("event_ts"))
             partition_by = ["event_date"]
-        logs_path = resolve_sink_path(out_dir, SINK_LOGS)
         if SINK_LOGS not in done:
-            t0 = time.monotonic()
-            opts = resolve_sink_options(SINK_LOGS)
-            n, parts = _run_with_timeout(
-                spark,
-                f"{run_id}:{SINK_LOGS}",
-                export_timeout_ms,
-                lambda: _write_one(
-                    base, logs_path, fmt, partition_by=partition_by, options=opts
-                ),
-            )
-            _commit(spark, manifest, out_dir, SINK_LOGS, logs_path, n, t0, parts)
+            export(SINK_LOGS, logs, partition_by)
 
         # derive the remaining sinks from the staged table (or the persisted
         # frame) — the expensive upstream plan never re-executes; the
         # re-read takes the schema it was written with, so no footer
         # inference job runs
+        logs_path = resolve_sink_path(out_dir, SINK_LOGS)
         staged = (
-            routed if use_persist else spark.read.schema(base.schema).parquet(logs_path)
+            routed if use_persist else spark.read.schema(logs.schema).parquet(logs_path)
         )
-        staged_out = staged.select(*[c for c in OUT_COLS if c in staged.columns])
-        derived = {
-            SINK_ERROR: staged_out.filter(is_error_col()),
-            SINK_TOOL_CALL: staged_out.filter(is_tool_call_col()),
-        }
+        derived = routed_sinks(staged)
+        del derived[SINK_LOGS]
         if passthrough_raw:  # tee of raw entries (K3, main.go:481-484)
             derived["raw"] = staged.select("conv_id", "turn_idx", "role", "raw")
-        if "conversation_metrics" not in done:
-            if metrics is None or not use_persist:
-                from otel_logger_spark.operators.rollups import conversation_metrics
-
-                flags = {"is_error": is_error_col(), "is_tool_call": is_tool_call_col()}
-                metrics = conversation_metrics(staged.withColumns(flags))
-            derived["conversation_metrics"] = metrics
 
         # the derived writes are independent scans of the staged table —
         # submit them as CONCURRENT Spark jobs so their fixed scheduling
         # costs overlap (Spark's scheduler interleaves the tasks; on a
         # cluster this is the default multi-job pattern)
-        import threading
-
-        lock = threading.Lock()
-        errors: list[BaseException] = []
-
-        def run_sink(sink: str, df: DataFrame):
-            try:
-                t0 = time.monotonic()
-                path = resolve_sink_path(out_dir, sink)
-                sink_fmt = resolve_sink_format(sink_format, sink)
-                n, parts = _run_with_timeout(
-                    spark,
-                    f"{run_id}:{sink}",
-                    export_timeout_ms,
-                    lambda: _write_one(
-                        df, path, sink_fmt, options=resolve_sink_options(sink)
-                    ),
-                )
-                with lock:
-                    _commit(spark, manifest, out_dir, sink, path, n, t0, parts)
-            except BaseException as e:  # surfaced after join
-                errors.append(e)
-
-        threads = [
-            threading.Thread(target=run_sink, args=(s, df), daemon=True)
-            for s, df in derived.items()
-            if s not in done
-        ]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join()
-        if errors:
-            raise errors[0]
+        with ThreadPoolExecutor(len(derived)) as pool:
+            futures = [
+                pool.submit(export, s, df) for s, df in derived.items() if s not in done
+            ]
+        for f in futures:
+            f.result()  # a failed sink's error surfaces after every write ends
         manifest["status"] = "committed"
         save_manifest(spark, out_dir, manifest)
     finally:

@@ -14,7 +14,8 @@ local[N]):
 - parse stage is Arrow-batched pandas UDF, everything before/after is
   whole-stage-codegen JVM.
 - both lookups are literal-map expressions (no join operator).
-- fan-out writes read ONE persisted frame (single-pass discipline).
+- the plan executes once, to write the logs sink; the other sinks read
+  the staged logs table back (operators/sinks.write_routed_sinks).
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from otel_logger_spark.config import PipelineConfig
 from otel_logger_spark.functions.parse import with_parsed
 from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
 from otel_logger_spark.operators.multiline import coalesce_entries
-from otel_logger_spark.operators.rollups import conversation_metrics, summary_rows
+from otel_logger_spark.operators.rollups import summary_rows
 from otel_logger_spark.operators.route import with_routing
 from otel_logger_spark.operators.sinks import write_routed_sinks
 
@@ -94,11 +95,9 @@ def run_pipeline(
     from otel_logger_spark.io import read_table
 
     transcripts = read_table(spark, input_path)
-    routed = build_parsed(transcripts, config=config)
-    metrics = conversation_metrics(routed)
     return write_routed_sinks(
-        routed,
-        metrics,
+        build_parsed(transcripts, config=config),
+        None,
         out_dir,
         run_id=run_id,
         passthrough_raw=bool(config and config.passthrough_raw_sink),

@@ -2,7 +2,7 @@
 
 Each builder maps one micro-batch frame to ``{sink_name: DataFrame}`` of
 DECOMPOSABLE partials — the same partials-then-finalize pattern as the
-pipeline's conversation_metrics sink (streaming/pipeline.routed_sinks).
+pipeline's conversation_metrics sink (operators/sinks.routed_sinks).
 streaming/pipeline.start_batch_sinks runs a builder over a stream and
 write_batch_sinks lands each partial in its own ``batchid=<id>`` directory
 (overwrite => exactly-once per (sink, batchId) on top of the checkpoint's

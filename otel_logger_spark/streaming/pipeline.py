@@ -12,7 +12,8 @@ no event-time windowing (SURVEY.md §2.8; BatchProcessor
 - ForceFlush at EOF -> trigger(availableNow=True) + awaitTermination
 - multi-sink fan-out-> start_batch_sinks / write_batch_sinks: a streaming
   query is a SINK BUILDER, a function from the micro-batch frame to
-  {sink_name: DataFrame} (routed_sinks here, the analytics builders in
+  {sink_name: DataFrame} (operators/sinks.routed_sinks, the batch
+  pipeline's own four sinks, or the analytics builders in
   streaming/analytics.py). Each sink lands in a batchId-keyed
   subdirectory with overwrite, so a retried micro-batch (failure between
   sink writes) rewrites instead of double-appending: exactly-once per
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from otel_logger_spark.functions.parse import with_parsed
+from otel_logger_spark.operators.sinks import routed_sinks
 from otel_logger_spark.pipeline import parse_enrich_route
 from otel_logger_spark.schemas import TRANSCRIPT_SCHEMA
 
@@ -105,34 +107,6 @@ def build_streaming_routed(
     else:
         src = stream.filter(F.length("text") > 0)
     return parse_enrich_route(src)
-
-
-STREAM_OUT_COLS = [
-    "conv_id", "turn_idx", "role", "tool", "event_ts", "level",
-    "severity_num", "message", "attrs", "raw",
-]
-
-
-def routed_sinks(batch_df: DataFrame) -> dict[str, DataFrame]:
-    """The pipeline's sink builder: the SAME FOUR sinks as the batch
-    pipeline (logs / error / tool_call / conversation_metrics — A4 parity
-    with executeCommand's terminal record, /root/reference/main.go:577-591).
-
-    conversation_metrics is written as PER-BATCH PARTIALS: every metric
-    field is a decomposable aggregate (sums / mins / maxes), so
-    read_conversation_metrics re-aggregates the partials into exactly the
-    batch pipeline's per-conversation rollup — a conversation spanning
-    many micro-batches still finalizes correctly, without any unbounded
-    streaming state."""
-    from otel_logger_spark.operators.rollups import conversation_metrics
-
-    base = batch_df.select(*STREAM_OUT_COLS)
-    return {
-        "logs": base,
-        "error": base.filter(batch_df["is_error"]),
-        "tool_call": base.filter(batch_df["is_tool_call"]),
-        "conversation_metrics": conversation_metrics(batch_df),
-    }
 
 
 def write_batch_sinks(
@@ -229,11 +203,13 @@ def run_streaming_pipeline(
     dedup: str | None = None,
     dedup_horizon: str = "30 seconds",
 ):
-    """The streaming pipeline: routed_sinks over the transcript stream,
-    started by start_batch_sinks (same trigger semantics); returns the
-    started query. ``coalesce=True`` enables the cross-batch stateful
-    multiline coalescer (entries flush on close or after ``idle_flush_ms``
-    of conversation idleness — the ForceFlush analogue).
+    """The streaming pipeline: the batch pipeline's routed_sinks over the
+    transcript stream, started by start_batch_sinks (same trigger
+    semantics); returns the started query. conversation_metrics lands as
+    per-batch partials that read_conversation_metrics finalizes.
+    ``coalesce=True`` enables the cross-batch stateful multiline coalescer
+    (entries flush on close or after ``idle_flush_ms`` of conversation
+    idleness — the ForceFlush analogue).
 
     ``dedup`` composes the ingest-time redelivery guard (streaming/dedup.py)
     in FRONT of parse/coalesce, so duplicates die before any downstream

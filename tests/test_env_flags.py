@@ -30,10 +30,14 @@ ALLOWED = {
     "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_ORACLE_SF_DIR",
 }
-# the sink deployment family (operators/sinks.py): format, URI, options and
-# codec, each with an optional per-sink suffix — the reference's
+# the sink deployment family (operators/sinks.py): format, URI and writer
+# options, each generic or with a per-sink suffix (``*``) — the reference's
 # OTEL_EXPORTER_OTLP_* / OTEL_EXPORTER_OTLP_LOGS_* precedence
-ALLOWED_FAMILY = "OTEL_SPARK_SINK_"
+SINK_FAMILY = {
+    f"OTEL_SPARK_SINK_{name}{suffix}"
+    for name in ("FORMAT", "URI", "OPTIONS")
+    for suffix in ("", "_*")
+}
 
 
 def _is_environ(node) -> bool:
@@ -127,10 +131,7 @@ def collect_env_keys(root: str = PKG) -> set[str]:
 
 
 def test_env_reads_match_allowlist():
-    keys = collect_env_keys()
-    family = {k for k in keys if k.startswith(ALLOWED_FAMILY)}
-    assert keys - family == ALLOWED
-    assert family, "the sink deployment family should be found"
+    assert collect_env_keys() == ALLOWED | SINK_FAMILY
 
 
 def test_collector_resolves_each_key_form(tmp_path):

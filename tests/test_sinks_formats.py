@@ -24,22 +24,23 @@ def test_resolve_sink_format_env(monkeypatch):
     monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_LOGS", "PARQUET")
     assert resolve_sink_format() == "parquet"
     # unsupported -> error, not silent default (main.go:342-344)
+    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_LOGS", "grpc")
     with pytest.raises(ValueError, match="unsupported sink format"):
-        resolve_sink_format("grpc")
+        resolve_sink_format()
 
 
-def test_passthrough_tee_and_json_format(spark, tmp_path):
+def test_passthrough_tee_and_json_format(spark, tmp_path, monkeypatch):
     src = str(tmp_path / "t.parquet")
     write_transcripts(src, n_convs=15, seed=5)
     routed = build_parsed(spark.read.parquet(src))
     out = str(tmp_path / "out")
+    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT", "json")
     manifest = write_routed_sinks(
         routed,
         conversation_metrics(routed),
         out,
         run_id="fmt1",
         passthrough_raw=True,
-        sink_format="json",
     )
     assert set(manifest["sinks"]) == {
         "logs", "error", "tool_call", "raw", "conversation_metrics",
@@ -94,7 +95,6 @@ def test_env_precedence_matrix(monkeypatch):
     monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_ERROR", "parquet")
     assert resolve_sink_format(sink="error") == "parquet"  # specific wins
     assert resolve_sink_format(sink="tool_call") == "json"  # others keep generic
-    assert resolve_sink_format("parquet", sink="error") == "parquet"  # explicit wins
     with pytest.raises(ValueError):
         monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_ERROR", "grpc")
         resolve_sink_format(sink="error")
@@ -161,3 +161,75 @@ def test_zero_row_sink_keeps_schema_and_one_empty_part(spark, tmp_path):
     got = spark.read.parquet(os.path.join(out, "tool_call"))
     assert got.count() == 0
     assert got.columns == spark.read.parquet(os.path.join(out, "logs")).columns
+
+
+def _footer_codecs(sink_dir: str) -> set[str]:
+    import glob
+
+    import pyarrow.parquet as pq
+
+    codecs = set()
+    for f in glob.glob(os.path.join(sink_dir, "**", "*.parquet"), recursive=True):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            codecs.update(rg.column(c).compression for c in range(rg.num_columns))
+    return codecs
+
+
+def test_sink_codec_default_and_per_sink_option(spark, tmp_path, monkeypatch):
+    """Parquet sinks default to snappy; OTEL_SPARK_SINK_OPTIONS_<SINK>
+    =compression=... changes the codec of that sink only."""
+    for v in ("OTEL_SPARK_SINK_OPTIONS", "OTEL_SPARK_SINK_OPTIONS_LOGS"):
+        monkeypatch.delenv(v, raising=False)
+    src = str(tmp_path / "tc.parquet")
+    write_transcripts(src, n_convs=10, seed=11)
+    routed = build_parsed(spark.read.parquet(src))
+    sinks = ("logs", "error", "tool_call", "conversation_metrics")
+
+    out = str(tmp_path / "default")
+    write_routed_sinks(routed, None, out, run_id="c1")
+    for s in sinks:
+        assert _footer_codecs(os.path.join(out, s)) == {"SNAPPY"}, s
+
+    monkeypatch.setenv("OTEL_SPARK_SINK_OPTIONS_LOGS", "compression=zstd")
+    out = str(tmp_path / "zstd_logs")
+    write_routed_sinks(routed, None, out, run_id="c2")
+    assert _footer_codecs(os.path.join(out, "logs")) == {"ZSTD"}
+    for s in sinks[1:]:
+        assert _footer_codecs(os.path.join(out, s)) == {"SNAPPY"}, s
+
+
+def test_json_logs_sink_partitioned_by_date(spark, tmp_path, monkeypatch):
+    """A json logs sink honours partition_logs_by_date: it lands in
+    event_date= directories (the layout operators/retention.py expects)
+    with every row of the manifest count."""
+    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_LOGS", "json")
+    src = str(tmp_path / "tj.parquet")
+    write_transcripts(src, n_convs=10, seed=6)
+    out = str(tmp_path / "outj")
+    manifest = write_routed_sinks(
+        build_parsed(spark.read.parquet(src)),
+        None,
+        out,
+        run_id="pj",
+        partition_logs_by_date=True,
+    )
+    logs_dir = os.path.join(out, "logs")
+    assert [d for d in os.listdir(logs_dir) if d.startswith("event_date=")]
+    logs = spark.read.json(logs_dir)
+    assert "event_date" in logs.columns
+    assert logs.count() == manifest["sinks"]["logs"]["n_rows"] > 0
+
+
+def test_export_timeout_restores_job_group_properties(spark):
+    """A timed sink export leaves none of its job-group properties on the
+    calling thread, so later jobs there carry no stale group, description
+    or interrupt flag."""
+    from otel_logger_spark.operators.sinks import _run_with_timeout
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    before = [sc.getLocalProperty(k) for k in keys]
+    assert _run_with_timeout(spark, "g1", 60_000, lambda: spark.range(3).count()) == 3
+    assert [sc.getLocalProperty(k) for k in keys] == before

@@ -10,10 +10,10 @@ from pyspark.sql import functions as F
 from otel_logger_spark.functions.parse import with_parsed
 from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
 from otel_logger_spark.operators.route import with_routing
+from otel_logger_spark.operators.sinks import routed_sinks
 from otel_logger_spark.streaming.analytics import DOCUMENTS_SCHEMA, diversity_sinks
 from otel_logger_spark.streaming.pipeline import (
     read_stream,
-    routed_sinks,
     run_streaming_pipeline,
     streaming_flush_window_counts,
     write_batch_sinks,
@@ -59,6 +59,25 @@ def test_streaming_matches_batch(spark, tmp_path):
         .count()
     )
     assert diff == 0
+
+
+def test_stream_and_batch_sink_schemas_match(spark, tmp_path):
+    """The streaming and batch pipelines write the same columns, with the
+    same types, to each of the four sinks (the stream adds only its
+    batchid partition column)."""
+    from otel_logger_spark.pipeline import run_pipeline
+
+    in_dir, _ = _write_input(tmp_path, n_convs=8)
+    s_out, b_out = str(tmp_path / "s_out"), str(tmp_path / "b_out")
+    q = run_streaming_pipeline(spark, in_dir, s_out, str(tmp_path / "s_ckpt"))
+    q.awaitTermination(300)
+    run_pipeline(spark, in_dir, b_out, run_id="schemas")
+    for sink in ("logs", "error", "tool_call", "conversation_metrics"):
+        got = spark.read.parquet(os.path.join(s_out, sink)).drop("batchid")
+        want = spark.read.parquet(os.path.join(b_out, sink))
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ], sink
 
 
 def test_streaming_flush_windows(spark, tmp_path):

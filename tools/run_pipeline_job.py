@@ -22,7 +22,6 @@ def main():
 
     from pyspark.sql import SparkSession
 
-    from otel_logger_spark.operators.rollups import conversation_metrics
     from otel_logger_spark.operators.sinks import write_routed_sinks
     from otel_logger_spark.pipeline import build_parsed
 
@@ -47,9 +46,7 @@ def main():
 
     t0 = time.monotonic()
     routed = build_parsed(transcripts, repartition=args.repartition)
-    manifest = write_routed_sinks(
-        routed, conversation_metrics(routed), args.out, run_id=args.run_id
-    )
+    manifest = write_routed_sinks(routed, None, args.out, run_id=args.run_id)
     wall = time.monotonic() - t0
 
     n_in = transcripts.count()
