@@ -34,49 +34,48 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Current rotation (one declaration of the routed sinks in
-    # operators/sinks.py, shared by the batch and streaming pipelines;
-    # pipeline.run_pipeline no longer builds a metrics frame). Every gate
-    # built on queries._routed runs pipeline.py and operators/route.py:
-    # the eleven parse/pipeline gates and pivot_role_severity sit in the
-    # window. No gate builds a stream or writes a sink. The rotation is a
-    # full swap: the 29 gates deferred for the last two changes are back
-    # in the window, and deferred in their place are 29 gates those
-    # changes verified in the window on code this change does not touch.
-    # Also kept in the window: the gates whose operators the streaming
-    # sink builders call (log_templates, rate_spikes, cms_counts,
-    # hygiene_manifest, diversity) and the four exact/simhash dedup and
-    # mix gates. The full 79-gate set is re-verified against the sf0.01
-    # DuckDB oracle with tools/check_correctness.py.
-    "embedding_topk",
-    "embedding_near_dup",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "lang_id",
-    "doc_fingerprint",
-    "multimodal_decode",
-    "audio_stats",
-    "embedding_outliers",
-    "pii_redaction",
-    "doc_repetition",
-    "decontam_split",
-    "incremental_dedup",
-    "tfidf_terms",
-    "span_dedup",
-    "snapshot_diff",
-    "dedup_canonical",
-    "normalized_dedup",
-    "token_mix",
-    "fixed_k_sample",
-    "quantized_ann",
-    "leakage_split",
-    "dsir_select",
-    "vocab_oov",
-    "source_overlap",
-    "chunk_windows",
-    "image_near_dup",
-    "contamination_profile",
-    "temperature_mix",
+    # Current rotation (one part-file inventory in fsio.py for sink
+    # lineage, the TTL audit and compaction; conversation_metrics'
+    # aggregates declared once in operators/rollups.py). No gate writes a
+    # sink or runs a maintenance operator. The six gates that run
+    # rollups.py sit in the window: conversation_rollup,
+    # window_turn_rollup, top_k_noisy, flush_window_counts, summary_union
+    # (pipeline.logs_with_summaries -> summary_rows) and median_gap. The
+    # rotation is a full swap: the 29 gates deferred for the last change
+    # are back in the window, and deferred in their place are 29 gates
+    # the last change verified in the window on code this change does
+    # not touch (the sixteen verified two rounds running first). The full
+    # 79-gate set is re-verified against the sf0.01 DuckDB oracle with
+    # tools/check_correctness.py.
+    "parse_severity_counts",
+    "parse_event_ts",
+    "parse_messages_attrs",
+    "level_precedence",
+    "multiline_entry_stats",
+    "route_sink_counts",
+    "diversity",
+    "dedup_exact_stats",
+    "dedup_drop_exact",
+    "training_mix",
+    "simhash_pairs",
+    "hygiene_manifest",
+    "cms_counts",
+    "rate_spikes",
+    "log_templates",
+    "pivot_role_severity",
+    "exact_percentiles",
+    "zorder_buckets",
+    "asof_latest_signup",
+    "asof_next_purchase",
+    "range_click_incidents",
+    "sessionization",
+    "approx_distinct",
+    "funnel",
+    "corpus_cartography",
+    "bpe_encode",
+    "bpe_merges",
+    "bigram_fluency",
+    "lm_fluency",
 ]
 
 

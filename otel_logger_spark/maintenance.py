@@ -84,13 +84,10 @@ def run_maintenance_lifecycle(
 
         zvalue_expr([F.lit(0).cast("long")] * len(zorder_cols), bits)
 
-    fs = HadoopFS(spark, root)
     recovered_pre_pass = []
-    for st in fs._fs.listStatus(fs._p(root)):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.endswith(TMP_SUFFIX):
-            target = st.getPath().toString()[: -len(TMP_SUFFIX)]
-            if recover_compaction(spark, target):
+    for name, uri in HadoopFS(spark, root).list_dirs(root):
+        if name.endswith(TMP_SUFFIX):
+            if recover_compaction(spark, uri[: -len(TMP_SUFFIX)]):
                 recovered_pre_pass.append(name[: -len(TMP_SUFFIX)])
 
     expire_report = (

@@ -10,16 +10,21 @@ Safety protocol (crash anywhere leaves a recoverable state, and NEVER a
 state where rows are lost):
 1. rewrite the directory's rows into ``<dir>.compact_tmp`` with
    ``repartition(n)`` sized from the measured input bytes;
-2. VERIFY the tmp: _SUCCESS present and footer row count == source row
-   count (the lineage primitive, sinks.parquet_partition_lineage);
+2. VERIFY the tmp: its footer row count (sinks.parquet_partition_lineage)
+   == the source row count, and the source's part files (path, bytes) are
+   unchanged since step 1 — no concurrent writer;
 3. swap: delete the source, rename tmp into place. A crash between 3's
    two steps leaves a complete verified tmp next to a missing dir —
    ``recover_compaction`` (called automatically at the start of every
    compaction) finishes the rename, mirroring the manifest's .tmp
    recovery (fsio.write_text_atomic).
 
-Verification reads footers only (no data pages); the one full read is the
-rewrite itself — you cannot compact cheaper than one read + one write.
+Source fingerprints, bytes and rows all come from the one part-file
+inventory (fsio.parquet_part_files), which skips hidden paths such as
+``_temporary`` exactly as the rewrite's ``spark.read.parquet`` does, so
+the verify compares like with like. Verification reads footers only (no
+data pages); the one full read is the rewrite itself — you cannot
+compact cheaper than one read + one write.
 """
 
 from __future__ import annotations
@@ -28,11 +33,8 @@ import math
 
 from pyspark.sql import SparkSession
 
-from otel_logger_spark.fsio import HadoopFS
-from otel_logger_spark.operators.sinks import (
-    SMALL_SINK_MAX_FILES,
-    parquet_partition_lineage,
-)
+from otel_logger_spark.fsio import HadoopFS, parquet_part_files
+from otel_logger_spark.operators.sinks import parquet_partition_lineage
 
 TMP_SUFFIX = ".compact_tmp"
 
@@ -49,44 +51,10 @@ def recover_compaction(spark: SparkSession, path: str) -> bool:
     if not fs.exists(tmp):
         return False
     if fs.exists(path):
-        fs._fs.delete(fs._p(tmp), True)  # source intact: tmp is garbage
+        fs.delete(tmp)  # source intact: tmp is garbage
         return False
-    fs._fs.rename(fs._p(tmp), fs._p(path))
+    fs.rename(tmp, path)
     return True
-
-
-def _file_fingerprints(
-    spark: SparkSession, fs: HadoopFS, path: str
-) -> set[tuple[str, int]]:
-    """{(uri, byte length)} of every part file. Doubles as the
-    concurrent-writer change detector: an appended, replaced, or removed
-    part file changes the set.
-
-    Two-tier like the lineage primitive (one ContentSummary call decides):
-    small dirs use the driver RemoteIterator (statuses carry the lengths —
-    no per-file getFileStatus, but still one py4j round-trip per file);
-    big dirs — the compaction-worthy ones — use Spark's ``binaryFile``
-    reader with only (path, length) selected, so the recursive listing
-    runs JVM-side and no content bytes are read. Measured at 5,000 files:
-    31.6 s (iterator) -> 1.0-2.0 s (BENCH/compact_scale.md)."""
-    if fs.file_count(path) <= 2 * SMALL_SINK_MAX_FILES + 4:
-        it = fs._fs.listFiles(fs._p(path), True)
-        out = set()
-        while it.hasNext():
-            st = it.next()
-            p = st.getPath().toString()
-            if p.endswith(".parquet"):
-                out.add((p, int(st.getLen())))
-        return out
-    rows = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "length")
-        .collect()
-    )
-    return {(r["path"], int(r["length"])) for r in rows}
 
 
 def compact_parquet_dir(
@@ -143,23 +111,20 @@ def rewrite_verify_swap(
     row delta is still asserted, never waived."""
     recovered = recover_compaction(spark, path)
     fs = HadoopFS(spark, path)
-    fps = _file_fingerprints(spark, fs, path)
-    files = sorted(p for p, _ in fps)
-    if not files:
+    # one inventory pass gives the fingerprints, the byte total and the
+    # source row count
+    src = parquet_part_files(spark, path)
+    if not src:
         return {"n_rows": 0, "files_before": 0, "files_after": 0,
                 "recovered": recovered}
-    # byte total straight from the listing statuses (exact part-file
-    # bytes; no ContentSummary call, no marker/.crc noise) — still zero
-    # per-file gateway round-trips
-    total_bytes = sum(length for _, length in fps)
+    fps = {f[:2] for f in src}
+    src_rows = sum(n for _, _, n in src)
+    total_bytes = sum(n_bytes for _, n_bytes, _ in src)
     n_target = max(1, math.ceil(total_bytes / target_file_bytes))
-    if skip_if_compact and len(files) <= n_target:
-        return {"n_rows": sum(
-            p["n_rows"] for p in parquet_partition_lineage(spark, path)
-        ), "files_before": len(files), "files_after": len(files),
-            "recovered": recovered}
+    if skip_if_compact and len(src) <= n_target:
+        return {"n_rows": src_rows, "files_before": len(src),
+                "files_after": len(src), "recovered": recovered}
 
-    src_rows = sum(p["n_rows"] for p in parquet_partition_lineage(spark, path))
     tmp = path + TMP_SUFFIX
     (
         transform(spark.read.parquet(path), n_target)
@@ -172,15 +137,15 @@ def rewrite_verify_swap(
     want_rows = src_rows if expected_rows is None else expected_rows(src_rows)
     if tmp_rows != want_rows:
         # leave the source untouched; remove the bad rewrite
-        fs._fs.delete(fs._p(tmp), True)
+        fs.delete(tmp)
         raise RuntimeError(
             f"rewrite verify failed at {path}: expected {want_rows} rows "
             f"(source {src_rows}), rewrite {tmp_rows} — source left "
             "untouched"
         )
-    fps_now = _file_fingerprints(spark, fs, path)
+    fps_now = {f[:2] for f in parquet_part_files(spark, path)}
     if fps_now != fps:
-        fs._fs.delete(fs._p(tmp), True)
+        fs.delete(tmp)
         raise RuntimeError(
             f"concurrent writer detected at {path}: "
             f"{len(fps_now - fps)} part file(s) appeared and "
@@ -188,14 +153,14 @@ def rewrite_verify_swap(
             "began — compaction aborted, source left untouched (stop the "
             "writer before compacting)"
         )
-    fs._fs.delete(fs._p(path), True)
-    fs._fs.rename(fs._p(tmp), fs._p(path))
+    fs.delete(path)
+    fs.rename(tmp, path)
     return {
         # == src_rows for layout-only rewrites; the post-delete count for
         # row-removing ones (verified against expected_rows either way)
         "n_rows": tmp_rows,
         "rows_removed": src_rows - tmp_rows,
-        "files_before": len(files),
+        "files_before": len(src),
         "files_after": len(tmp_parts),
         "recovered": recovered,
     }

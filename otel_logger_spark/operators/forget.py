@@ -94,14 +94,11 @@ def forget_sinks(
             reports[sink] = {"matched": 0, "rows_removed": 0,
                              "skipped": True, "missing": True}
             continue
-        part_dirs = [
-            st.getPath() for st in fs._fs.listStatus(fs._p(root))
-            if st.isDirectory() and "=" in st.getPath().getName()
-        ]
+        part_dirs = [(n, u) for n, u in fs.list_dirs(root) if "=" in n]
         if part_dirs:
-            for p in part_dirs:
-                reports[f"{sink}/{p.getName()}"] = forget_parquet_dir(
-                    spark, p.toString(), keys, key_col, target_file_bytes
+            for name, uri in part_dirs:
+                reports[f"{sink}/{name}"] = forget_parquet_dir(
+                    spark, uri, keys, key_col, target_file_bytes
                 )
         else:
             reports[sink] = forget_parquet_dir(

@@ -9,14 +9,13 @@ partition is accounted (rows via footer counts, read BEFORE deletion)
 and the report is returned to the caller, so an audit trail of what a
 TTL pass removed always exists.
 
-The audit is ONE accounting pass however many partitions expire (a year x
-4 sinks is ~1,500 partitions — per-partition lineage calls would be 1,500
-sequential footer loops or Spark jobs): small tables get a single
-recursive listing + driver footer reads; big ones get a single
-distributed empty-required-schema job over exactly the expired
-directories (the same two-tier strategy as sinks.parquet_partition_lineage,
-chosen by one ContentSummary gateway call). tests/test_retention.py pins
-the job count.
+The audit is ONE pass of the part-file inventory
+(fsio.parquet_part_files) over exactly the expired directories, however
+many partitions expire (a year x 4 sinks is ~1,500 partitions —
+per-partition lineage calls would be 1,500 sequential footer loops or
+Spark jobs): driver footer reads when few part files expire, otherwise
+one distributed empty-required-schema job. It counts what Spark's reader
+reads, hidden paths skipped. tests/test_retention.py pins the job count.
 """
 
 from __future__ import annotations
@@ -25,28 +24,20 @@ import re
 from datetime import date, datetime
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from otel_logger_spark.fsio import HadoopFS
-from otel_logger_spark.operators.sinks import SMALL_SINK_MAX_FILES
+from otel_logger_spark.fsio import HadoopFS, parquet_part_files
 
 
 def list_date_partitions(
     spark: SparkSession, path: str, partition_col: str = "event_date"
 ) -> list[tuple[date, str]]:
     """(date, uri) for each first-level <partition_col>=YYYY-MM-DD child."""
-    fs = HadoopFS(spark, path)
-    out = []
     pat = re.compile(re.escape(partition_col) + r"=(\d{4}-\d{2}-\d{2})$")
-    for st in fs._fs.listStatus(fs._p(path)):
-        if not st.isDirectory():
-            continue
-        m = pat.search(st.getPath().getName())
+    out = []
+    for name, uri in HadoopFS(spark, path).list_dirs(path):
+        m = pat.search(name)
         if m:
-            out.append(
-                (datetime.strptime(m.group(1), "%Y-%m-%d").date(),
-                 st.getPath().toString())
-            )
+            out.append((datetime.strptime(m.group(1), "%Y-%m-%d").date(), uri))
     return sorted(out)
 
 
@@ -54,55 +45,17 @@ def _audit_expired(
     spark: SparkSession, root: str, uris: list[str]
 ) -> dict[str, dict]:
     """{partition-dir-name: {"n_rows", "n_files"}} for every uri, in ONE
-    accounting pass:
-
-    - small table (one ContentSummary call decides): one recursive listing
-      of the root + driver footer reads — zero Spark jobs;
-    - otherwise: ONE distributed job over exactly the expired directories
-      (empty required schema; row counts served from footer metadata),
-      grouped by ``input_file_name()``.
-
-    File-to-partition attribution is pure-Python prefix work after a single
-    ``relativize_many`` against the root (O(1) extra gateway calls)."""
-    fs = HadoopFS(spark, root)
-    names = {u.rstrip("/").rsplit("/", 1)[-1] for u in uris}
-    per = {n: {"n_rows": 0, "n_files": 0} for n in names}
-
-    if fs.file_count(root) <= 2 * SMALL_SINK_MAX_FILES + 4:
-        files = fs.list_files_recursive(root, ".parquet")
-        counted = [
-            (f, rel.split("/", 1)[0])
-            for f, rel in zip(files, fs.relativize_many(root, files))
-            if rel.split("/", 1)[0] in names
-        ]
-        pairs = [(head, fs.parquet_row_count(f)) for f, head in counted]
-    else:
-        from pyspark.errors import AnalysisException
-
-        try:
-            rows = (
-                spark.read.parquet(*uris)
-                .groupBy(F.input_file_name().alias("file"))
-                .agg(F.count(F.lit(1)).alias("n_rows"))
-                .collect()
-            )
-        except AnalysisException:
-            # Every expired partition is parquet-empty (markers/_SUCCESS
-            # only), so schema inference has nothing to read. Same outcome
-            # as the small branch on empty dirs: zero-count audit entries,
-            # expiry proceeds. (One non-empty partition in the batch is
-            # enough to infer the schema; empty ones then just contribute
-            # no rows — only the ALL-empty case lands here.)
-            rows = []
-        rels = fs.relativize_many(root, [r["file"] for r in rows])
-        pairs = [
-            (rel.split("/", 1)[0], int(r["n_rows"]))
-            for rel, r in zip(rels, rows)
-        ]
-    for head, n in pairs:
-        if head in per:
-            per[head]["n_rows"] += n
-            per[head]["n_files"] += 1
+    pass of the part-file inventory over exactly those directories
+    (fsio.parquet_part_files), grouped by the first path segment below
+    the root."""
+    per = {
+        u.rstrip("/").rsplit("/", 1)[-1]: {"n_rows": 0, "n_files": 0}
+        for u in uris
+    }
+    for rel, _, n in parquet_part_files(spark, root, uris):
+        counts = per[rel.split("/", 1)[0]]
+        counts["n_rows"] += n
+        counts["n_files"] += 1
     return per
 
 
@@ -123,13 +76,12 @@ def expire_partitions(
     to_expire, kept = [], []
     for d, uri in list_date_partitions(spark, path, partition_col):
         (kept.append(d.isoformat()) if d >= before else to_expire.append((d, uri)))
-    audit = _audit_expired(spark, path, [u for _, u in to_expire]) if to_expire else {}
+    audit = _audit_expired(spark, path, [u for _, u in to_expire])
     expired = []
     for d, uri in to_expire:
-        name = uri.rstrip("/").rsplit("/", 1)[-1]
-        counts = audit.get(name, {"n_rows": 0, "n_files": 0})
+        counts = audit[uri.rstrip("/").rsplit("/", 1)[-1]]
         if not dry_run:
-            fs._fs.delete(fs._p(uri), True)
+            fs.delete(uri)
         expired.append({
             "partition": f"{partition_col}={d.isoformat()}",
             "n_rows": counts["n_rows"],

@@ -12,24 +12,46 @@ combine); windows are used only where per-row context must survive
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _metric_aggs() -> list[tuple[str, Column, Callable[[str], Column]]]:
+    """conversation_metrics' eight aggregates, declared once as (column,
+    partial over log rows, merge over partials). The merges re-aggregate
+    partials of ANY split of a conversation's rows (salted buckets,
+    streaming micro-batches) into the single-pass value: each is a
+    sum/min/max of the same."""
+    return [
+        ("n_entries", F.count("*"), F.sum),
+        ("last_turn_idx", F.max("turn_idx"), F.max),
+        ("n_errors", F.sum(F.col("is_error").cast("long")), F.sum),
+        ("n_tool_calls", F.sum(F.col("is_tool_call").cast("long")), F.sum),
+        ("n_json", F.sum(F.col("json_ok").cast("long")), F.sum),
+        ("first_ts", F.min("event_ts"), F.min),
+        ("last_ts", F.max("event_ts"), F.max),
+        # exit_code analogue: conversations with any fatal get 1
+        ("exit_code",
+         F.max(F.when(F.col("severity_num") >= 21, 1).otherwise(0)), F.max),
+    ]
+
+
+def metric_partials() -> list[Column]:
+    """conversation_metrics' aggregates over log rows."""
+    return [partial.alias(name) for name, partial, _ in _metric_aggs()]
+
+
+def metric_merges() -> list[Column]:
+    """conversation_metrics' aggregates over rows of metric_partials()."""
+    return [merge(name).alias(name) for name, _, merge in _metric_aggs()]
 
 
 def conversation_metrics(df: DataFrame) -> DataFrame:
     """One summary row per conversation — the exit-record analogue
     (fields mirror command/exit_code/exit_status, main.go:582-586)."""
-    return df.groupBy("conv_id").agg(
-        F.count("*").alias("n_entries"),
-        F.max("turn_idx").alias("last_turn_idx"),
-        F.sum(F.col("is_error").cast("long")).alias("n_errors"),
-        F.sum(F.col("is_tool_call").cast("long")).alias("n_tool_calls"),
-        F.sum(F.col("json_ok").cast("long")).alias("n_json"),
-        F.min("event_ts").alias("first_ts"),
-        F.max("event_ts").alias("last_ts"),
-        # exit_code analogue: conversations with any fatal get 1
-        F.max(F.when(F.col("severity_num") >= 21, 1).otherwise(0)).alias("exit_code"),
-    )
+    return df.groupBy("conv_id").agg(*metric_partials())
 
 
 def summary_rows(df: DataFrame) -> DataFrame:

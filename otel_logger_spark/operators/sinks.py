@@ -19,8 +19,9 @@ the environment, deadline, counted write, footer lineage, commit).
 Action economy (matters at 100 TB): the expensive plan executes once to
 stage the logs sink; error/tool_call/metrics (routed_sinks) and the raw
 tee are column-pruned re-reads of that staged table (no multi-GB cache churn);
-per-partition lineage comes from the committed parquet footers and row
-counts ride the writes via Observation. Total: 4-5 writes, zero extra
+per-partition lineage comes from the committed parquet footers (the one
+part-file inventory, fsio.parquet_part_files) and row counts ride the
+writes via Observation. Total: 4-5 writes, zero extra
 aggregations.
 """
 
@@ -42,7 +43,7 @@ from otel_logger_spark.schemas import (
     SINK_LOGS,
     SINK_TOOL_CALL,
 )
-from otel_logger_spark.fsio import HadoopFS, join_path
+from otel_logger_spark.fsio import HadoopFS, join_path, parquet_part_files
 from otel_logger_spark.operators.rollups import conversation_metrics
 from otel_logger_spark.operators.route import is_error_col, is_tool_call_col
 
@@ -77,33 +78,14 @@ def save_manifest(spark, out_dir: str, manifest: dict) -> None:
     )
 
 
-# Below this many part files, per-file driver footer reads (a few ms each:
-# one py4j round-trip + a footer-ranged read) are cheaper than a Spark
-# job's fixed scheduling cost — measured at sf0.1 this was the round-3
-# full_pipeline regression (+0.5s: four per-sink footer-count JOBS whose
-# fixed costs dominate at small scale). At the 100 TB target every real
-# sink has >> 64 files, so production lineage takes the distributed branch.
-SMALL_SINK_MAX_FILES = 64
-
-
 def parquet_partition_lineage(spark, path: str) -> list[dict]:
-    """Per-partition lineage read from the committed parquet footers: every
-    write task produces one part file, so footer row counts ARE the
-    per-partition counts.
-
-    Strategy by sink size (one ContentSummary gateway call decides):
-    - <= SMALL_SINK_MAX_FILES part files: list + read each footer on the
-      driver (ms each; no Spark job — the fixed per-job scheduling cost is
-      the regression at tiny scale).
-    - bigger sinks: ONE distributed Spark job — an empty-required-schema
-      scan (``ReadSchema: struct<>``; the vectorized reader serves batch
-      sizes straight from row-group metadata, no column pages decoded)
-      grouped by ``input_file_name()``, one tiny output row per part file.
-      At the 100 TB target's 10^5-10^6 part files this is seconds of
-      cluster-parallel metadata work; a serial driver loop there would be
-      minutes to hours inside every sink's commit path.
-    Relativization of returned URIs is pure-Python string work
-    (fsio.relativize_many): O(1) extra gateway calls.
+    """Per-partition lineage of a committed parquet sink: every write task
+    produces one part file, so footer row counts ARE the per-partition
+    counts. A projection of the one part-file inventory
+    (fsio.parquet_part_files: driver footer reads for small sinks, one
+    distributed job for big ones; hidden paths such as ``_temporary`` are
+    skipped as Spark's reader skips them, so the lineage sums to what the
+    sink reads back).
 
     A zero-row write still leaves one part file carrying the schema and 0
     rows, so its lineage is that one part with ``n_rows`` 0 and the sink
@@ -112,31 +94,9 @@ def parquet_partition_lineage(spark, path: str) -> list[dict]:
     (permissions, transient object-store errors, corrupt footers)
     PROPAGATES — a blanket catch here would let a transient error
     masquerade as a legitimately-empty sink."""
-    fs = HadoopFS(spark, path)
-    # raw file count (ONE gateway call) includes commit markers and local-FS
-    # .crc shadows, so it only gates whether listing is cheap; the branch
-    # decision uses the true part-file count from the listing
-    files = None
-    if fs.file_count(path) <= 2 * SMALL_SINK_MAX_FILES + 4:
-        files = fs.list_files_recursive(path, ".parquet")
-        if not files:
-            return []  # only commit markers present
-    if files is not None and len(files) <= SMALL_SINK_MAX_FILES:
-        pairs = [(f, fs.parquet_row_count(f)) for f in files]
-        rels = fs.relativize_many(path, [f for f, _ in pairs])
-        by_file = sorted(zip(rels, (n for _, n in pairs)))
-    else:
-        rows = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .collect()
-        )
-        rels = fs.relativize_many(path, [r["file"] for r in rows])
-        by_file = sorted(zip(rels, (int(r["n_rows"]) for r in rows)))
     return [
         {"partition_id": i, "n_rows": n, "file": rel}
-        for i, (rel, n) in enumerate(by_file)
+        for i, (rel, _, n) in enumerate(parquet_part_files(spark, path))
     ]
 
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from otel_logger_spark.operators.rollups import metric_merges, metric_partials
+
 
 def with_salt(df: DataFrame, buckets: int = 16, order_col: str = "turn_idx") -> DataFrame:
     return df.withColumn("_salt", F.pmod(F.hash(order_col), F.lit(buckets)))
@@ -25,28 +27,10 @@ def with_salt(df: DataFrame, buckets: int = 16, order_col: str = "turn_idx") -> 
 def conversation_metrics_salted(routed: DataFrame, buckets: int = 16) -> DataFrame:
     """Two-phase (salted) variant of rollups.conversation_metrics — same
     output, hot conversations spread over ``buckets`` tasks in phase 1."""
-    partial = (
+    return (
         with_salt(routed, buckets)
         .groupBy("conv_id", "_salt")
-        .agg(
-            F.count("*").alias("n_entries"),
-            F.max("turn_idx").alias("last_turn_idx"),
-            F.sum(F.col("is_error").cast("long")).alias("n_errors"),
-            F.sum(F.col("is_tool_call").cast("long")).alias("n_tool_calls"),
-            F.sum(F.col("json_ok").cast("long")).alias("n_json"),
-            F.min("event_ts").alias("first_ts"),
-            F.max("event_ts").alias("last_ts"),
-            F.max(F.when(F.col("severity_num") >= 21, 1).otherwise(0)).alias("exit_code"),
-        )
+        .agg(*metric_partials())
+        .groupBy("conv_id")
+        .agg(*metric_merges())
     )
-    return partial.groupBy("conv_id").agg(
-        F.sum("n_entries").alias("n_entries"),
-        F.max("last_turn_idx").alias("last_turn_idx"),
-        F.sum("n_errors").alias("n_errors"),
-        F.sum("n_tool_calls").alias("n_tool_calls"),
-        F.sum("n_json").alias("n_json"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-        F.max("exit_code").alias("exit_code"),
-    )
-

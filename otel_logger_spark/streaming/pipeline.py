@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from otel_logger_spark.functions.parse import with_parsed
+from otel_logger_spark.operators.rollups import metric_merges
 from otel_logger_spark.operators.sinks import routed_sinks
 from otel_logger_spark.pipeline import parse_enrich_route
 from otel_logger_spark.schemas import TRANSCRIPT_SCHEMA
@@ -178,16 +179,7 @@ def read_conversation_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     merge is a pure re-aggregation (sum/min/max), safe whatever the
     batch boundaries were."""
     parts = spark.read.parquet(os.path.join(out_dir, "conversation_metrics"))
-    return parts.groupBy("conv_id").agg(
-        F.sum("n_entries").alias("n_entries"),
-        F.max("last_turn_idx").alias("last_turn_idx"),
-        F.sum("n_errors").alias("n_errors"),
-        F.sum("n_tool_calls").alias("n_tool_calls"),
-        F.sum("n_json").alias("n_json"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-        F.max("exit_code").alias("exit_code"),
-    )
+    return parts.groupBy("conv_id").agg(*metric_merges())
 
 
 def run_streaming_pipeline(

@@ -125,11 +125,12 @@ def test_compact_aborts_on_concurrent_writer(spark, tmp_path, monkeypatch):
     assert spark.read.parquet(path).count() == 1007  # nothing lost, late row kept
 
 
-def test_compact_scale_rehearsal_5000_files(spark, tmp_path):
+def test_compact_scale_rehearsal_5000_files(spark, tmp_path, monkeypatch):
     """The docstring's motivating case at real fan-out: ~5,000 micro-batch
     files compact in ONE rewrite with a bounded number of Spark jobs
-    (lineage + rewrite + planning — never O(n_files) jobs) and no row
-    loss. Timings land in BENCH/compact_scale.md."""
+    (lineage + rewrite + planning — never O(n_files) jobs), no serial
+    driver footer read of any source file, and no row loss. Timings land
+    in BENCH/compact_scale.md."""
     import shutil
     import time
 
@@ -146,6 +147,12 @@ def test_compact_scale_rehearsal_5000_files(spark, tmp_path):
     for i in range(n_files):
         shutil.copy(src, os.path.join(path, f"part-{i:05d}-c000.snappy.parquet"))
 
+    footer_reads = []
+    real_prc = HadoopFS.parquet_row_count
+    monkeypatch.setattr(
+        HadoopFS, "parquet_row_count",
+        lambda self, p: footer_reads.append(p) or real_prc(self, p),
+    )
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", "compact-5k")
     t0 = time.monotonic()
@@ -160,6 +167,9 @@ def test_compact_scale_rehearsal_5000_files(spark, tmp_path):
     assert res["files_after"] == 1
     assert spark.read.parquet(path).count() == 10 * n_files
     assert n_jobs <= 8, f"compaction must not scale jobs with file count: {n_jobs}"
+    # the one-file rewrite's verify may read its footer; no source file's
+    source_reads = [p for p in footer_reads if TMP_SUFFIX not in p]
+    assert source_reads == [], f"{len(source_reads)} serial source footer reads"
     print(f"\ncompact 5k files: {wall:.1f}s wall, {n_jobs} jobs")
 
 

@@ -391,13 +391,13 @@ def test_lineage_read_errors_propagate_not_swallowed(spark, tmp_path):
     def raising(self, p, suffix=".parquet"):
         raise boom
 
-    orig = HadoopFS.list_files_recursive
-    HadoopFS.list_files_recursive = raising
+    orig = HadoopFS.iter_files
+    HadoopFS.iter_files = raising
     try:
         with pytest.raises(RuntimeError, match="transient object-store"):
             parquet_partition_lineage(spark, path)
     finally:
-        HadoopFS.list_files_recursive = orig
+        HadoopFS.iter_files = orig
     # a sink directory with no part files at all (only commit markers —
     # what an overwrite of zero rows can leave) yields empty lineage
     empty = tmp_path / "empty_sink"
