@@ -34,48 +34,46 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Current rotation (one part-file inventory in fsio.py for sink
-    # lineage, the TTL audit and compaction; conversation_metrics'
-    # aggregates declared once in operators/rollups.py). No gate writes a
-    # sink or runs a maintenance operator. The six gates that run
-    # rollups.py sit in the window: conversation_rollup,
-    # window_turn_rollup, top_k_noisy, flush_window_counts, summary_union
-    # (pipeline.logs_with_summaries -> summary_rows) and median_gap. The
-    # rotation is a full swap: the 29 gates deferred for the last change
-    # are back in the window, and deferred in their place are 29 gates
-    # the last change verified in the window on code this change does
-    # not touch (the sixteen verified two rounds running first). The full
-    # 79-gate set is re-verified against the sf0.01 DuckDB oracle with
-    # tools/check_correctness.py.
-    "parse_severity_counts",
-    "parse_event_ts",
-    "parse_messages_attrs",
-    "level_precedence",
-    "multiline_entry_stats",
-    "route_sink_counts",
-    "diversity",
-    "dedup_exact_stats",
-    "dedup_drop_exact",
-    "training_mix",
-    "simhash_pairs",
-    "hygiene_manifest",
-    "cms_counts",
-    "rate_spikes",
-    "log_templates",
-    "pivot_role_severity",
-    "exact_percentiles",
-    "zorder_buckets",
-    "asof_latest_signup",
-    "asof_next_purchase",
-    "range_click_incidents",
-    "sessionization",
-    "approx_distinct",
-    "funnel",
-    "corpus_cartography",
-    "bpe_encode",
-    "bpe_merges",
-    "bigram_fluency",
-    "lm_fluency",
+    # Current rotation (connected_components in functions/graph.py drops
+    # the edges that leave the node set; get_spark names a Python worker
+    # daemon, which the driver's plain session does not load, so no gate
+    # runs it). The four gates that run graph.py sit in the window:
+    # dedup_clusters, dedup_clusters_two_phase, dedup_canonical and
+    # leakage_split. The rotation is a full swap: the 29 gates deferred
+    # for the last change are back in the window, and deferred in their
+    # place are 29 gates the last change verified in the window on code
+    # this change does not touch (the nineteen verified two rounds
+    # running first). The full 79-gate set is re-verified against the
+    # sf0.01 DuckDB oracle with tools/check_correctness.py.
+    "conversation_rollup",
+    "window_turn_rollup",
+    "top_k_noisy",
+    "flush_window_counts",
+    "summary_union",
+    "pricing_summary",
+    "top_revenue_orders",
+    "region_rollup",
+    "distinct_users",
+    "freqcap",
+    "ngram_jaccard",
+    "weighted_sample",
+    "minhash_pairs",
+    "text_quality",
+    "pack_shards",
+    "ann_ivf_quantized",
+    "semantic_dedup",
+    "median_gap",
+    "rollup_role_style",
+    "embedding_topk",
+    "embedding_near_dup",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "lang_id",
+    "doc_fingerprint",
+    "multimodal_decode",
+    "audio_stats",
+    "embedding_outliers",
+    "pii_redaction",
 ]
 
 

@@ -46,7 +46,8 @@ def connected_components(
 ) -> DataFrame:
     """Returns (``id_col``, cluster_id): cluster_id = min node id in the
     component (min works for any orderable id type — long, string, ...).
-    Every node appears, singletons included."""
+    Every node appears, singletons included; only nodes appear. An edge
+    endpoint missing from ``nodes`` never joins two components."""
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
     )
@@ -57,6 +58,9 @@ def connected_components(
     sym = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
+        # every u is a node; a v outside ``nodes`` is left for each
+        # algorithm to drop (one semi-join here, inside the checkpoint job)
+        .join(labels.select(F.col("node").alias("u")), "u", "left_semi")
         .localCheckpoint(eager=True)  # edges reused every round
     )
     if algorithm == "two_phase":
@@ -75,9 +79,12 @@ def _label_propagation_cc(labels: DataFrame, sym: DataFrame, max_iter: int) -> D
     """Round-9 shape (same fixpoint, same output, fewer and smaller jobs):
 
     - The loop runs over EDGE NODES ONLY (``sym.u`` distinct — symmetric, so
-      it covers every endpoint). A singleton's label never changes, so
-      propagating over the full node table only re-shuffles rows whose label
-      is already final; at 100 TB the edge-incident subset is orders of
+      it covers every endpoint that is a node). An endpoint ``v`` outside
+      the nodes has no edge of its own left in ``sym``: it may receive a
+      label but never passes one on, and the final join from ``labels``
+      leaves it out. A singleton's label never changes, so propagating
+      over the full node table only re-shuffles rows whose label is
+      already final; at 100 TB the edge-incident subset is orders of
       magnitude smaller than the corpus. Singletons re-attach at the end via
       one left join + coalesce (identical output, pytest-pinned).
     - ``localCheckpoint(eager=False)``: the convergence ``count()`` is the
@@ -161,6 +168,9 @@ def _two_phase_cc(labels: DataFrame, sym: DataFrame, max_iter: int) -> DataFrame
     canon = (
         sym.filter(F.col("u") > F.col("v"))
         .select(F.col("u").alias("hi"), F.col("v").alias("lo"))
+        # sym's u side is already in the nodes; a lo outside them would
+        # join its hi neighbours into one star
+        .join(labels.select(F.col("node").alias("lo")), "lo", "left_semi")
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "otel-logger-spark",
@@ -84,7 +86,18 @@ def get_spark(
         # a real cluster sizes driver/executor memory via spark-submit.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # a reused Python worker re-reads every zip archive's directory
+        # before each task (importlib.invalidate_caches); this daemon skips
+        # the archives that did not change on disk (worker_daemon.py)
+        .config("spark.python.daemon.module", "otel_logger_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # the workers must import this package (the daemon above, the parse
+    # UDF pickled by reference) even when the driver found it through
+    # sys.path rather than PYTHONPATH or the working directory
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -744,6 +744,24 @@ def test_connected_components_string_ids(spark):
         assert got == {i: "doc-00" for i in ids}, algo
 
 
+def test_connected_components_ignores_edges_leaving_nodes(spark):
+    """The output is exactly the node set: an edge endpoint missing from
+    ``nodes`` neither appears in the output nor joins two components —
+    neither the absent 99 (above every node) nor the absent 0 (below)."""
+    from otel_logger_spark.functions.graph import connected_components
+
+    nodes = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(1, 99), (99, 2), (3, 0), (0, 4), (4, 5)], "doc_a long, doc_b long"
+    )
+    for algo in ("label_propagation", "two_phase"):
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components(nodes, edges, algorithm=algo).collect()
+        }
+        assert got == {1: 1, 2: 2, 3: 3, 4: 4, 5: 4}, algo
+
+
 def test_two_phase_cc_adversarial_chain(spark):
     """A 10^4-node chain (diameter 10^4) defeats label propagation within
     any sane round budget; the alternating large-star/small-star variant
