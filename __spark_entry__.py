@@ -34,17 +34,18 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Current rotation (connected_components in functions/graph.py drops
-    # the edges that leave the node set; get_spark names a Python worker
-    # daemon, which the driver's plain session does not load, so no gate
-    # runs it). The four gates that run graph.py sit in the window:
-    # dedup_clusters, dedup_clusters_two_phase, dedup_canonical and
-    # leakage_split. The rotation is a full swap: the 29 gates deferred
-    # for the last change are back in the window, and deferred in their
-    # place are 29 gates the last change verified in the window on code
-    # this change does not touch (the nineteen verified two rounds
-    # running first). The full 79-gate set is re-verified against the
-    # sf0.01 DuckDB oracle with tools/check_correctness.py.
+    # Current rotation (the corpus-derived oracle generators read their
+    # input through graftdata.oracle_input, with byte-identical oracle
+    # texts; decode_media lost its unused PIL branch). The twelve gates
+    # whose oracle or builder code changed sit in the window: ann_ivf_topk,
+    # ann_ivf_quantized, semantic_dedup, corpus_cartography, dsir_select,
+    # lm_fluency, hygiene_manifest, bpe_merges, bpe_encode,
+    # bigram_fluency, image_near_dup and multimodal_decode. The four of
+    # them the last change deferred swap with four gates verified in the
+    # window two rounds running on code this change does not touch
+    # (doc_repetition, decontam_split, tfidf_terms, span_dedup). The full
+    # 79-gate set is re-verified against the sf0.01 DuckDB oracle with
+    # tools/check_correctness.py.
     "conversation_rollup",
     "window_turn_rollup",
     "top_k_noisy",
@@ -60,17 +61,17 @@ GATE_DEFERRED: list[str] = [
     "minhash_pairs",
     "text_quality",
     "pack_shards",
-    "ann_ivf_quantized",
-    "semantic_dedup",
+    "doc_repetition",
+    "decontam_split",
     "median_gap",
     "rollup_role_style",
     "embedding_topk",
     "embedding_near_dup",
     "ann_lsh_topk",
-    "ann_ivf_topk",
+    "tfidf_terms",
     "lang_id",
     "doc_fingerprint",
-    "multimodal_decode",
+    "span_dedup",
     "audio_stats",
     "embedding_outliers",
     "pii_redaction",

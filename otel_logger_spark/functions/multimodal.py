@@ -3,18 +3,17 @@
 Image/audio/video payloads are carried as ``binary`` columns with a typed
 metadata struct; decode / feature-extract / resize / frame-sample run as
 Arrow-batched pandas UDFs over ``mapInPandas``. The heavyweight decode
-libraries (PIL/ffmpeg/librosa) are NOT in this container, so those codec
-steps are stubbed (import-try + deterministic fake) while everything
-Spark-side — schema, batch iteration, partitioning, UDF signatures — is
-real and tested.
+libraries (PIL/ffmpeg/librosa) are not dependencies, so those codec
+steps are a deterministic fake while everything Spark-side — schema,
+batch iteration, partitioning, UDF signatures — is real and tested.
 
 TWO codecs ARE real (round 8, VERDICT r7 #6): uncompressed 24-bit BMP
 needs no library — ``parse_bmp_header``/``decode_bmp`` below are a
 stdlib-only parser (magic, BITMAPINFOHEADER, bottom-up/top-down pixel
 rows with 4-byte stride padding) plus a genuine 8x8 average-hash over
 integer-grayscale samples. ``decode_media`` sniffs each payload: a
-valid BMP takes the real path (decoder='bmp'), everything else falls
-back to PIL (absent here) or the deterministic fake. The sniff is
+valid BMP takes the real path (decoder='bmp'), everything else the
+deterministic fake (decoder='fake'). The sniff is
 strict (exact magic, biSize=40, planes=1, bpp=24, compression=0, dim
 bounds, pixel-array bounds) so opaque text/audio payloads can never
 mis-parse — the header requires NUL bytes no UTF-8 text corpus carries.
@@ -39,13 +38,6 @@ import struct
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # real decoder if ever available
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except Exception:
-    HAVE_PIL = False
 
 MEDIA_SCHEMA = (
     "doc_id bigint, kind string, data binary, media_meta map<string,string>"
@@ -315,14 +307,6 @@ def wav_fixture_rows() -> list[tuple[int, bytes]]:
     ]
 
 
-def _decode_real(data: bytes, kind: str):
-    raise NotImplementedError(
-        "real media decode beyond BMP needs PIL/ffmpeg which this "
-        "container lacks; BMP payloads take decode_bmp above, everything "
-        "else the deterministic fake exercising the identical plumbing"
-    )
-
-
 def _decode_fake(data: bytes, kind: str) -> tuple[int, int, int]:
     """Deterministic fake decode: dimensions derived from payload length,
     perceptual-hash stand-in from a real digest of the bytes."""
@@ -411,7 +395,7 @@ def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
     return df.mapInPandas(run, "doc_id bigint, features array<float>")
 
 
-def decode_media(df: DataFrame, use_real: bool = False) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """mapInPandas decode stage: binary in, typed metadata out. Batches are
     Arrow-sized, so executor memory is bounded by
     spark.sql.execution.arrow.maxRecordsPerBatch regardless of scale."""
@@ -424,9 +408,6 @@ def decode_media(df: DataFrame, use_real: bool = False) -> DataFrame:
                 if parse_bmp_header(b) is not None:
                     w, h, p = decode_bmp(b)  # the REAL codec path
                     dec = "bmp"
-                elif use_real and HAVE_PIL:
-                    w, h, p = _decode_real(b, "image")
-                    dec = "pil"
                 else:
                     w, h, p = _decode_fake(b, "")
                     dec = "fake"

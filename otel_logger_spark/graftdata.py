@@ -18,6 +18,8 @@ Text styles (event_id % 6) mirror the reference fixture families
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 # dialect-specific expressions
@@ -151,3 +153,47 @@ def load_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def corpus_cte() -> str:
     return f"WITH corpus AS ({_CORPUS})"
+
+
+# --- inputs of the corpus-derived oracles -------------------------------------
+# (the ``-> str | None`` generators in queries_training.py: their SQL embeds
+# values computed from the gate's own input table)
+
+# the correctness gate compares at sf0.01; SPARK_GRAFT_ORACLE_SF_DIR
+# overrides it for local checks at another SF
+_ORACLE_SF_DIR = "/root/testdata/sf0.01"
+
+
+def oracle_input(table: str, query=None):
+    """``<table>.parquet`` in the oracle data directory, or None when it is
+    absent (the generator then returns None). With ``query``, a callable
+    over a DuckDB connection that has ``table`` as a view, return its
+    result instead of the path."""
+    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", _ORACLE_SF_DIR)
+    path = f"{sf_dir}/{table}.parquet"
+    if not os.path.exists(path):
+        return None
+    if query is None:
+        return path
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}')")
+        return query(con)
+    finally:
+        con.close()
+
+
+def top_en_tokens(con, k: int) -> list[tuple[str, int]]:
+    """The ``k`` most frequent whitespace tokens of the corpus's lang='en'
+    slice under (count DESC, token ASC): the reference counts the fluency
+    oracles derive their NLL tables from (``con`` has ``documents``)."""
+    return con.execute(
+        corpus_cte()
+        + f"""
+ , toks AS (SELECT unnest(string_split(text, ' ')) AS tok
+            FROM corpus WHERE lang = 'en')
+ SELECT tok, COUNT(*) AS c FROM toks GROUP BY 1
+ ORDER BY c DESC, tok ASC LIMIT {k}"""
+    ).fetchall()

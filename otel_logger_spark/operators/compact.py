@@ -9,10 +9,13 @@ no-rows-lost discipline as the sinks (A5).
 Safety protocol (crash anywhere leaves a recoverable state, and NEVER a
 state where rows are lost):
 1. rewrite the directory's rows into ``<dir>.compact_tmp`` with
-   ``repartition(n)`` sized from the measured input bytes;
-2. VERIFY the tmp: its footer row count (sinks.parquet_partition_lineage)
-   == the source row count, and the source's part files (path, bytes) are
-   unchanged since step 1 — no concurrent writer;
+   ``repartition(n)`` sized from the measured input bytes, written
+   through the sinks' counted write (sinks._write_one: the sink write
+   policy, the row count observed on the write and checked against the
+   tmp's footers);
+2. VERIFY the tmp: that row count == the source row count, and the
+   source's part files (path, bytes) are unchanged since step 1 — no
+   concurrent writer;
 3. swap: delete the source, rename tmp into place. A crash between 3's
    two steps leaves a complete verified tmp next to a missing dir —
    ``recover_compaction`` (called automatically at the start of every
@@ -34,7 +37,7 @@ import math
 from pyspark.sql import SparkSession
 
 from otel_logger_spark.fsio import HadoopFS, parquet_part_files
-from otel_logger_spark.operators.sinks import parquet_partition_lineage
+from otel_logger_spark.operators.sinks import _write_one
 
 TMP_SUFFIX = ".compact_tmp"
 
@@ -61,7 +64,6 @@ def compact_parquet_dir(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 512 * 1024 * 1024,
-    codec: str = "snappy",
 ) -> dict:
     """Compact one parquet directory to ~``target_file_bytes`` files.
     Returns {"n_rows", "files_before", "files_after", "recovered"}.
@@ -83,7 +85,6 @@ def compact_parquet_dir(
         path,
         transform=lambda df, n_target: df.repartition(n_target),
         target_file_bytes=target_file_bytes,
-        codec=codec,
         skip_if_compact=True,
     )
 
@@ -93,7 +94,6 @@ def rewrite_verify_swap(
     path: str,
     transform,
     target_file_bytes: int = 512 * 1024 * 1024,
-    codec: str = "snappy",
     skip_if_compact: bool = False,
     expected_rows=None,
 ) -> dict:
@@ -126,33 +126,30 @@ def rewrite_verify_swap(
                 "files_after": len(src), "recovered": recovered}
 
     tmp = path + TMP_SUFFIX
-    (
-        transform(spark.read.parquet(path), n_target)
-        .write.mode("overwrite")
-        .option("compression", codec)
-        .parquet(tmp)
-    )
-    tmp_parts = parquet_partition_lineage(spark, tmp)
-    tmp_rows = sum(p["n_rows"] for p in tmp_parts)
-    want_rows = src_rows if expected_rows is None else expected_rows(src_rows)
-    if tmp_rows != want_rows:
-        # leave the source untouched; remove the bad rewrite
-        fs.delete(tmp)
-        raise RuntimeError(
-            f"rewrite verify failed at {path}: expected {want_rows} rows "
-            f"(source {src_rows}), rewrite {tmp_rows} — source left "
-            "untouched"
-        )
-    fps_now = {f[:2] for f in parquet_part_files(spark, path)}
-    if fps_now != fps:
-        fs.delete(tmp)
-        raise RuntimeError(
-            f"concurrent writer detected at {path}: "
-            f"{len(fps_now - fps)} part file(s) appeared and "
-            f"{len(fps - fps_now)} changed or vanished since the rewrite "
-            "began — compaction aborted, source left untouched (stop the "
-            "writer before compacting)"
-        )
+    rewritten = transform(spark.read.parquet(path), n_target)
+    try:
+        # the sinks' own counted write: the observed row count, checked
+        # against the tmp's footers, and the per-part lineage
+        tmp_rows, tmp_parts = _write_one(rewritten, tmp)
+        want_rows = src_rows if expected_rows is None else expected_rows(src_rows)
+        if tmp_rows != want_rows:
+            raise RuntimeError(
+                f"rewrite verify failed at {path}: expected {want_rows} rows "
+                f"(source {src_rows}), rewrite {tmp_rows} — source left "
+                "untouched"
+            )
+        fps_now = {f[:2] for f in parquet_part_files(spark, path)}
+        if fps_now != fps:
+            raise RuntimeError(
+                f"concurrent writer detected at {path}: "
+                f"{len(fps_now - fps)} part file(s) appeared and "
+                f"{len(fps - fps_now)} changed or vanished since the rewrite "
+                "began — compaction aborted, source left untouched (stop the "
+                "writer before compacting)"
+            )
+    except BaseException:
+        fs.delete(tmp)  # leave the source untouched; remove the rewrite
+        raise
     fs.delete(path)
     fs.rename(tmp, path)
     return {

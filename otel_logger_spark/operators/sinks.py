@@ -14,7 +14,10 @@ Commit unit: (sink). Parquet/Iceberg writes are atomic per sink directory
 (_SUCCESS / snapshot), so a killed run resumes at sink granularity; the
 per-partition counts in the manifest give partition-level lineage for
 audit. Every sink goes through one write path (path/format/options from
-the environment, deadline, counted write, footer lineage, commit).
+the environment, deadline, counted write, footer lineage, commit), and
+write_sink is the one place a DataFrame becomes sink files: the
+micro-batch sinks (streaming/pipeline.py) and the maintenance rewrites
+(operators/compact.py) write through it too.
 
 Action economy (matters at 100 TB): the expensive plan executes once to
 stage the logs sink; error/tool_call/metrics (routed_sinks) and the raw
@@ -244,26 +247,43 @@ def routed_sinks(df: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def _write_one(
+def write_sink(
     df: DataFrame,
     path: str,
-    fmt: str,
+    fmt: str = "parquet",
     partition_by: list[str] | None = None,
     options: dict | None = None,
-) -> tuple[int, list[dict]]:
-    # the authoritative row count rides the write itself via Observation —
-    # zero extra actions over the data for ANY format
-    obs = Observation()
-    w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+) -> None:
+    """The one sink write policy, for the batch sinks, every micro-batch
+    sink and the maintenance rewrites: overwrite ``path`` with ``df`` in
+    ``fmt``, parquet snappy-compressed unless ``options`` say otherwise."""
+    w = df.write.mode("overwrite").format(fmt)
     if fmt == "parquet":
-        # snappy on the sink critical path (encode ~3x faster than zstd);
-        # OTEL_SPARK_SINK_OPTIONS[_<SINK>]=compression=... overrides it
+        # snappy on the sink critical path (encode ~3x faster than zstd)
         w = w.option("compression", "snappy")
     if partition_by:
         # date-partitioned layout: partition pruning for time-ranged reads
         # (the parquet stand-in for Iceberg's day(ts) partition spec)
         w = w.partitionBy(*partition_by)
-    w.options(**(options or {})).format(fmt).save(path)
+    w.options(**(options or {})).save(path)
+
+
+def _write_one(
+    df: DataFrame,
+    path: str,
+    fmt: str = "parquet",
+    partition_by: list[str] | None = None,
+    options: dict | None = None,
+) -> tuple[int, list[dict]]:
+    """write_sink with its row count observed on the write and, for
+    parquet, checked against the committed footers; returns
+    (rows, per-part lineage)."""
+    # the authoritative row count rides the write itself via Observation —
+    # zero extra actions over the data for ANY format
+    obs = Observation()
+    write_sink(
+        df.observe(obs, F.count(F.lit(1)).alias("n")), path, fmt, partition_by, options
+    )
     n_rows = obs.get["n"]
     if fmt != "parquet":
         return n_rows, []  # json has no footers for per-file lineage

@@ -117,7 +117,6 @@ def zorder_parquet_dir(
     cols: list[str],
     bits: int = 16,
     target_file_bytes: int = 512 * 1024 * 1024,
-    codec: str = "snappy",
     ranges: dict[str, tuple[int, int]] | None = None,
 ) -> dict:
     """Rewrite a parquet directory in Z-order over ``cols``:
@@ -139,6 +138,5 @@ def zorder_parquet_dir(
         )
 
     return rewrite_verify_swap(
-        spark, path, transform,
-        target_file_bytes=target_file_bytes, codec=codec,
+        spark, path, transform, target_file_bytes=target_file_bytes
     )

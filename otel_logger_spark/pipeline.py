@@ -54,21 +54,16 @@ def parse_enrich_route(
 
 def build_parsed(
     transcripts: DataFrame,
-    coalesce_multiline: bool = True,
     repartition: int | None = None,
-    json_prefix: str | None = None,
     config: PipelineConfig | None = None,
 ) -> DataFrame:
     """The transformation plan up to the routed frame (no actions).
 
     ``config`` (config.PipelineConfig) carries the reference CLI surface
-    (field mappings, prefix/continuation regexes) and takes precedence
-    when given; the convenience kwargs apply only with config=None."""
-    cfg = config or PipelineConfig(
-        coalesce_multiline=coalesce_multiline,
-        json_prefix=json_prefix,
-        repartition=repartition,
-    )
+    (multiline coalescing, field mappings, prefix/continuation regexes)
+    and takes precedence when given; ``repartition`` applies only with
+    config=None."""
+    cfg = config or PipelineConfig(repartition=repartition)
     df = transcripts
     if cfg.repartition:
         # explicit conv_id hash partitioning (north_rule); reused by the

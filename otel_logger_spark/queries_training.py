@@ -37,7 +37,12 @@ from otel_logger_spark.functions.text import (
     with_lang_guess,
     with_quality,
 )
-from otel_logger_spark.graftdata import corpus_cte, load_corpus
+from otel_logger_spark.graftdata import (
+    corpus_cte,
+    load_corpus,
+    oracle_input,
+    top_en_tokens,
+)
 
 # --- dedup -------------------------------------------------------------------
 
@@ -599,13 +604,10 @@ def _o_ann_ivf_topk() -> str | None:
     own input (the driver compares at sf0.01; SPARK_GRAFT_ORACLE_SF_DIR
     overrides for local checks at another SF). Returns None — rows-only
     fallback — if the table is absent."""
-    import os
-
     from otel_logger_spark.oracles_ivf import ivf_topk_oracle
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/embeddings.parquet"
-    if not os.path.exists(path):
+    path = oracle_input("embeddings")
+    if path is None:
         return None
     return ivf_topk_oracle(path, k=5, n_clusters=16, n_probe=4, dim=64, seed=42)
 
@@ -647,13 +649,10 @@ def q_ann_ivf_quantized(spark, sf_dir):
 def _o_ann_ivf_quantized() -> str | None:
     """Same data-dependence as _o_ann_ivf_topk (centroids + ranges come
     from the gate's own input)."""
-    import os
-
     from otel_logger_spark.oracles_ivf import ivf_quantized_oracle
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/embeddings.parquet"
-    if not os.path.exists(path):
+    path = oracle_input("embeddings")
+    if path is None:
         return None
     return ivf_quantized_oracle(
         path, k=5, n_clusters=16, n_probe=4, dim=64, seed=42
@@ -676,13 +675,10 @@ def q_semantic_dedup(spark, sf_dir):
 
 def _o_semantic_dedup() -> str | None:
     """Same data-dependence as the other IVF-family oracles."""
-    import os
-
     from otel_logger_spark.oracles_ivf import semantic_dedup_oracle
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/embeddings.parquet"
-    if not os.path.exists(path):
+    path = oracle_input("embeddings")
+    if path is None:
         return None
     return semantic_dedup_oracle(
         path, n_clusters=16, threshold_micro=930_000, dim=64, seed=42
@@ -707,13 +703,10 @@ def q_corpus_cartography(spark, sf_dir):
 
 def _o_corpus_cartography() -> str | None:
     """Same data-dependence as the other IVF-family oracles."""
-    import os
-
     from otel_logger_spark.oracles_ivf import cartography_oracle
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/embeddings.parquet"
-    if not os.path.exists(path):
+    path = oracle_input("embeddings")
+    if path is None:
         return None
     return cartography_oracle(path, n_clusters=16, seed=42)
 
@@ -786,13 +779,10 @@ def q_dsir_select(spark, sf_dir):
 def _o_dsir_select() -> str | None:
     """Count vectors depend on the corpus, so the generator reads the
     gate's own input (the _o_ann_ivf_topk discipline)."""
-    import os
-
     from otel_logger_spark.oracles_dsir import dsir_select_oracle
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/documents.parquet"
-    if not os.path.exists(path):
+    path = oracle_input("documents")
+    if path is None:
         return None
     return dsir_select_oracle(path, k=100)
 
@@ -854,30 +844,12 @@ def q_lm_fluency(spark, sf_dir):
 def _o_lm_fluency() -> str | None:
     """Reference counts depend on the corpus — generator reads the
     gate's own input (the _o_ann_ivf_topk discipline)."""
-    import os
-
-    import duckdb as _duck
-
     from otel_logger_spark.functions.lmscore import nll_table
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/documents.parquet"
-    if not os.path.exists(path):
+    counts = oracle_input("documents", lambda con: top_en_tokens(con, _LM_K))
+    if counts is None:
         return None
-    con = _duck.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
-    )
-    counts = con.execute(
-        corpus_cte()
-        + f"""
- , toks AS (SELECT unnest(string_split(text, ' ')) AS tok
-            FROM corpus WHERE lang = 'en')
- SELECT tok, COUNT(*) AS c FROM toks GROUP BY 1
- ORDER BY c DESC, tok ASC LIMIT {_LM_K}"""
-    ).fetchall()
-    con.close()
-    tab, oov = nll_table([(t, c) for t, c in counts])
+    tab, oov = nll_table(counts)
     vals = ", ".join(f"('{t.replace(chr(39), chr(39) * 2)}', {v})" for t, v in tab.items())
     return (
         corpus_cte()
@@ -933,31 +905,13 @@ def _o_hygiene_manifest() -> str | None:
     """All three rules recomposed in DuckDB over the same corpus; the
     NLL table is derived from the gate's own input at generator time
     (the _o_lm_fluency discipline)."""
-    import os
-
-    import duckdb as _duck
-
     from otel_logger_spark.functions.lmscore import nll_table
     from otel_logger_spark.functions.repetition import repetition_stats_sql
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/documents.parquet"
-    if not os.path.exists(path):
+    counts = oracle_input("documents", lambda con: top_en_tokens(con, _LM_K))
+    if counts is None:
         return None
-    con = _duck.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
-    )
-    counts = con.execute(
-        corpus_cte()
-        + f"""
- , toks AS (SELECT unnest(string_split(text, ' ')) AS tok
-            FROM corpus WHERE lang = 'en')
- SELECT tok, COUNT(*) AS c FROM toks GROUP BY 1
- ORDER BY c DESC, tok ASC LIMIT {_LM_K}"""
-    ).fetchall()
-    con.close()
-    tab, oov = nll_table([(t, c) for t, c in counts])
+    tab, oov = nll_table(counts)
     esc = lambda s: s.replace("'", "''")  # noqa: E731
     vals = ", ".join(f"('{esc(t)}', {v})" for t, v in tab.items())
     m = repetition_stats_sql("text")
@@ -1019,42 +973,29 @@ def q_bpe_merges(spark, sf_dir):
     )
 
 
-def _o_bpe_word_counts(sf_dir: str) -> list[tuple[str, int]] | None:
-    import os
-
-    import duckdb as _duck
-
-    path = f"{sf_dir}/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    con = _duck.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
-    )
-    counts = con.execute(
-        corpus_cte()
-        + """
- , toks AS (SELECT unnest(string_split(text, ' ')) AS word FROM corpus)
- SELECT word, COUNT(*) AS c FROM toks WHERE word <> '' GROUP BY 1
- ORDER BY word"""
-    ).fetchall()
-    con.close()
+def _o_bpe_word_counts() -> list[tuple[str, int]] | None:
     # ORDER BY word (round 9): DuckDB's parallel hash aggregate returns
     # rows in a nondeterministic order, and _o_bpe_encode embeds this
     # list as a VALUES table — the oracle SQL TEXT differed on every
     # invocation (semantically identical, but hostile to any fingerprint
     # over the oracle text). The merge loop is order-insensitive (total
     # order over pair counts), so results are unchanged.
-    return [(w, c) for w, c in counts]
+    return oracle_input(
+        "documents",
+        lambda con: con.execute(
+            corpus_cte()
+            + """
+ , toks AS (SELECT unnest(string_split(text, ' ')) AS word FROM corpus)
+ SELECT word, COUNT(*) AS c FROM toks WHERE word <> '' GROUP BY 1
+ ORDER BY word"""
+        ).fetchall(),
+    )
 
 
 def _o_bpe_merges() -> str | None:
-    import os
-
     from otel_logger_spark.functions.bpe import bpe_train_from_counts
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    counts = _o_bpe_word_counts(sf_dir)
+    counts = _o_bpe_word_counts()
     if counts is None:
         return None
     esc = lambda s: s.replace("'", "''")  # noqa: E731
@@ -1092,15 +1033,12 @@ def q_bpe_encode(spark, sf_dir):
 
 
 def _o_bpe_encode() -> str | None:
-    import os
-
     from otel_logger_spark.functions.bpe import (
         bpe_train_from_counts,
         encode_word,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    counts = _o_bpe_word_counts(sf_dir)
+    counts = _o_bpe_word_counts()
     if counts is None:
         return None
     merges = bpe_train_from_counts(counts, _BPE_MERGES)
@@ -1250,40 +1188,18 @@ def q_bigram_fluency(spark, sf_dir):
 def _o_bigram_fluency() -> str | None:
     """Reference tables depend on the corpus — generator reads the
     gate's own input (the _o_lm_fluency discipline)."""
-    import os
-
-    import duckdb as _duck
-
     from otel_logger_spark.functions.bigram import (
         backoff_nll,
         bigram_nll_table,
     )
     from otel_logger_spark.functions.lmscore import nll_table
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    con = _duck.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
-    )
-    uni_counts = [
-        (t, c)
-        for t, c in con.execute(
-            corpus_cte()
-            + f"""
- , toks AS (SELECT unnest(string_split(text, ' ')) AS tok
-            FROM corpus WHERE lang = 'en')
- SELECT tok, COUNT(*) AS c FROM toks GROUP BY 1
- ORDER BY c DESC, tok ASC LIMIT {_BI_K}"""
-        ).fetchall()
-    ]
     esc = lambda s: s.replace("'", "''")  # noqa: E731
-    in_vocab = ", ".join(f"'{esc(t)}'" for t, _ in uni_counts)
-    bi_counts = [
-        (p, c)
-        for p, c in con.execute(
+
+    def reference_counts(con):
+        uni = top_en_tokens(con, _BI_K)
+        in_vocab = ", ".join(f"'{esc(t)}'" for t, _ in uni)
+        bi = con.execute(
             corpus_cte()
             + f"""
  , dw AS (SELECT string_split(text, ' ') AS w FROM corpus WHERE lang = 'en'),
@@ -1293,8 +1209,12 @@ def _o_bigram_fluency() -> str | None:
  WHERE w1 IN ({in_vocab}) AND w2 IN ({in_vocab})
  GROUP BY 1 ORDER BY c DESC, pair ASC LIMIT {_BI_B}"""
         ).fetchall()
-    ]
-    con.close()
+        return uni, bi
+
+    counts = oracle_input("documents", reference_counts)
+    if counts is None:
+        return None
+    uni_counts, bi_counts = counts
     uni_tab, oov = nll_table(uni_counts)
     bi_tab = bigram_nll_table(bi_counts, uni_counts)
     bo = backoff_nll()

@@ -30,7 +30,10 @@ def get_spark(
     """Build (or get) a SparkSession with pipeline defaults.
 
     ``cores=None`` uses ``local[*]``; tests/bench pass explicit values so
-    the N vs 4N scaling runs are reproducible.
+    the N vs 4N scaling runs are reproducible. ``extra_conf`` overrides
+    any of the defaults below. The parquet codec is left at Spark's
+    default (snappy): every sink directory sets it through
+    operators/sinks.write_sink.
     """
     if cores is None:
         env_cores = os.environ.get("SPARK_GRAFT_CPUS")
@@ -57,27 +60,20 @@ def get_spark(
         # (measured on the ngram pair-count stage: 8 tasks x 780 ms).
         # 256k keeps small-but-CPU-heavy reduce stages at node parallelism;
         # at cluster scale partitions are >= the advisory size anyway, so
-        # the floor is inert there. Env-overridable for deployments.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"),
-        )
+        # the floor is inert there.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # shuffle/spill codec: zstd over the lz4 default — adopted from the
         # round-9 interleaved A/B at 37M turns/local[8] (BENCH/
         # AB_shuffle_codec.md): zstd legs 79.1-80.0s vs lz4 128.8-211.3s,
         # identical sink rows. The conv_id exchange is the pipeline's
         # bytes-per-row wall; the better ratio cuts shuffle-file I/O and
-        # stabilizes walls on contended disks. Env-overridable.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
+        # stabilizes walls on contended disks.
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Bounds pandas-UDF batch memory; mirrors the reference's bounded
         # batching (BatchProcessor, /root/reference/main.go:354-358).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.parquet.compression.codec", "zstd")
         # local mode hosts driver AND every executor thread in one JVM:
         # a 50-query bench session accumulates plans/broadcasts across
         # passes, and allocation-heavy Arrow stages (audio/image decode)

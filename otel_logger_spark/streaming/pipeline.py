@@ -40,7 +40,7 @@ from pyspark.sql.types import StructType
 
 from otel_logger_spark.functions.parse import with_parsed
 from otel_logger_spark.operators.rollups import metric_merges
-from otel_logger_spark.operators.sinks import routed_sinks
+from otel_logger_spark.operators.sinks import routed_sinks, write_sink
 from otel_logger_spark.pipeline import parse_enrich_route
 from otel_logger_spark.schemas import TRANSCRIPT_SCHEMA
 
@@ -117,7 +117,9 @@ def write_batch_sinks(
     sinks: Callable[[DataFrame], dict[str, DataFrame]],
 ) -> None:
     """One micro-batch's fan-out: write every frame of ``sinks(batch_df)``
-    to ``out_dir/<sink>/batchid=<batch_id>``.
+    to ``out_dir/<sink>/batchid=<batch_id>`` through the batch sinks'
+    writer (operators/sinks.write_sink: snappy parquet; the
+    OTEL_SPARK_SINK_* variables do not apply here).
 
     Exactly-once per (sink, batchId): each micro-batch lands in its own
     batchid=<id> partition with overwrite, so a retried batch (failure
@@ -136,9 +138,7 @@ def write_batch_sinks(
         batch_df.persist()
     try:
         for sink, df in frames.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, sink, f"batchid={batch_id}")
-            )
+            write_sink(df, os.path.join(out_dir, sink, f"batchid={batch_id}"))
     finally:
         if shared:
             batch_df.unpersist()

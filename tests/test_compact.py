@@ -65,14 +65,16 @@ def test_compact_recovers_interrupted_swap(spark, tmp_path):
 
 
 def test_compact_failed_verify_leaves_source(spark, tmp_path, monkeypatch):
-    """If the rewrite's footer count disagrees with the source, the source
-    must be left byte-for-byte intact and the bad tmp removed."""
-    import otel_logger_spark.operators.compact as C
+    """If the rewrite's footer count disagrees with the rows it wrote, the
+    source must be left byte-for-byte intact and the bad tmp removed. The
+    rewrite goes through the sinks' counted write, so the footer check
+    that trips is the sinks' lineage check."""
+    import otel_logger_spark.operators.sinks as S
 
     path = str(tmp_path / "badverify")
     _fragmented(spark, path, n_rows=1000, n_files=8)
 
-    real = C.parquet_partition_lineage
+    real = S.parquet_partition_lineage
     calls = {"n": 0}
 
     def lying(spark_, p):
@@ -82,10 +84,11 @@ def test_compact_failed_verify_leaves_source(spark, tmp_path, monkeypatch):
             parts = parts[:-1]
         return parts
 
-    monkeypatch.setattr(C, "parquet_partition_lineage", lying)
-    with pytest.raises(RuntimeError, match="verify failed"):
+    monkeypatch.setattr(S, "parquet_partition_lineage", lying)
+    with pytest.raises(RuntimeError, match="lineage mismatch"):
         compact_parquet_dir(spark, path, target_file_bytes=512 * 1024 * 1024)
     monkeypatch.undo()
+    assert calls["n"] == 1
     assert spark.read.parquet(path).count() == 1000
     assert not os.path.exists(path + TMP_SUFFIX)
 
@@ -96,7 +99,7 @@ def test_compact_aborts_on_concurrent_writer(spark, tmp_path, monkeypatch):
     tmp removed, loud error. Round-4 silently dropped such rows."""
     import shutil
 
-    import otel_logger_spark.operators.compact as C
+    import otel_logger_spark.operators.sinks as S
 
     path = str(tmp_path / "racy")
     _fragmented(spark, path, n_rows=1000, n_files=8)
@@ -108,7 +111,7 @@ def test_compact_aborts_on_concurrent_writer(spark, tmp_path, monkeypatch):
         os.path.join(donor, f) for f in os.listdir(donor) if f.endswith(".parquet")
     )
 
-    real = C.parquet_partition_lineage
+    real = S.parquet_partition_lineage  # the rewrite's tmp footer read
 
     def racing(spark_, p):
         parts = real(spark_, p)
@@ -117,7 +120,7 @@ def test_compact_aborts_on_concurrent_writer(spark, tmp_path, monkeypatch):
             shutil.copy(late_src, os.path.join(path, "part-late-writer.parquet"))
         return parts
 
-    monkeypatch.setattr(C, "parquet_partition_lineage", racing)
+    monkeypatch.setattr(S, "parquet_partition_lineage", racing)
     with pytest.raises(RuntimeError, match="concurrent writer"):
         compact_parquet_dir(spark, path, target_file_bytes=512 * 1024 * 1024)
     monkeypatch.undo()

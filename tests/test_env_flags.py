@@ -25,8 +25,6 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 # data directory of the training-data gates
 ALLOWED = {
     "SPARK_GRAFT_CPUS",
-    "SPARK_GRAFT_MIN_PARTITION_SIZE",
-    "SPARK_GRAFT_IO_CODEC",
     "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_ORACLE_SF_DIR",
 }

@@ -16,6 +16,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from multiline_reference import coalesce_entries_pandas
+from otel_logger_spark.config import PipelineConfig
 from otel_logger_spark.operators.multiline import coalesce_entries
 from otel_logger_spark.operators.rollups import conversation_metrics
 from otel_logger_spark.operators.route import sink_counts
@@ -115,7 +116,8 @@ def test_batch_and_streaming_chains_share_one_plan(spark, transcripts):
         text = df._jdf.queryExecution().optimizedPlan().toString()
         return re.sub(r"#\d+L?", "#", text)
 
-    batch = plan(build_parsed(transcripts, coalesce_multiline=False))
+    no_coalesce = PipelineConfig(coalesce_multiline=False)
+    batch = plan(build_parsed(transcripts, config=no_coalesce))
     stream = plan(build_streaming_routed(transcripts, coalesce=False))
     assert "parse_udf" in batch
     assert batch == stream

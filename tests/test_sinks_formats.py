@@ -179,7 +179,15 @@ def _footer_codecs(sink_dir: str) -> set[str]:
 
 def test_sink_codec_default_and_per_sink_option(spark, tmp_path, monkeypatch):
     """Parquet sinks default to snappy; OTEL_SPARK_SINK_OPTIONS_<SINK>
-    =compression=... changes the codec of that sink only."""
+    =compression=... changes the codec of that batch sink only. Every
+    other sink directory is snappy too: the micro-batch sinks (which
+    ignore the OTEL_SPARK_SINK_* variables) and the directories that
+    compaction and Z-ordering rewrite."""
+    from otel_logger_spark.operators.compact import compact_parquet_dir
+    from otel_logger_spark.operators.sinks import routed_sinks
+    from otel_logger_spark.operators.zorder import zorder_parquet_dir
+    from otel_logger_spark.streaming.pipeline import write_batch_sinks
+
     for v in ("OTEL_SPARK_SINK_OPTIONS", "OTEL_SPARK_SINK_OPTIONS_LOGS"):
         monkeypatch.delenv(v, raising=False)
     src = str(tmp_path / "tc.parquet")
@@ -198,6 +206,23 @@ def test_sink_codec_default_and_per_sink_option(spark, tmp_path, monkeypatch):
     assert _footer_codecs(os.path.join(out, "logs")) == {"ZSTD"}
     for s in sinks[1:]:
         assert _footer_codecs(os.path.join(out, s)) == {"SNAPPY"}, s
+
+    out = str(tmp_path / "stream")
+    write_batch_sinks(routed, 0, out, routed_sinks)
+    for s in sinks:
+        assert _footer_codecs(os.path.join(out, s, "batchid=0")) == {"SNAPPY"}, s
+
+    for name, rewrite in (
+        ("compacted", compact_parquet_dir),
+        ("zordered", lambda spark_, p: zorder_parquet_dir(spark_, p, ["id", "k"])),
+    ):
+        p = str(tmp_path / name)
+        spark.range(400).selectExpr("id", "id % 7 AS k").repartition(4).write.option(
+            "compression", "zstd"
+        ).parquet(p)
+        rep = rewrite(spark, p)
+        assert rep["files_before"] == 4 and rep["files_after"] == 1, rep
+        assert _footer_codecs(p) == {"SNAPPY"}, name
 
 
 def test_json_logs_sink_partitioned_by_date(spark, tmp_path, monkeypatch):
