@@ -3,7 +3,7 @@ sink store needs on a schedule, separate from the reference-parity
 pipeline CLI (cli.py):
 
     python -m otel_logger_spark.maintenance compact <dir> \
-        [--target-file-mb 512] [--sink logs --out <out_dir>]
+        [--target-file-mb 512] [--sink logs]
     python -m otel_logger_spark.maintenance expire <dir> --before YYYY-MM-DD \
         [--partition-col event_date] [--dry-run]
     python -m otel_logger_spark.maintenance zorder <dir> --cols a,b \
@@ -168,21 +168,13 @@ def main(argv=None):
     spark = get_spark("otel-logger-maintenance", cores=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
     if args.cmd == "compact":
-        from otel_logger_spark.operators.compact import (
-            compact_parquet_dir,
-            compact_streaming_sink,
-        )
+        from otel_logger_spark.fsio import join_path
+        from otel_logger_spark.operators.compact import compact_parquet_dir
 
-        if args.sink:
-            report = compact_streaming_sink(
-                spark, args.path, args.sink,
-                target_file_bytes=args.target_file_mb * 1024 * 1024,
-            )
-        else:
-            report = compact_parquet_dir(
-                spark, args.path,
-                target_file_bytes=args.target_file_mb * 1024 * 1024,
-            )
+        report = compact_parquet_dir(
+            spark, join_path(args.path, args.sink),
+            target_file_bytes=args.target_file_mb * 1024 * 1024,
+        )
     elif args.cmd == "zorder":
         from otel_logger_spark.operators.zorder import zorder_parquet_dir
 

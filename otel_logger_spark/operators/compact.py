@@ -4,7 +4,11 @@ needs at scale: foreachBatch writes one directory per micro-batch
 triggers is ~120k directories of kilobyte files; object-store listings
 and scan planning degrade long before the data does. Iceberg calls this
 rewrite_data_files; this is the parquet-directory analogue, with the same
-no-rows-lost discipline as the sinks (A5).
+no-rows-lost discipline as the sinks (A5). A streaming sink directory
+(``<out_dir>/<sink>``, ``maintenance compact --sink``) compacts like any
+other once its batches are final: the batchid=<id> partitions collapse,
+and batchid survives as an ordinary column in the compacted files, with
+row counts and values untouched.
 
 Safety protocol (crash anywhere leaves a recoverable state, and NEVER a
 state where rows are lost):
@@ -162,23 +166,3 @@ def rewrite_verify_swap(
         "recovered": recovered,
     }
 
-
-def compact_streaming_sink(
-    spark: SparkSession,
-    out_dir: str,
-    sink: str,
-    target_file_bytes: int = 512 * 1024 * 1024,
-) -> dict:
-    """Compact a foreachBatch sink's accumulated batchid=<id> partitions
-    into one well-sized flat directory. The batchid column exists for
-    WRITE idempotence (retried micro-batches overwrite their own
-    partition); once batches are final (the stream is stopped or the
-    horizon has passed), the directory-per-batch layout has served its
-    purpose. Compaction collapses the directories; batchid survives as an
-    ordinary low-cardinality column in the compacted files, so readers
-    that selected it still can — row counts and values are untouched."""
-    import os
-
-    return compact_parquet_dir(
-        spark, os.path.join(out_dir, sink), target_file_bytes
-    )

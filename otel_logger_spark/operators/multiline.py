@@ -5,30 +5,42 @@ sequential stateful scan. Rules:
 - empty lines are skipped entirely (never break an entry, main.go:425-427)
 - a line is a continuation if it matches the continuation pattern (default
   ``^[ \\t]``, main.go:45) OR its trimmed form is one of ``]`` ``}`` ``],``
-  ``},`` (main.go:409-412)
+  ``},`` (main.go:409-412); trimming strips Go's ``strings.TrimSpace`` set
+  (Unicode White_Space), not only ASCII spaces
 - continuations before any start line are orphans and dropped (main.go:446-447)
 - entries are joined with "\\n" (main.go:443-444)
 
 Spark-first formulation (scales to 10^12 turns, no per-row Python):
 the start predicate is stateless per row, so ``entry_id`` is a running sum
 of ``is_start`` over ``Window.partitionBy(conv_id).orderBy(turn_idx)``;
-orphans are ``entry_id == 0``; the join is a groupBy with an order-stable
-``array_sort(collect_list(struct(turn_idx, ...)))``. One shuffle on conv_id
-(reused by every downstream per-conversation op), all JVM-side.
+orphans are ``entry_id == 0``; the join is a groupBy with an ordered
+``listagg``. One shuffle on conv_id (reused by every downstream
+per-conversation op), all JVM-side.
 
-The golden tests cross-check it against a direct transcription of the
+``is_start_col`` is the only definition of the start rule: the streaming
+coalescer (streaming/multiline_state.py) evaluates it in the JVM too.
+The golden tests cross-check both against a direct transcription of the
 sequential Go loop (tests/multiline_reference.py, SURVEY.md §2.1 S4).
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_CONTINUATION_PATTERN = r"^[ \t]"
 _BARE_CLOSERS = ("]", "}", "],", "},")
+# what Go's strings.TrimSpace strips (unicode.IsSpace, the White_Space set);
+# Python's str.strip() also strips \x1c-\x1f, which Go keeps
+_TRIM_SPACE = (
+    "\t\n\v\f\r \x85\xa0\u1680\u2000\u2001\u2002\u2003\u2004\u2005"
+    "\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+# the first characters a bare closer can have; trim(text, set) indexes
+# every character of the line (UTF8String.trimRight), so only lines that
+# start with one of these pay for it (unguarded: +100 ms per 204,800 lines
+# on two local cores of a 4-vCPU host)
+_CLOSER_HEADS = tuple(sorted(set(_TRIM_SPACE) | {"]", "}"}))
 
 
 def is_start_col(text=None, cont_pattern: str = DEFAULT_CONTINUATION_PATTERN):
@@ -38,33 +50,24 @@ def is_start_col(text=None, cont_pattern: str = DEFAULT_CONTINUATION_PATTERN):
     return (
         (F.length(text) > 0)
         & ~text.rlike(cont_pattern)
-        & ~F.trim(text).isin(*_BARE_CLOSERS)
-    )
-
-
-def is_start_line(line: str, pat: re.Pattern) -> bool:
-    """Row-at-a-time form of is_start_col for the streaming state function;
-    ``pat`` is the compiled continuation pattern."""
-    return (
-        len(line) > 0
-        and not pat.search(line)
-        and line.strip() not in _BARE_CLOSERS
+        & ~(
+            F.substring(text, 1, 1).isin(*_CLOSER_HEADS)
+            & F.trim(text, F.lit(_TRIM_SPACE)).isin(*_BARE_CLOSERS)
+        )
     )
 
 
 def coalesce_entries(
     df: DataFrame,
     cont_pattern: str = DEFAULT_CONTINUATION_PATTERN,
-    group_cols: tuple[str, ...] = ("conv_id",),
-    order_col: str = "turn_idx",
 ) -> DataFrame:
     """Window-based coalescer. Input: transcript columns; output one row per
-    logical entry: group_cols + turn_idx (of the start line), role, tool, ts
+    logical entry: conv_id, turn_idx (of the start line), role, tool, ts
     (of the start line), text (joined with \\n), n_lines.
     """
     w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(order_col)
+        Window.partitionBy("conv_id")
+        .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     nonempty = df.filter(F.length("text") > 0)  # main.go:425-427
@@ -78,17 +81,17 @@ def coalesce_entries(
     # aggregation is effectively sort-based past 128 keys
     entries = (
         tagged.filter(F.col("_entry_id") > 0)  # drop orphans (main.go:446-447)
-        .groupBy(*group_cols, "_entry_id")
+        .groupBy("conv_id", "_entry_id")
         .agg(
-            F.min(order_col).alias(order_col),
-            F.min_by("role", order_col).alias("role"),
+            F.min("turn_idx").alias("turn_idx"),
+            F.min_by("role", "turn_idx").alias("role"),
             F.expr(
-                f"listagg(text, '\\n') WITHIN GROUP (ORDER BY {order_col})"
+                "listagg(text, '\\n') WITHIN GROUP (ORDER BY turn_idx)"
             ).alias("text"),
-            F.min_by("tool", order_col).alias("tool"),
-            F.min_by("ts", order_col).alias("ts"),
+            F.min_by("tool", "turn_idx").alias("tool"),
+            F.min_by("ts", "turn_idx").alias("ts"),
             F.count("*").alias("n_lines"),
         )
-        .select(*group_cols, order_col, "role", "text", "tool", "ts", "n_lines")
+        .select("conv_id", "turn_idx", "role", "text", "tool", "ts", "n_lines")
     )
     return entries

@@ -12,20 +12,21 @@ streaming analogue of the reference's final-flush-at-EOF
 State is bounded: one open entry per conversation (the reference's own
 memory model — its strings.Builder held exactly one pending entry,
 main.go:420-448), plus the last-seen turn_idx for ordering sanity.
+
+Empty lines are dropped and the start flag is computed in the JVM, with the
+batch coalescer's own ``is_start_col``, before the rows reach the state
+function: one start rule for batch and stream. An empty line therefore
+never reaches the state and does not refresh a conversation's idle timer.
 """
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from otel_logger_spark.operators.multiline import (
-    DEFAULT_CONTINUATION_PATTERN,
-    is_start_line,
-)
+from otel_logger_spark.operators.multiline import is_start_col
 
 OUTPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "n_lines"]
 OUTPUT_SCHEMA = (
@@ -39,10 +40,9 @@ STATE_SCHEMA = (
 )
 
 
-def make_coalesce_state_fn(
-    cont_pattern: str = DEFAULT_CONTINUATION_PATTERN, idle_flush_ms: int = 10_000
-):
-    pat = re.compile(cont_pattern)
+def make_coalesce_state_fn(idle_flush_ms: int = 10_000):
+    """The state function over non-empty rows carrying the JVM-computed
+    boolean ``is_start`` column (see coalesce_entries_stream)."""
 
     def fn(key, pdfs, state: GroupState):
         (conv_id,) = key
@@ -63,17 +63,14 @@ def make_coalesce_state_fn(
         if len(rows):
             rows = rows.sort_values("turn_idx")
             for r in rows.itertuples(index=False):
-                line = r.text or ""
-                if len(line) == 0:
-                    continue
-                if is_start_line(line, pat):
+                if r.is_start:
                     if cur is not None:
                         out.append(
                             (conv_id, cur[0], cur[1], "\n".join(cur[4]), cur[2], cur[3], cur[5])
                         )
-                    cur = [r.turn_idx, r.role, r.tool, r.ts, [line], 1]
+                    cur = [r.turn_idx, r.role, r.tool, r.ts, [r.text], 1]
                 elif cur is not None:
-                    cur[4].append(line)
+                    cur[4].append(r.text)
                     cur[5] += 1
                 # else: orphaned continuation, dropped (main.go:446-447)
 
@@ -88,15 +85,14 @@ def make_coalesce_state_fn(
     return fn
 
 
-def coalesce_entries_stream(
-    stream: DataFrame,
-    cont_pattern: str = DEFAULT_CONTINUATION_PATTERN,
-    idle_flush_ms: int = 10_000,
-) -> DataFrame:
+def coalesce_entries_stream(stream: DataFrame, idle_flush_ms: int = 10_000) -> DataFrame:
     """Streaming multiline coalescer: emits an entry when the next start
     line closes it, or after ``idle_flush_ms`` of conversation idleness."""
-    return stream.groupBy("conv_id").applyInPandasWithState(
-        make_coalesce_state_fn(cont_pattern, idle_flush_ms),
+    flagged = stream.filter(F.length("text") > 0).withColumn(  # main.go:425-427
+        "is_start", is_start_col(F.col("text"))
+    )
+    return flagged.groupBy("conv_id").applyInPandasWithState(
+        make_coalesce_state_fn(idle_flush_ms),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from otel_logger_spark.functions.parse import with_parsed
-from otel_logger_spark.operators.rollups import metric_merges
+from otel_logger_spark.operators.rollups import flush_window_counts, metric_merges
 from otel_logger_spark.operators.sinks import routed_sinks, write_sink
 from otel_logger_spark.pipeline import parse_enrich_route
 from otel_logger_spark.schemas import TRANSCRIPT_SCHEMA
@@ -271,11 +271,7 @@ def streaming_flush_window_counts(
 ) -> DataFrame:
     """Watermarked tumbling-window counts — the FlushInterval batching
     mirror (A2) with a late-data bound the reference never needed (arrival
-    order == event order for a single process; not true on a cluster)."""
+    order == event order for a single process; not true on a cluster): the
+    batch operators/rollups.flush_window_counts over the watermarked stream."""
     parsed = with_parsed(stream.filter(F.length("text") > 0))
-    return (
-        parsed.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", interval).alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"), "n")
-    )
+    return flush_window_counts(parsed.withWatermark("event_ts", watermark), interval)

@@ -7,11 +7,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from otel_logger_spark.fsio import HadoopFS
+from otel_logger_spark.fsio import HadoopFS, join_path
 from otel_logger_spark.operators.compact import (
     TMP_SUFFIX,
     compact_parquet_dir,
-    compact_streaming_sink,
     recover_compaction,
 )
 
@@ -193,7 +192,7 @@ def test_compact_streaming_sink_collapses_batch_dirs(spark, tmp_path):
         r["batchid"]: r["n"]
         for r in before.groupBy("batchid").agg(F.count("*").alias("n")).collect()
     }
-    res = compact_streaming_sink(spark, out, "logs")
+    res = compact_parquet_dir(spark, join_path(out, "logs"))
     assert res["n_rows"] == 900
     assert res["files_after"] < res["files_before"]
     after = spark.read.parquet(os.path.join(out, "logs"))
@@ -203,6 +202,20 @@ def test_compact_streaming_sink_collapses_batch_dirs(spark, tmp_path):
         for r in after.groupBy("batchid").agg(F.count("*").alias("n")).collect()
     }
     assert per_batch_after == per_batch_before
+
+
+def test_maintenance_cli_compact_sink(spark, tmp_path, capsys):
+    """``compact PATH --sink NAME`` compacts the sink directory PATH/NAME."""
+    import json
+
+    from otel_logger_spark.maintenance import main
+
+    out = str(tmp_path / "m_out")
+    _fragmented(spark, os.path.join(out, "logs"), n_rows=2000, n_files=16)
+    assert main(["compact", out, "--sink", "logs"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["n_rows"] == 2000 and rep["files_after"] < rep["files_before"]
+    assert spark.read.parquet(os.path.join(out, "logs")).count() == 2000
 
 
 def test_maintenance_cli_compact_and_expire(spark, tmp_path, capsys):

@@ -151,6 +151,26 @@ CASES = {
             "2024-01-15T10:30:05Z ERROR Failed to process",
         ],
     ),
+    # a bare closer's trailing whitespace is what Go's strings.TrimSpace
+    # strips (tab, CR, NBSP), not only ASCII spaces (main.go:409-412)
+    "closers_with_trailing_whitespace": (
+        [
+            "2024-01-15T10:30:00Z INFO Starting application",
+            "}\t",
+            "],\r",
+            "]\u00a0",
+            "2024-01-15T10:30:05Z INFO Next log entry",
+        ],
+        [
+            "2024-01-15T10:30:00Z INFO Starting application\n}\t\n],\r\n]\u00a0",
+            "2024-01-15T10:30:05Z INFO Next log entry",
+        ],
+    ),
+    # leading non-ASCII whitespace: not a continuation indent, but trimmed
+    "closer_with_leading_unicode_space": (
+        ["2024-01-15T10:30:00Z INFO Data", "\u00a0},", "\u3000]"],
+        ["2024-01-15T10:30:00Z INFO Data\n\u00a0},\n\u3000]"],
+    ),
     "inline_brackets_not_continuation": (
         [
             "2024-01-15T10:30:00Z INFO Data: [1, 2, 3]",

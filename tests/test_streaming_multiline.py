@@ -261,3 +261,59 @@ def test_batchid_writes_are_idempotent(spark, tmp_path):
     spark.read.parquet(b0).write.parquet(tmp)
     spark.read.parquet(tmp).write.mode("overwrite").parquet(b0)
     assert spark.read.parquet(logs).count() == n1
+
+
+def test_stream_matches_batch_on_every_golden_case(spark, tmp_path):
+    """One start rule for batch and stream: every golden multiline case,
+    one conversation each, split over two micro-batches, flushes exactly
+    the entries the batch coalescer builds from the same rows."""
+    from test_multiline import CASES
+
+    in_dir = str(tmp_path / "gin")
+    os.makedirs(in_dir)
+    halves = ([], [])
+    for name, (lines, _expected) in sorted(CASES.items()):
+        rows = [(name, i, "assistant", line, None, TS) for i, line in enumerate(lines)]
+        # every case keeps a non-empty line in the second half, so no open
+        # entry can time out between the two micro-batches
+        cut = len(rows) // 2
+        halves[0].extend(rows[:cut])
+        halves[1].extend(rows[cut:])
+    now = time.time()
+    for i, rows in enumerate(halves):
+        _write_batch(in_dir, f"g{i}.parquet", rows)
+        # the file source takes the oldest file first
+        os.utime(os.path.join(in_dir, f"g{i}.parquet"), (now - 60 + i, now - 60 + i))
+
+    def key(r):
+        return (r["conv_id"], r["turn_idx"], r["text"], r["n_lines"])
+
+    want = sorted(key(r) for r in coalesce_entries(spark.read.parquet(in_dir)).collect())
+    assert len({k[0] for k in want}) > 1
+
+    stream = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    out_name = "golden_stream"
+    q = (
+        coalesce_entries_stream(stream, idle_flush_ms=2_000)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(out_name)
+        .option("checkpointLocation", str(tmp_path / "gckpt"))
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        got = []
+        deadline = time.monotonic() + 120
+        while time.monotonic() < deadline:
+            got = sorted(key(r) for r in spark.sql(f"SELECT * FROM {out_name}").collect())
+            if got == want:
+                break
+            time.sleep(2)
+    finally:
+        q.stop()
+    assert got == want
