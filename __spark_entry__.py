@@ -21,7 +21,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: full parse -> enrich ->
     route chain over constructed transcripts, severity counts."""
     from otel_logger_spark.queries import q_parse_severity_counts
+    from otel_logger_spark.session import ship_package
 
+    ship_package(spark)  # the parse UDF's workers import the package
     return q_parse_severity_counts(spark, "/root/testdata/sf0.001")
 
 

@@ -13,11 +13,11 @@ from checkpoint with per-partition lineage + metrics").
 Commit unit: (sink). Parquet/Iceberg writes are atomic per sink directory
 (_SUCCESS / snapshot), so a killed run resumes at sink granularity; the
 per-partition counts in the manifest give partition-level lineage for
-audit. Every sink goes through one write path (path/format/options from
-the environment, deadline, counted write, footer lineage, commit), and
-write_sink is the one place a DataFrame becomes sink files: the
-micro-batch sinks (streaming/pipeline.py) and the maintenance rewrites
-(operators/compact.py) write through it too.
+audit. Every sink is parquet and goes through one write path
+(path/options from the environment, deadline, counted write, footer
+lineage, commit), and write_sink is the one place a DataFrame becomes sink
+files: the micro-batch sinks (streaming/pipeline.py) and the maintenance
+rewrites (operators/compact.py) write through it too.
 
 Action economy (matters at 100 TB): the expensive plan executes once to
 stage the logs sink; error/tool_call/metrics (routed_sinks) and the raw
@@ -38,7 +38,6 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from otel_logger_spark.schemas import (
     SINK_CONV_METRICS,
@@ -116,8 +115,6 @@ def _commit(spark, manifest, out_dir, sink, path, n_rows, t0, partitions):
     return entry
 
 
-SUPPORTED_FORMATS = ("parquet", "json")
-
 # the thread-local properties SparkContext.setJobGroup sets
 _JOB_GROUP_PROPS = (
     "spark.jobGroup.id",
@@ -155,33 +152,18 @@ def _run_with_timeout(spark, group: str, timeout_ms: int | None, fn):
             sc.setLocalProperty(k, v)
 
 
-def _env_sink(base: str, sink: str | None) -> str | None:
-    """Generic -> sink-specific override chain, mirroring the reference's
-    OTEL_EXPORTER_OTLP_PROTOCOL / OTEL_EXPORTER_OTLP_LOGS_PROTOCOL
-    precedence (createExporter, /root/reference/main.go:330-345): the
-    sink-specific variable wins when set, else the generic one."""
-    if sink:
-        v = os.environ.get(f"{base}_{sink.upper()}")
-        if v is not None:
-            return v
-    return os.environ.get(base)
-
-
-def resolve_sink_format(sink: str = SINK_LOGS) -> str:
-    """Sink-format dispatch mirroring createExporter
-    (/root/reference/main.go:330-345): an env var selects the protocol,
-    the sink-specific var overrides the generic one, unsupported values
-    are an error (not a silent default). Applies per sink — every sink
-    honors OTEL_SPARK_SINK_FORMAT and OTEL_SPARK_SINK_FORMAT_<SINK>."""
-    fmt = _env_sink("OTEL_SPARK_SINK_FORMAT", sink)
-    if fmt is None:
-        return "parquet"
-    f = fmt.strip().lower()
-    if f not in SUPPORTED_FORMATS:
-        raise ValueError(
-            f"unsupported sink format (supported: {', '.join(SUPPORTED_FORMATS)}): {fmt}"
-        )
-    return f
+def _check_sink_format(sinks: list[str]) -> None:
+    """Every sink is parquet: OTEL_SPARK_SINK_FORMAT or
+    OTEL_SPARK_SINK_FORMAT_<SINK> set to anything else raises, naming the
+    variable, rather than silently writing parquet — the reject-unsupported
+    half of createExporter (the reference's main.go:342-344)."""
+    values = {"OTEL_SPARK_SINK_FORMAT": os.environ.get("OTEL_SPARK_SINK_FORMAT")}
+    for sink in sinks:
+        s = sink.upper()
+        values[f"OTEL_SPARK_SINK_FORMAT_{s}"] = os.environ.get(f"OTEL_SPARK_SINK_FORMAT_{s}")
+    for var, v in values.items():
+        if v is not None and v.strip().lower() != "parquet":
+            raise ValueError(f"unsupported sink format in {var} (supported: parquet): {v}")
 
 
 def resolve_sink_path(out_dir: str, sink: str) -> str:
@@ -199,8 +181,12 @@ def resolve_sink_path(out_dir: str, sink: str) -> str:
 def resolve_sink_options(sink: str) -> dict:
     """Writer options, the HEADERS analogue (OTEL_EXPORTER_OTLP_HEADERS
     k=v,k2=v2 syntax): OTEL_SPARK_SINK_OPTIONS[_<SINK>] parsed into
-    DataFrameWriter options; the sink-specific var replaces the generic."""
-    raw = _env_sink("OTEL_SPARK_SINK_OPTIONS", sink)
+    DataFrameWriter options; the sink-specific var replaces the generic
+    (the OTEL_EXPORTER_OTLP_LOGS_* precedence of createExporter,
+    the reference's main.go:330-345)."""
+    raw = os.environ.get(f"OTEL_SPARK_SINK_OPTIONS_{sink.upper()}")
+    if raw is None:
+        raw = os.environ.get("OTEL_SPARK_SINK_OPTIONS")
     if not raw:
         return {}
     out = {}
@@ -250,43 +236,34 @@ def routed_sinks(df: DataFrame) -> dict[str, DataFrame]:
 def write_sink(
     df: DataFrame,
     path: str,
-    fmt: str = "parquet",
     partition_by: list[str] | None = None,
     options: dict | None = None,
 ) -> None:
     """The one sink write policy, for the batch sinks, every micro-batch
-    sink and the maintenance rewrites: overwrite ``path`` with ``df`` in
-    ``fmt``, parquet snappy-compressed unless ``options`` say otherwise."""
-    w = df.write.mode("overwrite").format(fmt)
-    if fmt == "parquet":
-        # snappy on the sink critical path (encode ~3x faster than zstd)
-        w = w.option("compression", "snappy")
+    sink and the maintenance rewrites: overwrite ``path`` with ``df`` as
+    parquet, snappy-compressed unless ``options`` say otherwise."""
+    # snappy on the sink critical path (encode ~3x faster than zstd)
+    w = df.write.mode("overwrite").option("compression", "snappy")
     if partition_by:
         # date-partitioned layout: partition pruning for time-ranged reads
         # (the parquet stand-in for Iceberg's day(ts) partition spec)
         w = w.partitionBy(*partition_by)
-    w.options(**(options or {})).save(path)
+    w.options(**(options or {})).parquet(path)
 
 
 def _write_one(
     df: DataFrame,
     path: str,
-    fmt: str = "parquet",
     partition_by: list[str] | None = None,
     options: dict | None = None,
 ) -> tuple[int, list[dict]]:
-    """write_sink with its row count observed on the write and, for
-    parquet, checked against the committed footers; returns
-    (rows, per-part lineage)."""
+    """write_sink with its row count observed on the write and checked
+    against the committed footers; returns (rows, per-part lineage)."""
     # the authoritative row count rides the write itself via Observation —
-    # zero extra actions over the data for ANY format
+    # zero extra actions over the data
     obs = Observation()
-    write_sink(
-        df.observe(obs, F.count(F.lit(1)).alias("n")), path, fmt, partition_by, options
-    )
+    write_sink(df.observe(obs, F.count(F.lit(1)).alias("n")), path, partition_by, options)
     n_rows = obs.get["n"]
-    if fmt != "parquet":
-        return n_rows, []  # json has no footers for per-file lineage
     parts = parquet_partition_lineage(df.sparkSession, path)
     n_footer = sum(p["n_rows"] for p in parts)
     if n_footer != n_rows:
@@ -310,22 +287,26 @@ def write_routed_sinks(
     export_timeout_ms: int | None = None,
 ) -> dict:
     """Write routed_sinks of ``routed`` (plus the ``raw`` tee with
-    ``passthrough_raw``) and commit each one. ``routed`` must carry the
-    parsed and enriched columns (see pipeline.parse_enrich_route).
+    ``passthrough_raw``) as parquet and commit each one with its footer
+    lineage. ``routed`` must carry the parsed and enriched columns (see
+    pipeline.parse_enrich_route). An OTEL_SPARK_SINK_FORMAT[_<SINK>] other
+    than parquet for any of these sinks raises before anything is written.
 
     Single-pass discipline at scale: the expensive plan (coalesce + parse +
     enrich) executes ONCE to stage the ``logs`` sink; the other sinks are
     routed_sinks over a re-read of the staged columnar table —
     column-pruned, predicate-pushed scans of compact parquet, far cheaper
     than caching 10s-of-GB of wide rows in the storage layer (the
-    Iceberg-staging-table pattern, SURVEY.md §4). A json logs sink can't
-    be re-read cheaply, so json staging persists ``routed`` in memory and
-    derives the sinks from it instead.
+    Iceberg-staging-table pattern, SURVEY.md §4).
 
     ``metrics`` is unused; the slot is kept for callers that still pass a
     conversation_metrics frame. Returns the committed manifest (A5: every
     sink committed == ForceFlush).
     """
+    _check_sink_format(
+        [SINK_LOGS, SINK_ERROR, SINK_TOOL_CALL, SINK_CONV_METRICS]
+        + (["raw"] if passthrough_raw else [])
+    )
     spark = routed.sparkSession
     manifest = load_manifest(spark, out_dir, run_id)
     done = {
@@ -336,57 +317,46 @@ def write_routed_sinks(
     def export(sink: str, df: DataFrame, partition_by: list[str] | None = None):
         t0 = time.monotonic()
         path = resolve_sink_path(out_dir, sink)
-        fmt = resolve_sink_format(sink)
         opts = resolve_sink_options(sink)
         n, parts = _run_with_timeout(
             spark,
             f"{run_id}:{sink}",
             export_timeout_ms,
-            lambda: _write_one(df, path, fmt, partition_by, opts),
+            lambda: _write_one(df, path, partition_by, opts),
         )
         with lock:
             _commit(spark, manifest, out_dir, sink, path, n, t0, parts)
 
-    use_persist = resolve_sink_format(SINK_LOGS) == "json"
-    if use_persist:
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # the logs projection alone: building every sink over the full
-        # upstream plan costs ~0.1 s of driver-side analysis (4 vCPUs)
-        logs = _logs_sink(routed)
-        partition_by = None
-        if partition_logs_by_date:
-            logs = logs.withColumn("event_date", F.to_date("event_ts"))
-            partition_by = ["event_date"]
-        if SINK_LOGS not in done:
-            export(SINK_LOGS, logs, partition_by)
+    # the logs projection alone: building every sink over the full
+    # upstream plan costs ~0.1 s of driver-side analysis (4 vCPUs)
+    logs = _logs_sink(routed)
+    partition_by = None
+    if partition_logs_by_date:
+        logs = logs.withColumn("event_date", F.to_date("event_ts"))
+        partition_by = ["event_date"]
+    if SINK_LOGS not in done:
+        export(SINK_LOGS, logs, partition_by)
 
-        # derive the remaining sinks from the staged table (or the persisted
-        # frame) — the expensive upstream plan never re-executes; the
-        # re-read takes the schema it was written with, so no footer
-        # inference job runs
-        logs_path = resolve_sink_path(out_dir, SINK_LOGS)
-        staged = (
-            routed if use_persist else spark.read.schema(logs.schema).parquet(logs_path)
-        )
-        derived = routed_sinks(staged)
-        del derived[SINK_LOGS]
-        if passthrough_raw:  # tee of raw entries (K3, main.go:481-484)
-            derived["raw"] = staged.select("conv_id", "turn_idx", "role", "raw")
+    # derive the remaining sinks from the staged table — the expensive
+    # upstream plan never re-executes; the re-read takes the schema it was
+    # written with, so no footer inference job runs
+    logs_path = resolve_sink_path(out_dir, SINK_LOGS)
+    staged = spark.read.schema(logs.schema).parquet(logs_path)
+    derived = routed_sinks(staged)
+    del derived[SINK_LOGS]
+    if passthrough_raw:  # tee of raw entries (K3, main.go:481-484)
+        derived["raw"] = staged.select("conv_id", "turn_idx", "role", "raw")
 
-        # the derived writes are independent scans of the staged table —
-        # submit them as CONCURRENT Spark jobs so their fixed scheduling
-        # costs overlap (Spark's scheduler interleaves the tasks; on a
-        # cluster this is the default multi-job pattern)
-        with ThreadPoolExecutor(len(derived)) as pool:
-            futures = [
-                pool.submit(export, s, df) for s, df in derived.items() if s not in done
-            ]
-        for f in futures:
-            f.result()  # a failed sink's error surfaces after every write ends
-        manifest["status"] = "committed"
-        save_manifest(spark, out_dir, manifest)
-    finally:
-        if use_persist:
-            routed.unpersist()
+    # the derived writes are independent scans of the staged table —
+    # submit them as CONCURRENT Spark jobs so their fixed scheduling
+    # costs overlap (Spark's scheduler interleaves the tasks; on a
+    # cluster this is the default multi-job pattern)
+    with ThreadPoolExecutor(len(derived)) as pool:
+        futures = [
+            pool.submit(export, s, df) for s, df in derived.items() if s not in done
+        ]
+    for f in futures:
+        f.result()  # a failed sink's error surfaces after every write ends
+    manifest["status"] = "committed"
+    save_manifest(spark, out_dir, manifest)
     return manifest

@@ -14,7 +14,12 @@ local[N]):
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -97,3 +102,22 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make this package importable in the Python workers of a session that
+    get_spark did not build (an external driver's plain session, whose
+    workers see neither the driver's sys.path nor, from another working
+    directory, the package): ``addPyFile`` a zip of the package's sources,
+    once per SparkContext. get_spark sessions are left as they are."""
+    sc = spark.sparkContext
+    pythonpath = sc.getConf().get("spark.executorEnv.PYTHONPATH", "")
+    if _PACKAGE_PARENT in pythonpath.split(os.pathsep) or hasattr(sc, "_otel_package_zip"):
+        return
+    tmp = tempfile.mkdtemp(prefix="otel_logger_spark-")
+    atexit.register(shutil.rmtree, tmp, True)
+    sc._otel_package_zip = os.path.join(tmp, "otel_logger_spark.zip")
+    with zipfile.ZipFile(sc._otel_package_zip, "w") as z:
+        for f in glob.glob("otel_logger_spark/**/*.py", root_dir=_PACKAGE_PARENT, recursive=True):
+            z.write(os.path.join(_PACKAGE_PARENT, f), f)
+    sc.addPyFile(sc._otel_package_zip)

@@ -118,8 +118,8 @@ def write_batch_sinks(
 ) -> None:
     """One micro-batch's fan-out: write every frame of ``sinks(batch_df)``
     to ``out_dir/<sink>/batchid=<batch_id>`` through the batch sinks'
-    writer (operators/sinks.write_sink: snappy parquet; the
-    OTEL_SPARK_SINK_* variables do not apply here).
+    writer (operators/sinks.write_sink: snappy parquet, the one sink
+    format; the OTEL_SPARK_SINK_* variables do not apply here).
 
     Exactly-once per (sink, batchId): each micro-batch lands in its own
     batchid=<id> partition with overwrite, so a retried batch (failure

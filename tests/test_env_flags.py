@@ -28,9 +28,10 @@ ALLOWED = {
     "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_ORACLE_SF_DIR",
 }
-# the sink deployment family (operators/sinks.py): format, URI and writer
-# options, each generic or with a per-sink suffix (``*``) — the reference's
-# OTEL_EXPORTER_OTLP_* / OTEL_EXPORTER_OTLP_LOGS_* precedence
+# the sink deployment family (operators/sinks.py): URI and writer options,
+# each generic or with a per-sink suffix (``*``) — the reference's
+# OTEL_EXPORTER_OTLP_* / OTEL_EXPORTER_OTLP_LOGS_* precedence — and the
+# format variables, read only to reject any value but parquet
 SINK_FAMILY = {
     f"OTEL_SPARK_SINK_{name}{suffix}"
     for name in ("FORMAT", "URI", "OPTIONS")

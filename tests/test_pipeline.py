@@ -329,7 +329,7 @@ def test_lineage_distributed_no_serial_footer_loop(spark, tmp_path, monkeypatch)
         F.col("id").alias("k"), (F.col("id") % 997).alias("v")
     ).repartition(220)
     path = str(tmp_path / "many_parts")
-    n, parts = _write_one(df, path, "parquet")
+    n, parts = _write_one(df, path)
     assert not calls, "lineage must not issue per-file driver footer reads"
     assert n == 50_000
     assert len(parts) >= 200
@@ -358,7 +358,7 @@ def test_lineage_small_sink_uses_driver_footers_no_spark_job(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") % 13).alias("v")
     ).repartition(8)
     path = str(tmp_path / "small_sink")
-    n, parts = _write_one(df, path, "parquet")
+    n, parts = _write_one(df, path)
     assert n == 5_000
     assert 1 <= len(parts) <= 8
     assert sum(p["n_rows"] for p in parts) == n

@@ -1,4 +1,5 @@
-"""Sink-format dispatch (K1 parity: createExporter, main.go:330-345),
+"""Sink env dispatch (K1 parity: createExporter, main.go:330-345): URI
+and writer options by precedence, any format but parquet rejected;
 passthrough tee (K3), and footer-based lineage."""
 
 import os
@@ -6,35 +7,53 @@ import os
 import pytest
 
 from otel_logger_spark.operators.rollups import conversation_metrics
-from otel_logger_spark.operators.sinks import (
-    resolve_sink_format,
-    write_routed_sinks,
-)
+from otel_logger_spark.operators.sinks import write_routed_sinks
 from otel_logger_spark.pipeline import build_parsed
 from otel_logger_spark.synth import write_transcripts
 
 
-def test_resolve_sink_format_env(monkeypatch):
-    monkeypatch.delenv("OTEL_SPARK_SINK_FORMAT", raising=False)
-    monkeypatch.delenv("OTEL_SPARK_SINK_FORMAT_LOGS", raising=False)
-    assert resolve_sink_format() == "parquet"  # default
-    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT", "json")
-    assert resolve_sink_format() == "json"
-    # sink-specific var overrides generic (OTEL_..._LOGS_PROTOCOL semantics)
+FORMAT_VARS = [
+    f"OTEL_SPARK_SINK_FORMAT{suffix}"
+    for suffix in ("", "_LOGS", "_ERROR", "_TOOL_CALL", "_CONVERSATION_METRICS", "_RAW")
+]
+
+
+def test_sink_format_rejects_all_but_parquet(spark, tmp_path, monkeypatch):
+    """Every sink is parquet: a generic or per-sink format variable asking
+    for anything else fails the run, naming the variable, before the
+    manifest or any sink directory is written (unsupported values are an
+    error, not a silent default: main.go:342-344). ``parquet`` in any
+    case is accepted."""
+    for v in FORMAT_VARS:
+        monkeypatch.delenv(v, raising=False)
+    src = str(tmp_path / "t.parquet")
+    write_transcripts(src, n_convs=3, seed=5)
+    routed = build_parsed(spark.read.parquet(src))
+    for var in ("OTEL_SPARK_SINK_FORMAT", "OTEL_SPARK_SINK_FORMAT_ERROR"):
+        out = tmp_path / f"out_{var}"
+        out.mkdir()
+        monkeypatch.setenv(var, "json")
+        with pytest.raises(ValueError, match=f"{var} "):
+            write_routed_sinks(routed, None, str(out), run_id="bad")
+        assert list(out.iterdir()) == [], var
+        monkeypatch.delenv(var)
+
     monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_LOGS", "PARQUET")
-    assert resolve_sink_format() == "parquet"
-    # unsupported -> error, not silent default (main.go:342-344)
-    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_LOGS", "grpc")
-    with pytest.raises(ValueError, match="unsupported sink format"):
-        resolve_sink_format()
+    out = str(tmp_path / "out")
+    manifest = write_routed_sinks(routed, None, out)
+    assert manifest["status"] == "committed"
+    assert spark.read.parquet(os.path.join(out, "logs")).count() == (
+        manifest["sinks"]["logs"]["n_rows"]
+    )
 
 
-def test_passthrough_tee_and_json_format(spark, tmp_path, monkeypatch):
+def test_passthrough_tee_and_lineage_for_every_sink(spark, tmp_path, monkeypatch):
+    for v in FORMAT_VARS:
+        monkeypatch.delenv(v, raising=False)
     src = str(tmp_path / "t.parquet")
     write_transcripts(src, n_convs=15, seed=5)
     routed = build_parsed(spark.read.parquet(src))
     out = str(tmp_path / "out")
-    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT", "json")
     manifest = write_routed_sinks(
         routed,
         conversation_metrics(routed),
@@ -47,9 +66,13 @@ def test_passthrough_tee_and_json_format(spark, tmp_path, monkeypatch):
     }
     # tee carries every entry, raw text only
     assert manifest["sinks"]["raw"]["n_rows"] == manifest["sinks"]["logs"]["n_rows"]
-    raw = spark.read.json(os.path.join(out, "raw"))
+    raw = spark.read.parquet(os.path.join(out, "raw"))
     assert set(raw.columns) == {"conv_id", "turn_idx", "role", "raw"}
     assert raw.count() == manifest["sinks"]["raw"]["n_rows"]
+    # every sink, the tee included, commits its footer lineage
+    for sink, entry in manifest["sinks"].items():
+        assert entry["partitions"], sink
+        assert sum(p["n_rows"] for p in entry["partitions"]) == entry["n_rows"], sink
 
 
 def test_date_partitioned_logs_sink(spark, tmp_path):
@@ -74,31 +97,16 @@ def test_date_partitioned_logs_sink(spark, tmp_path):
 
 def test_env_precedence_matrix(monkeypatch):
     """config_test.go-style matrix: generic vs sink-specific precedence for
-    format, URI, and writer options across ALL sinks."""
+    URI and writer options across ALL sinks."""
     from otel_logger_spark.operators.sinks import (
         resolve_sink_options,
         resolve_sink_path,
     )
 
-    for v in (
-        "OTEL_SPARK_SINK_FORMAT", "OTEL_SPARK_SINK_URI", "OTEL_SPARK_SINK_OPTIONS",
-    ):
+    for v in ("OTEL_SPARK_SINK_URI", "OTEL_SPARK_SINK_OPTIONS"):
         monkeypatch.delenv(v, raising=False)
         for s in ("LOGS", "ERROR", "TOOL_CALL", "CONVERSATION_METRICS", "RAW"):
             monkeypatch.delenv(f"{v}_{s}", raising=False)
-
-    # format: default -> generic -> specific, per sink
-    assert resolve_sink_format(sink="error") == "parquet"
-    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT", "json")
-    assert resolve_sink_format(sink="error") == "json"
-    assert resolve_sink_format(sink="tool_call") == "json"
-    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_ERROR", "parquet")
-    assert resolve_sink_format(sink="error") == "parquet"  # specific wins
-    assert resolve_sink_format(sink="tool_call") == "json"  # others keep generic
-    with pytest.raises(ValueError):
-        monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_ERROR", "grpc")
-        resolve_sink_format(sink="error")
-    monkeypatch.delenv("OTEL_SPARK_SINK_FORMAT_ERROR")
 
     # URI (ENDPOINT analogue): default base -> generic base -> full override
     assert resolve_sink_path("/out", "logs") == "/out/logs"
@@ -126,18 +134,17 @@ def test_env_precedence_matrix(monkeypatch):
 
 
 def test_per_sink_env_applied_end_to_end(spark, tmp_path, monkeypatch):
-    """The error sink lands at its URI override in its overridden format;
-    other sinks are untouched."""
+    """The error sink lands at its URI override; other sinks are
+    untouched."""
     src = str(tmp_path / "t3.parquet")
     write_transcripts(src, n_convs=10, seed=9)
     routed = build_parsed(spark.read.parquet(src))
     out = str(tmp_path / "out3")
     err_out = str(tmp_path / "err_elsewhere")
-    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_ERROR", "json")
     monkeypatch.setenv("OTEL_SPARK_SINK_URI_ERROR", err_out)
     manifest = write_routed_sinks(routed, None, out, run_id="env1")
     assert manifest["sinks"]["error"]["path"] == err_out
-    got = spark.read.json(err_out)
+    got = spark.read.parquet(err_out)
     assert got.count() == manifest["sinks"]["error"]["n_rows"]
     assert not os.path.exists(os.path.join(out, "error"))
     assert os.path.exists(os.path.join(out, "logs"))
@@ -223,28 +230,6 @@ def test_sink_codec_default_and_per_sink_option(spark, tmp_path, monkeypatch):
         rep = rewrite(spark, p)
         assert rep["files_before"] == 4 and rep["files_after"] == 1, rep
         assert _footer_codecs(p) == {"SNAPPY"}, name
-
-
-def test_json_logs_sink_partitioned_by_date(spark, tmp_path, monkeypatch):
-    """A json logs sink honours partition_logs_by_date: it lands in
-    event_date= directories (the layout operators/retention.py expects)
-    with every row of the manifest count."""
-    monkeypatch.setenv("OTEL_SPARK_SINK_FORMAT_LOGS", "json")
-    src = str(tmp_path / "tj.parquet")
-    write_transcripts(src, n_convs=10, seed=6)
-    out = str(tmp_path / "outj")
-    manifest = write_routed_sinks(
-        build_parsed(spark.read.parquet(src)),
-        None,
-        out,
-        run_id="pj",
-        partition_logs_by_date=True,
-    )
-    logs_dir = os.path.join(out, "logs")
-    assert [d for d in os.listdir(logs_dir) if d.startswith("event_date=")]
-    logs = spark.read.json(logs_dir)
-    assert "event_date" in logs.columns
-    assert logs.count() == manifest["sinks"]["logs"]["n_rows"] > 0
 
 
 def test_export_timeout_restores_job_group_properties(spark):

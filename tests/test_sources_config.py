@@ -203,10 +203,10 @@ def test_timeout_zero_runs_sink_to_completion(spark, tmp_path):
 
     df = spark.range(0, 1000).select(F.col("id").alias("k"))
     n, parts = _run_with_timeout(
-        spark, "t0", 0, lambda: _write_one(df, str(tmp_path / "s0"), "parquet")
+        spark, "t0", 0, lambda: _write_one(df, str(tmp_path / "s0"))
     )
     assert n == 1000
     n, _ = _run_with_timeout(
-        spark, "tneg", -1, lambda: _write_one(df, str(tmp_path / "s1"), "parquet")
+        spark, "tneg", -1, lambda: _write_one(df, str(tmp_path / "s1"))
     )
     assert n == 1000

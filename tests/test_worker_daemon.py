@@ -125,6 +125,13 @@ def test_get_spark_names_the_daemon(spark):
     )
 
 
+def test_ship_package_leaves_get_spark_sessions_alone(spark):
+    from otel_logger_spark.session import ship_package
+
+    ship_package(spark)
+    assert not hasattr(spark.sparkContext, "_otel_package_zip")
+
+
 def test_workers_import_the_package_from_any_cwd(tmp_path):
     """A driver that finds the package only through sys.path (no
     PYTHONPATH, cwd outside the repository) still runs the parse UDF:
@@ -156,3 +163,31 @@ def test_workers_import_the_package_from_any_cwd(tmp_path):
     assert json.loads(res.stdout.strip().splitlines()[-1]) == [
         ["boom", True], ["INFO plain line", False],
     ]
+
+
+def test_external_driver_session_imports_the_package_from_any_cwd(tmp_path):
+    """An external driver program's session (a plain builder, not get_spark)
+    loading __spark_entry__.py by file path from a cwd outside the
+    repository with PYTHONPATH unset: entry() ships the package to the
+    workers, so the parse UDF runs there and the flagship query returns
+    its 5 severity rows."""
+    script = textwrap.dedent(f"""
+        import importlib.util
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.builder.master("local[2]").getOrCreate()
+        spec = importlib.util.spec_from_file_location(
+            "__spark_entry__", {os.path.join(REPO, "__spark_entry__.py")!r}
+        )
+        entry = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(entry)
+        print(len(entry.entry(spark).collect()))
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout.strip().splitlines()[-1] == "5"

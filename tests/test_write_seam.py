@@ -1,7 +1,7 @@
 """Only ``operators/sinks.py`` and ``io.py`` chain a DataFrame ``.write``.
 
 ``operators/sinks.write_sink`` is the one sink write policy (overwrite,
-format, the snappy parquet codec, partitioning, writer options): the
+parquet with the snappy codec, partitioning, writer options): the
 batch sinks, the micro-batch sinks and the maintenance rewrites all write
 through it, and ``io.py`` is the table seam (``write_table``,
 ``write_bucketed``). This test AST-scans ``otel_logger_spark/`` and fails
