@@ -36,18 +36,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotate the list each round so no query goes more than one round
 # without driver verification.
 GATE_DEFERRED: list[str] = [
-    # Current rotation (the corpus-derived oracle generators read their
-    # input through graftdata.oracle_input, with byte-identical oracle
-    # texts; decode_media lost its unused PIL branch). The twelve gates
-    # whose oracle or builder code changed sit in the window: ann_ivf_topk,
-    # ann_ivf_quantized, semantic_dedup, corpus_cartography, dsir_select,
-    # lm_fluency, hygiene_manifest, bpe_merges, bpe_encode,
-    # bigram_fluency, image_near_dup and multimodal_decode. The four of
-    # them the last change deferred swap with four gates verified in the
-    # window two rounds running on code this change does not touch
-    # (doc_repetition, decontam_split, tfidf_terms, span_dedup). The full
-    # 79-gate set is re-verified against the sf0.01 DuckDB oracle with
-    # tools/check_correctness.py.
+    # Current rotation: median_gap's builder now aggregates with Spark's
+    # exact median (operators/rollups.median_gap_us, oracle text
+    # unchanged), so it sits in the window; it swaps with
+    # pivot_role_severity, verified in the window two rounds running on
+    # code this change does not touch. The full 79-gate set is re-verified
+    # against the sf0.01 DuckDB oracle with tools/check_correctness.py.
     "conversation_rollup",
     "window_turn_rollup",
     "top_k_noisy",
@@ -65,7 +59,7 @@ GATE_DEFERRED: list[str] = [
     "pack_shards",
     "doc_repetition",
     "decontam_split",
-    "median_gap",
+    "pivot_role_severity",
     "rollup_role_style",
     "embedding_topk",
     "embedding_near_dup",
@@ -87,10 +81,23 @@ def _gate_order(merged: dict) -> dict:
     return {**head, **{n: merged[n] for n in deferred}}
 
 
+def _shipped(build: Callable[[SparkSession, str], DataFrame]):
+    """``build`` behind session.ship_package, so a gate run alone in a
+    plain session finds the package in its Python workers as entry() does."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from otel_logger_spark.session import ship_package
+
+        ship_package(spark)
+        return build(spark, sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from otel_logger_spark.gates import GATES
 
-    return _gate_order({name: g.build for name, g in GATES.items()})
+    return _gate_order({name: _shipped(g.build) for name, g in GATES.items()})
 
 
 def oracle_sql() -> dict[str, str]:

@@ -135,47 +135,54 @@ class PipelineConfig:
 
     @classmethod
     def from_reference_args(cls, argv: list[str]) -> "PipelineConfig":
-        """Parse a reference-style flag list (subset of main.go:34-47)."""
+        """Parse a reference-style flag list (subset of main.go:34-47).
+        A value flag takes its value as the next token or after ``=``
+        (``--timeout=5s``, split on the first ``=``); a value flag with
+        no value raises ValueError. Unknown tokens are ignored."""
         cfg = cls()
-        i = 0
         fields_map = {
             "--timestamp-fields": "timestamp_fields",
             "--level-fields": "level_fields",
             "--message-fields": "message_fields",
         }
+        value_flags = {
+            "--json-prefix", "--continuation-pattern", "--batch-size",
+            "--flush-interval", "--timeout", *fields_map,
+        }
         lists: dict[str, list[str]] = {v: [] for v in fields_map.values()}
+        i = 0
         while i < len(argv):
             a = argv[i]
-            if a == "--json-prefix":
-                cfg.json_prefix = argv[i + 1]
-                i += 2
-            elif a in fields_map:
+            i += 1
+            if a == "--passthrough-stdout" or a == "--passthrough-stderr":
+                cfg.passthrough_raw_sink = True
+            flag, eq, v = a.partition("=")
+            if flag not in value_flags:
+                continue
+            if not eq:
+                if i == len(argv):
+                    raise ValueError(f"flag {flag} needs a value")
+                v = argv[i]
+                i += 1
+            if flag == "--json-prefix":
+                cfg.json_prefix = v
+            elif flag in fields_map:
                 # reference: --x-fields is repeatable, comma-splittable
-                lists[fields_map[a]].extend(
-                    s.strip() for s in argv[i + 1].split(",") if s.strip()
+                lists[fields_map[flag]].extend(
+                    s.strip() for s in v.split(",") if s.strip()
                 )
-                i += 2
-            elif a == "--continuation-pattern":
-                cfg.continuation_pattern = argv[i + 1]
-                i += 2
-            elif a == "--batch-size":
-                int(argv[i + 1])  # validated only (see table above)
-                i += 2
-            elif a == "--flush-interval":
-                go_duration_to_interval(argv[i + 1])  # validated only
-                i += 2
-            elif a == "--timeout":
+            elif flag == "--continuation-pattern":
+                cfg.continuation_pattern = v
+            elif flag == "--batch-size":
+                int(v)  # validated only (see table above)
+            elif flag == "--flush-interval":
+                go_duration_to_interval(v)  # validated only
+            else:  # --timeout
                 # reference semantics: a non-positive export timeout means
                 # NO deadline (the exporter's WithTimeout branch is skipped
                 # when <= 0) — so "--timeout 0" disables, never insta-kills
-                ms = go_duration_to_ms(argv[i + 1])
+                ms = go_duration_to_ms(v)
                 cfg.export_timeout_ms = None if ms <= 0 else ms
-                i += 2
-            elif a == "--passthrough-stdout" or a == "--passthrough-stderr":
-                cfg.passthrough_raw_sink = True
-                i += 1
-            else:
-                i += 1
         for attr, vals in lists.items():
             if vals:  # CLI overrides defaults wholesale (main.go:621-630)
                 setattr(cfg, attr, tuple(vals))

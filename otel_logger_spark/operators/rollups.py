@@ -106,23 +106,20 @@ def top_k_noisy(df: DataFrame, k: int = 10) -> DataFrame:
 
 
 def median_gap_us(df: DataFrame) -> DataFrame:
-    """Per-conversation MEDIAN inter-turn gap via a grouped-agg pandas UDF —
-    the §2.9 grouped-aggregate UDF surface ("custom conversation metrics not
-    expressible in builtins"; exact medians aren't a builtin aggregate,
-    percentile_approx is approximate). Gap computed JVM-side with a window;
-    only the final aggregate crosses into Python (Arrow-batched per group).
+    """Per-conversation MEDIAN inter-turn gap in microseconds (floored) and
+    turn count. Spark's ``median`` is exact (linear interpolation, as
+    DuckDB's quantile_cont in the oracle), so the whole rollup is one
+    builtin groupBy; the gap comes from a window over (conv_id, turn_idx).
     """
-    from otel_logger_spark.functions.aggudf import p50_long as p50
-
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     ts = F.col("ts").cast("timestamp")
     gaps = df.withColumn(
         "_gap_us", F.unix_micros(ts) - F.unix_micros(F.lag(ts).over(w))
     )
-    # grouped-agg pandas UDFs can't mix with builtin aggregates in one agg
-    med = gaps.groupBy("conv_id").agg(p50(F.col("_gap_us")).alias("p50_gap_us"))
-    counts = df.groupBy("conv_id").agg(F.count("*").alias("n_turns"))
-    return med.join(counts, "conv_id")
+    return gaps.groupBy("conv_id").agg(
+        F.floor(F.median("_gap_us")).cast("long").alias("p50_gap_us"),
+        F.count("*").alias("n_turns"),
+    )
 
 
 def flush_window_counts(df: DataFrame, interval: str = "5 seconds") -> DataFrame:

@@ -117,20 +117,17 @@ def zorder_parquet_dir(
     cols: list[str],
     bits: int = 16,
     target_file_bytes: int = 512 * 1024 * 1024,
-    ranges: dict[str, tuple[int, int]] | None = None,
 ) -> dict:
     """Rewrite a parquet directory in Z-order over ``cols``:
     range-partition by z (so files tile the curve) and sort within
     partitions (so row groups tile it too), then verify and swap. Every
     safety property of compaction holds; the layout change is the only
-    difference. ``ranges`` (column -> (min, max)) skips the range
-    measurement for columns whose bounds the caller already has.
-    Returns the rewrite report."""
+    difference. Returns the rewrite report."""
     # fail on an over-wide curve before any job or tmp dir is created
     zvalue_expr([F.lit(0).cast("long")] * len(cols), bits)
 
     def transform(df: DataFrame, n_target: int) -> DataFrame:
-        z = with_zvalue(df, cols, bits, ranges=ranges)
+        z = with_zvalue(df, cols, bits)
         return (
             z.repartitionByRange(n_target, "_z")
             .sortWithinPartitions("_z")

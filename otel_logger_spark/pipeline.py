@@ -61,8 +61,10 @@ def build_parsed(
 
     ``config`` (config.PipelineConfig) carries the reference CLI surface
     (multiline coalescing, field mappings, prefix/continuation regexes)
-    and takes precedence when given; ``repartition`` applies only with
-    config=None."""
+    and its own ``repartition``; passing ``repartition`` as well raises
+    ValueError rather than dropping one of them."""
+    if config is not None and repartition is not None:
+        raise ValueError("pass repartition through config.repartition, not both")
     cfg = config or PipelineConfig(repartition=repartition)
     df = transcripts
     if cfg.repartition:

@@ -84,22 +84,19 @@ def analytics_sinks(
     ts_col: str = "ts",
     group_cols: tuple[str, ...] = ("role",),
     bucket_seconds: int = 3600,
-    cms_key_col: str | None = "conv_id",
     cms_d: int = 4,
     cms_w: int = 512,
 ) -> dict[str, DataFrame]:
     """One micro-batch's volume partials over its non-empty turns. The CMS
-    partial is the per-batch sketch itself (<= d*w cells): cms_merge's
-    cell-wise-sum law makes the union of batch sketches EXACTLY the
-    sketch of the union, whatever the micro-batch boundaries were."""
+    partial is the per-batch sketch of ``conv_col`` itself (<= d*w cells):
+    cms_merge's cell-wise-sum law makes the union of batch sketches EXACTLY
+    the sketch of the union, whatever the micro-batch boundaries were."""
     src = batch_df.filter(F.length(text_col) > 0)
-    sinks = {
+    return {
         TEMPLATE_SINK: template_partials(src, text_col, conv_col),
         RATE_SINK: rate_partials(src, ts_col, group_cols, bucket_seconds),
+        CMS_SINK: cms_sketch(src, conv_col, cms_d, cms_w),
     }
-    if cms_key_col:
-        sinks[CMS_SINK] = cms_sketch(src, cms_key_col, cms_d, cms_w)
-    return sinks
 
 
 def read_cms_sketch(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -176,7 +173,6 @@ def contam_sinks(
     id_col: str = "doc_id",
     text_col: str = "text",
     group_col: str = "source",
-    use_hash: bool = False,
 ) -> dict[str, DataFrame]:
     """One micro-batch's per-doc contamination partial (see above: a doc
     lives wholly in one micro-batch, so the per-doc rows union losslessly)."""
@@ -184,7 +180,7 @@ def contam_sinks(
 
     return {
         CONTAM_SINK: contamination_per_doc(
-            batch_df, bench, n, id_col, text_col, group_col, use_hash
+            batch_df, bench, n, id_col, text_col, group_col
         )
     }
 

@@ -40,14 +40,13 @@ def dedup_stream_by_content(
     text_col: str = "text",
     ts_col: str = "ts",
     horizon: str = "30 seconds",
-    hash_col: str = "_content_sha",
 ) -> DataFrame:
     """Content-identical dedup at ingest: state keyed by sha2-256 of the
     text (computed JVM-side), never the raw string — bounded state bytes
     per key whatever the document length. Emits the first-arriving copy."""
-    hashed = stream.withColumn(hash_col, F.sha2(F.col(text_col), 256))
+    hashed = stream.withColumn("_content_sha", F.sha2(F.col(text_col), 256))
     return (
         hashed.withWatermark(ts_col, horizon)
-        .dropDuplicatesWithinWatermark([hash_col])
-        .drop(hash_col)
+        .dropDuplicatesWithinWatermark(["_content_sha"])
+        .drop("_content_sha")
     )

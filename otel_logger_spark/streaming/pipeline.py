@@ -192,8 +192,6 @@ def run_streaming_pipeline(
     coalesce: bool = False,
     idle_flush_ms: int = 10_000,
     max_files_per_trigger: int | None = None,
-    dedup: str | None = None,
-    dedup_horizon: str = "30 seconds",
 ):
     """The streaming pipeline: the batch pipeline's routed_sinks over the
     transcript stream, started by start_batch_sinks (same trigger
@@ -203,29 +201,10 @@ def run_streaming_pipeline(
     (entries flush on close or after ``idle_flush_ms`` of conversation
     idleness — the ForceFlush analogue).
 
-    ``dedup`` composes the ingest-time redelivery guard (streaming/dedup.py)
-    in FRONT of parse/coalesce, so duplicates die before any downstream
-    state sees them:
-    - ``"exact"``: same (conv_id, turn_idx) redelivered within
-      ``dedup_horizon`` is dropped — at-least-once upstream becomes
-      exactly-once rows in all four sinks;
-    - ``"content"``: state keyed by sha2(text) — corpus-ingest semantics
-      (identical text dropped even under fresh ids)."""
+    An ingest-time redelivery guard (streaming/dedup.py) composes in front
+    of the same stages: ``start_batch_sinks(build_streaming_routed(
+    dedup_stream_exact(read_stream(...))), out, ckpt, routed_sinks)``."""
     stream = read_stream(spark, input_dir, max_files_per_trigger=max_files_per_trigger)
-    if dedup == "exact":
-        from otel_logger_spark.streaming.dedup import dedup_stream_exact
-
-        stream = dedup_stream_exact(
-            stream, ("conv_id", "turn_idx"), ts_col="ts", horizon=dedup_horizon
-        )
-    elif dedup == "content":
-        from otel_logger_spark.streaming.dedup import dedup_stream_by_content
-
-        stream = dedup_stream_by_content(
-            stream, text_col="text", ts_col="ts", horizon=dedup_horizon
-        )
-    elif dedup is not None:
-        raise ValueError(f"dedup must be None, 'exact' or 'content': {dedup!r}")
     routed = build_streaming_routed(
         stream,
         coalesce=coalesce,

@@ -180,6 +180,28 @@ def test_full_run_and_resume(spark, transcripts, tmp_path):
     }
 
 
+def test_run_pipeline_applies_reference_config(spark, transcripts, tmp_path):
+    """run_pipeline(config=) carries the reference flags into the sink
+    writer: --passthrough-stdout commits the raw tee (one row per logs row)
+    and --timeout=1h arms a deadline every sink meets."""
+    src = str(tmp_path / "in.parquet")
+    transcripts.limit(500).toPandas().astype({"ts": "datetime64[us]"}).to_parquet(
+        src, index=False
+    )
+    cfg = PipelineConfig.from_reference_args(["--passthrough-stdout", "--timeout=1h"])
+    assert cfg.export_timeout_ms == 3_600_000
+    m = run_pipeline(spark, src, str(tmp_path / "out"), run_id="cfg", config=cfg)
+    assert m["status"] == "committed"
+    sinks = m["sinks"]
+    assert sinks["logs"]["n_rows"] > 0
+    assert sinks["raw"]["n_rows"] == sinks["logs"]["n_rows"]
+
+
+def test_build_parsed_rejects_repartition_beside_config(transcripts):
+    with pytest.raises(ValueError, match="repartition"):
+        build_parsed(transcripts, repartition=4, config=PipelineConfig())
+
+
 def test_parse_udf_matches_pure_function(spark, transcripts):
     """The Arrow-batched UDF must agree with the pure parse_entry on every
     coalesced entry (plumbing check: MapType attrs, ts fallback, nulls)."""

@@ -86,6 +86,30 @@ def test_config_reference_args():
     for bad in (["--batch-size", "x"], ["--flush-interval", "-1s"]):
         with pytest.raises(ValueError):
             PipelineConfig.from_reference_args(bad)
+    # --flag=value (split on the first "=") means what --flag value means
+    eq = PipelineConfig.from_reference_args(
+        [
+            r"--json-prefix=^P=\s*",
+            "--timestamp-fields=created_at,event_time",
+            "--level-fields=severity",
+            "--level-fields", "priority",
+            r"--continuation-pattern=^\.\.\.",
+            "--batch-size=500",
+            "--flush-interval=1s",
+            "--unknown=1",
+        ]
+    )
+    assert eq.json_prefix == r"^P=\s*"
+    assert eq.timestamp_fields == ("created_at", "event_time")
+    assert eq.level_fields == ("severity", "priority")
+    assert eq.continuation_pattern == r"^\.\.\."
+    for bad in (["--batch-size=x"], ["--flush-interval=-1s"]):
+        with pytest.raises(ValueError):
+            PipelineConfig.from_reference_args(bad)
+    # a value flag at the end of the list has no value: named, not IndexError
+    for flag in ("--json-prefix", "--level-fields", "--timeout"):
+        with pytest.raises(ValueError, match=flag):
+            PipelineConfig.from_reference_args(["--passthrough-stdout", flag])
 
 
 def test_config_go_durations():
@@ -192,6 +216,9 @@ def test_timeout_flag_mapping():
     for spelling in ("0", "-5s", "-1ns"):
         cfg = PipelineConfig.from_reference_args(["--timeout", spelling])
         assert cfg.export_timeout_ms is None, spelling
+        cfg = PipelineConfig.from_reference_args([f"--timeout={spelling}"])
+        assert cfg.export_timeout_ms is None, spelling
+    assert PipelineConfig.from_reference_args(["--timeout=5s"]).export_timeout_ms == 5000
 
 
 def test_timeout_zero_runs_sink_to_completion(spark, tmp_path):

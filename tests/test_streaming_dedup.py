@@ -90,8 +90,9 @@ def test_stream_dedup_by_content_keys_on_digest(spark, tmp_path):
 
 
 def test_streaming_pipeline_with_dedup_four_sink_parity(spark, tmp_path):
-    """COMPOSED mode: run_streaming_pipeline(dedup='exact') under
-    redelivery (a later file re-sends a whole earlier file) must produce
+    """COMPOSED: the exact dedup guard in front of the streaming pipeline's
+    stages (read_stream -> dedup_stream_exact -> build_streaming_routed ->
+    routed_sinks) under redelivery (a later file re-sends a whole earlier file) must produce
     EXACTLY the batch pipeline's four sinks on the clean input — logs /
     error / tool_call row sets and the finalized conversation_metrics
     rollup. At-least-once upstream becomes exactly-once sink rows."""
@@ -103,9 +104,12 @@ def test_streaming_pipeline_with_dedup_four_sink_parity(spark, tmp_path):
     from otel_logger_spark.operators.enrich import enrich_severity, enrich_tool
     from otel_logger_spark.operators.rollups import conversation_metrics
     from otel_logger_spark.operators.route import with_routing
+    from otel_logger_spark.operators.sinks import routed_sinks
     from otel_logger_spark.streaming.pipeline import (
+        build_streaming_routed,
         read_conversation_metrics,
-        run_streaming_pipeline,
+        read_stream,
+        start_batch_sinks,
     )
     from otel_logger_spark.synth import synthesize_pandas
 
@@ -125,15 +129,13 @@ def test_streaming_pipeline_with_dedup_four_sink_parity(spark, tmp_path):
     )
 
     out = str(tmp_path / "dout")
-    q = run_streaming_pipeline(
-        spark,
-        in_dir,
+    # max_files_per_trigger=1: the redelivery lands in a LATER batch
+    stream = read_stream(spark, in_dir, max_files_per_trigger=1)
+    q = start_batch_sinks(
+        build_streaming_routed(dedup_stream_exact(stream, horizon="365 days")),
         out,
         str(tmp_path / "dckpt"),
-        available_now=True,
-        max_files_per_trigger=1,  # the redelivery lands in a LATER batch
-        dedup="exact",
-        dedup_horizon="365 days",
+        routed_sinks,
     )
     q.awaitTermination(300)
 

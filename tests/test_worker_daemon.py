@@ -14,6 +14,7 @@ import zipimport
 from otel_logger_spark import worker_daemon
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF = "/root/testdata/sf0.001"  # the gates' smallest data directory
 
 
 def _write_zip(path, value):
@@ -170,24 +171,29 @@ def test_external_driver_session_imports_the_package_from_any_cwd(tmp_path):
     loading __spark_entry__.py by file path from a cwd outside the
     repository with PYTHONPATH unset: entry() ships the package to the
     workers, so the parse UDF runs there and the flagship query returns
-    its 5 severity rows."""
-    script = textwrap.dedent(f"""
-        import importlib.util
-        from pyspark.sql import SparkSession
+    its 5 severity rows. A queries() builder run alone in a fresh session
+    ships it too."""
+    for call in (
+        "entry.entry(spark)",
+        f"entry.queries()['parse_severity_counts'](spark, {SF!r})",
+    ):
+        script = textwrap.dedent(f"""
+            import importlib.util
+            from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[2]").getOrCreate()
-        spec = importlib.util.spec_from_file_location(
-            "__spark_entry__", {os.path.join(REPO, "__spark_entry__.py")!r}
+            spark = SparkSession.builder.master("local[2]").getOrCreate()
+            spec = importlib.util.spec_from_file_location(
+                "__spark_entry__", {os.path.join(REPO, "__spark_entry__.py")!r}
+            )
+            entry = importlib.util.module_from_spec(spec)
+            spec.loader.exec_module(entry)
+            print(len({call}.collect()))
+            spark.stop()
+        """)
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        res = subprocess.run(
+            [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+            capture_output=True, text=True, timeout=300,
         )
-        entry = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(entry)
-        print(len(entry.entry(spark).collect()))
-        spark.stop()
-    """)
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    res = subprocess.run(
-        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
-        capture_output=True, text=True, timeout=300,
-    )
-    assert res.returncode == 0, res.stderr[-3000:]
-    assert res.stdout.strip().splitlines()[-1] == "5"
+        assert res.returncode == 0, (call, res.stderr[-3000:])
+        assert res.stdout.strip().splitlines()[-1] == "5", call
