@@ -40,8 +40,7 @@ def main(argv=None):
     args, passthrough = ap.parse_known_args(argv)
     cfg = PipelineConfig.from_reference_args(passthrough)
 
-    from otel_logger_spark.operators.sinks import write_routed_sinks
-    from otel_logger_spark.pipeline import build_parsed
+    from otel_logger_spark.pipeline import run_pipeline
     from otel_logger_spark.session import get_spark
 
     spark = get_spark("otel-logger-cli", cores=args.cores)
@@ -53,14 +52,7 @@ def main(argv=None):
     else:
         transcripts = spark.read.parquet(args.input)
 
-    manifest = write_routed_sinks(
-        build_parsed(transcripts, config=cfg),
-        None,
-        args.out,
-        run_id=args.run_id,
-        passthrough_raw=cfg.passthrough_raw_sink,
-        export_timeout_ms=cfg.export_timeout_ms,
-    )
+    manifest = run_pipeline(spark, transcripts, args.out, run_id=args.run_id, config=cfg)
     print(json.dumps({k: v["n_rows"] for k, v in manifest["sinks"].items()}))
     spark.stop()
     return 0

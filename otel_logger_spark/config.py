@@ -111,6 +111,19 @@ def go_duration_to_interval(s: str) -> str:
     return f"{int(round(total_ms))} milliseconds"
 
 
+# Go strconv.ParseBool spellings, the values a bool flag takes after "="
+_GO_BOOLS = {
+    **dict.fromkeys(("1", "t", "T", "TRUE", "true", "True"), True),
+    **dict.fromkeys(("0", "f", "F", "FALSE", "false", "False"), False),
+}
+
+
+def _parse_go_bool(flag: str, v: str) -> bool:
+    if v not in _GO_BOOLS:
+        raise ValueError(f"flag {flag} takes a boolean, got {v!r}")
+    return _GO_BOOLS[v]
+
+
 @dataclass
 class PipelineConfig:
     json_prefix: str | None = None  # None -> default prefix regex (main.go:148)
@@ -138,7 +151,11 @@ class PipelineConfig:
         """Parse a reference-style flag list (subset of main.go:34-47).
         A value flag takes its value as the next token or after ``=``
         (``--timeout=5s``, split on the first ``=``); a value flag with
-        no value raises ValueError. Unknown tokens are ignored."""
+        no value raises ValueError. A passthrough flag is on when bare
+        and otherwise takes a Go strconv.ParseBool value after ``=``
+        (``--passthrough-stdout=false``; the last spelling of a flag
+        wins); any other value raises ValueError. Unknown tokens are
+        ignored."""
         cfg = cls()
         fields_map = {
             "--timestamp-fields": "timestamp_fields",
@@ -150,13 +167,15 @@ class PipelineConfig:
             "--flush-interval", "--timeout", *fields_map,
         }
         lists: dict[str, list[str]] = {v: [] for v in fields_map.values()}
+        passthrough = {"--passthrough-stdout": False, "--passthrough-stderr": False}
         i = 0
         while i < len(argv):
             a = argv[i]
             i += 1
-            if a == "--passthrough-stdout" or a == "--passthrough-stderr":
-                cfg.passthrough_raw_sink = True
             flag, eq, v = a.partition("=")
+            if flag in passthrough:
+                passthrough[flag] = _parse_go_bool(flag, v) if eq else True
+                continue
             if flag not in value_flags:
                 continue
             if not eq:
@@ -186,4 +205,5 @@ class PipelineConfig:
         for attr, vals in lists.items():
             if vals:  # CLI overrides defaults wholesale (main.go:621-630)
                 setattr(cfg, attr, tuple(vals))
+        cfg.passthrough_raw_sink = any(passthrough.values())
         return cfg

@@ -1,10 +1,11 @@
 """IO seam: Iceberg when the runtime jar is on the classpath, parquet
 otherwise (this sandbox has no Iceberg jar — SURVEY.md §7 phase 0).
 
-The batch pipeline reads its input through read_table (a path or a
-catalog table name); write_table and write_bucketed persist tables by
-path or name. Sinks write through operators/sinks.write_sink and the
-maintenance operators read their directories directly. At cluster scale
+run_pipeline reads a path or catalog table name through read_table (the
+CLI hands it a frame it read itself); write_table and write_bucketed
+persist tables by path or name. Sinks write through
+operators/sinks.write_sink and the maintenance operators read their
+directories directly. At cluster scale
 the Iceberg path gets partition pruning on bucket(conv_id)/day(ts) for
 free; the parquet path relies on directory partitioning.
 """

@@ -10,18 +10,22 @@ the shared rewrite-verify-swap protocol (operators/compact.py): a crash
 mid-purge leaves a recoverable state, a concurrent writer aborts the
 swap, and the row delta is asserted, never assumed:
 
-1. count the matches (one semi-join aggregate per directory);
+1. count the matches (one broadcast-semi-join aggregate per directory);
 2. rewrite through the left-anti join into tmp;
 3. footer-verify ``tmp == source - matched`` (a rewrite that dropped
    MORE or FEWER rows than step 1 counted aborts with the source
    untouched — catches tombstone-set drift between count and rewrite);
 4. fingerprint re-check, then atomic swap.
 
-Scale shape: Spark picks the join by the tombstone set's size (with AQE,
-also at runtime) — a key list small enough to broadcast is broadcast, a
-pathological recall set wider than that is planned as a shuffle join;
-each directory is one count job + one rewrite job, and partitioned sinks
-purge per-partition so the blast radius of any abort is one partition.
+Scale shape: the tombstone set always broadcasts (it is a key list —
+millions of 8-byte ids fit comfortably in executor memory). The hint is
+not left to Spark's size-based choice: ``maintenance forget`` reads its
+keys from parquet, sized by file bytes against the 10 MB default
+threshold, and a recall set past that would be planned as a sort-merge
+join that shuffles every sink directory for both the count and the
+rewrite. Each directory is one count job + one rewrite job, and
+partitioned sinks purge per-partition so the blast radius of any abort
+is one partition.
 
 Reference lineage: main.go forwards and never mutates history; delete
 propagation is part of the training-data superset, not reference parity.
@@ -32,6 +36,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from otel_logger_spark.fsio import HadoopFS
 from otel_logger_spark.operators.compact import rewrite_verify_swap
@@ -48,7 +53,7 @@ def forget_parquet_dir(
     directory. Returns the swap report plus ``matched`` (the pre-counted
     rows scheduled for removal; the verify pins rows_removed == matched).
     A zero-match directory is left byte-identical (no rewrite)."""
-    keyset = keys.select(key_col).distinct()
+    keyset = F.broadcast(keys.select(key_col).distinct())
     src = spark.read.parquet(path)
     if key_col not in src.columns:
         raise ValueError(f"{path} has no column {key_col!r}")

@@ -80,25 +80,29 @@ def build_parsed(
 
 def run_pipeline(
     spark: SparkSession,
-    input_path: str,
+    source: str | DataFrame,
     out_dir: str,
     run_id: str = "run-0",
-    config=None,
+    config: PipelineConfig | None = None,
 ) -> dict:
     """Execute the full pipeline and commit all sinks; returns the lineage
     manifest (per-sink row counts — the correctness gate's numbers).
+    ``source`` is a parquet path or catalog table name (io.read_table), or
+    a transcripts frame already read (the CLI's --text-logs input).
     ``config`` (config.PipelineConfig) carries the reference CLI surface,
-    including --timeout -> per-sink export deadline (A3)."""
+    including --timeout -> per-sink export deadline (A3) and
+    --passthrough-stdout/--passthrough-stderr -> the raw tee."""
     from otel_logger_spark.io import read_table
 
-    transcripts = read_table(spark, input_path)
+    cfg = config or PipelineConfig()
+    transcripts = read_table(spark, source) if isinstance(source, str) else source
     return write_routed_sinks(
-        build_parsed(transcripts, config=config),
+        build_parsed(transcripts, config=cfg),
         None,
         out_dir,
         run_id=run_id,
-        passthrough_raw=bool(config and config.passthrough_raw_sink),
-        export_timeout_ms=config.export_timeout_ms if config else None,
+        passthrough_raw=cfg.passthrough_raw_sink,
+        export_timeout_ms=cfg.export_timeout_ms,
     )
 
 

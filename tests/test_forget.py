@@ -86,3 +86,36 @@ def test_missing_key_column_raises(spark, tmp_path):
     keys = spark.createDataFrame([(1,)], "user_id long")
     with pytest.raises(ValueError, match="no column"):
         forget_parquet_dir(spark, p, keys, "user_id")
+
+
+def test_parquet_keys_broadcast_past_size_threshold(spark, tmp_path, monkeypatch):
+    """`maintenance forget` reads its tombstone set from parquet, which
+    Spark sizes by file bytes; a recall set past the size-based broadcast
+    threshold must still broadcast rather than plan a sort-merge join
+    that shuffles the sink. Switching the threshold off stands in for a
+    keys file larger than it."""
+    p = str(tmp_path / "sinkb")
+    _write(spark, p, [(i, "x") for i in range(40)])
+    kp = str(tmp_path / "keys")
+    _keys(spark, [1, 2, 3]).write.parquet(kp)
+    plans = []
+    df_cls = type(spark.range(1))
+    count = df_cls.count
+
+    def recording_count(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return count(df)
+
+    monkeypatch.setattr(df_cls, "count", recording_count)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        rep = forget_sinks(
+            spark, str(tmp_path), ["sinkb"], spark.read.parquet(kp), "conv_id"
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert rep["sinkb"]["rows_removed"] == 3
+    joins = [pl for pl in plans if "Join" in pl]
+    assert joins
+    assert all("BroadcastHashJoin" in pl and "SortMergeJoin" not in pl for pl in joins)

@@ -110,6 +110,22 @@ def test_config_reference_args():
     for flag in ("--json-prefix", "--level-fields", "--timeout"):
         with pytest.raises(ValueError, match=flag):
             PipelineConfig.from_reference_args(["--passthrough-stdout", flag])
+    # a bool flag takes a Go ParseBool value after "="; the last spelling
+    # of a flag wins, and either passthrough flag turns the raw tee on
+    def raw(*argv):
+        return PipelineConfig.from_reference_args(list(argv)).passthrough_raw_sink
+
+    for on in ("true", "True", "TRUE", "t", "T", "1"):
+        assert raw(f"--passthrough-stdout={on}")
+        assert raw(f"--passthrough-stderr={on}")
+    for off in ("false", "False", "FALSE", "f", "F", "0"):
+        assert not raw(f"--passthrough-stdout={off}")
+    assert not raw("--passthrough-stdout", "--passthrough-stdout=false")
+    assert raw("--passthrough-stdout=false", "--passthrough-stderr")
+    assert not raw()
+    for bad in ("yes", "", "2"):
+        with pytest.raises(ValueError, match="--passthrough-stderr"):
+            raw(f"--passthrough-stderr={bad}")
 
 
 def test_config_go_durations():
